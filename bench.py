@@ -1,15 +1,25 @@
 """Benchmark harness — the tpcds_bench.rs equivalent (SURVEY.md §2A-A21).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS], N iterations each (reference default 3,
-src/bin/tpcds_bench.rs:277-279; we use best-of to factor out JIT/session
+    python bench.py [QUERY ...]
+
+Runs the named registry queries (default: the 75 HEADLINE queries) at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on local[$SPARK_GRAFT_CPUS],
+$BENCH_ITERATIONS times each (default 3, the reference's default,
+src/bin/tpcds_bench.rs:277-279; we report best-of to factor out JIT/session
 warmup like criterion's sampling does), and prints ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": ...}
 
+An unknown query name exits non-zero before anything runs. A subset runs
+through the same path as the full set.
+
 Query timing = full execution to collect() (driver-side materialization,
-matching the reference's collect at src/bin/tpcds_bench.rs:543-574).
+matching the reference's collect at src/bin/tpcds_bench.rs:543-574). Each
+iteration runs as Spark job group "<query>#<iteration>". A query that raises
+is recorded and skipped, and the run goes on (src/bin/tpcds_bench.rs:459-476):
+it is left out of `queries`, `value` and `n_queries`, printed to stderr, and
+listed under `failures` in bench_detail.json.
 """
 
 from __future__ import annotations
@@ -17,10 +27,12 @@ from __future__ import annotations
 import glob
 import json
 import os
+import platform
 import re
 import statistics
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,17 +67,6 @@ _SHUF_KEYS = 1_000_000
 # (session floors 1.66-1.95; the shuffle path has ~2x the CPU probe's
 # session-to-session noise, hence best-of-5 where the CPU leg uses 3)
 SHUF_REFERENCE = 1.80
-
-# Judge-adjudicated drift for baselines whose recording the probes missed:
-# BENCH_r07's driver box ran ~1.33x uniformly loaded BEFORE any probe
-# existed (VERDICT r07: judge idle re-run geomean 1.05 with 0 flags vs the
-# recorded 1.332 with 4); BENCH_r08's ran ~1.29x loaded on axes the
-# then-CPU-only probe was blind to (VERDICT r08: judge idle re-run geomean
-# 1.113 vs the recorded 1.441 — ratio 1.295; probe read 0.931). Listing a
-# baseline here makes its committed `<stem>_clean.json` idle-box sidecar
-# substitute per-query (preferred), else divides by the factor.
-_KNOWN_BASELINE_DRIFT = {"BENCH_r07.json": 1.332, "BENCH_r08.json": 1.295}
-
 
 def _calibrate(spark) -> float:
     """Best-of-3 seconds for the fixed CPU probe (sum of two modulos over a
@@ -206,11 +207,71 @@ HEADLINE = [
 ]
 
 
+def time_queries(spark, names, sf_dir, iters):
+    """Time each query in `names` `iters` times to collect().
+
+    Inputs are pre-materialized outside the timed region. Every iteration
+    runs as Spark job group ``f"{name}#{i}"``, so the status tracker and the
+    event log attribute its jobs to it. A query that raises is recorded as
+    ``{"query", "iteration", "error"}`` and dropped, and the next query runs.
+
+    Returns ``(seconds, rows, failures)``: per-iteration seconds and row
+    counts for every query that finished, keyed by name, and the failures.
+    """
+    from datafusion_datasource_orc_spark.operators import QUERIES
+    from datafusion_datasource_orc_spark.operators.tpcds import _register_tpcds_views
+    from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
+
+    # The reference's data-prep step (scripts/convert_tpcds_to_orc.py) is
+    # untimed, and it materializes all 24 TPC-DS tables before benchmarking:
+    # the first query's cold time measures the query, not one-time writes.
+    for t in ("region", "part", "lineitem", "documents"):
+        orc_dir_for(spark, sf_dir, t)
+    _register_tpcds_views(spark, sf_dir)
+
+    sc = spark.sparkContext
+    seconds: dict[str, list[float]] = {}
+    rows: dict[str, list[int]] = {}
+    failures: list[dict[str, object]] = []
+    try:
+        for name in names:
+            times: list[float] = []
+            counts: list[int] = []
+            try:
+                for i in range(iters):
+                    sc.setJobGroup(f"{name}#{i}", name)
+                    t0 = time.perf_counter()
+                    counts.append(len(QUERIES[name](spark, sf_dir).collect()))
+                    times.append(round(time.perf_counter() - t0, 4))
+            except Exception as exc:
+                error = f"{type(exc).__name__}: {exc}"
+                failures.append({"query": name, "iteration": i, "error": error})
+                print(f"# {name}: FAILED at iteration {i}", file=sys.stderr)
+                traceback.print_exc()
+                continue
+            seconds[name] = times
+            rows[name] = counts
+            print(
+                f"# {name}: {min(times):.3f}s rows={counts[-1]} iters={times}",
+                file=sys.stderr,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return seconds, rows, failures
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from datafusion_datasource_orc_spark.session import get_spark
+    import pyspark
+
     from datafusion_datasource_orc_spark.operators import QUERIES
-    from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
+    from datafusion_datasource_orc_spark.session import get_spark
+
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
 
     spark = get_spark(app_name="bench")
     # shared identifier stamped into BOTH the stdout JSON line and
@@ -219,36 +280,14 @@ def main() -> None:
     # uncommitted) run can never masquerade as the committed baseline's
     run_id = f"{int(time.time())}-{os.getpid()}"
 
-    # Pre-materialize ORC tables outside the timed region (the reference's
-    # data-prep step, scripts/convert_tpcds_to_orc.py, is likewise untimed).
-    for t in ("region", "part", "lineitem", "documents"):
-        orc_dir_for(spark, sf_dir, t)
-    # Same for the derived TPC-DS star schema: the reference materializes all
-    # 24 tables before benchmarking, so the first tpcds query's cold time
-    # should measure the query, not the one-time table writes.
-    from datafusion_datasource_orc_spark.operators.tpcds import _register_tpcds_views
-
-    _register_tpcds_views(spark, sf_dir)
-
     cal_start = _calibrate(spark)
     shuf_start = _calibrate_shuffle(spark)
 
-    results: dict[str, float] = {}
-    iterations: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = QUERIES[name]
-        times: list[float] = []
-        rows = -1
-        for _ in range(ITERATIONS):
-            t0 = time.perf_counter()
-            rows = len(fn(spark, sf_dir).collect())
-            times.append(round(time.perf_counter() - t0, 4))
-        # headline value stays best-of-N (absorbs codegen warm-up), but every
-        # iteration is recorded so host-load spikes are separable from real
-        # regressions when BENCH artifacts are compared across rounds
-        results[name] = round(min(times), 3)  # 3dp: stdout-line budget
-        iterations[name] = times
-        print(f"# {name}: {min(times):.3f}s rows={rows} iters={times}", file=sys.stderr)
+    iterations, rows, failures = time_queries(spark, names, sf_dir, ITERATIONS)
+    # headline value stays best-of-N (absorbs codegen warm-up), but every
+    # iteration is recorded so host-load spikes are separable from real
+    # regressions when BENCH artifacts are compared (3dp: stdout-line budget)
+    results = {n: round(min(its), 3) for n, its in iterations.items()}
 
     cal_end = _calibrate(spark)
     shuf_end = _calibrate_shuffle(spark)
@@ -363,41 +402,10 @@ def main() -> None:
                                 prev_q.setdefault(n, v)
                     except (OSError, ValueError):
                         pass
-                    # baseline's own recorded calibration drift (runs since
-                    # r08 carry one); pre-calibration artifacts fall back to
-                    # the judge-adjudicated table, else assumed idle
-                    prev_cal = parsed.get("calibration") or {}
-                    # explicit None checks, not `or`-chaining: a recorded
-                    # drift of exactly 0.0 is data, not absence
-                    prev_drift = float(
-                        next(
-                            v
-                            for v in (
-                                prev_cal.get("drift"),
-                                parsed.get("drift"),  # r10+ slim stdout shape
-                                _KNOWN_BASELINE_DRIFT.get(baseline_name, 1.0),
-                            )
-                            if v is not None
-                        )
-                    )
-                    # a committed `<stem>_clean.json` sidecar (an idle-box
-                    # re-run of the same workload) overrides a known-drifted
-                    # artifact: per-query CLEAN times beat a uniform drift
-                    # divisor, which amplifies per-query noise (measured:
-                    # raw geomean 0.906 became 1.329 normalized, 5 false
-                    # flags, when r07's 1.332x was applied per-query)
-                    clean_path = path[: -len(".json")] + "_clean.json"
-                    if baseline_name in _KNOWN_BASELINE_DRIFT and os.path.exists(
-                        clean_path
-                    ):
-                        with open(clean_path) as f:
-                            clean = json.load(f)
-                        if str(clean.get("sf")) == str(sf_val) and clean.get(
-                            "queries"
-                        ):
-                            prev_q = clean["queries"]
-                            prev_drift = 1.0
-                            baseline_name = os.path.basename(clean_path)
+                    # the baseline's recorded drift (every artifact since
+                    # r10 carries one); an exact 0.0 is data, not absence
+                    drift = parsed.get("drift")
+                    prev_drift = 1.0 if drift is None else float(drift)
                     break
             common = sorted(set(prev_q) & set(results))
             ratios = {
@@ -496,6 +504,14 @@ def main() -> None:
                 "regression_ratios_vs_prev_raw": ratios,
                 "regression_ratios_vs_prev_normalized": norm_ratios,
                 "regression_summary": regression,
+                "failures": failures,
+                "context": {
+                    "nproc": os.cpu_count(),
+                    "pyspark_version": pyspark.__version__,
+                    "python_version": platform.python_version(),
+                    "sf_dir": sf_dir,
+                    "rows": {n: counts[-1] for n, counts in rows.items()},
+                },
             },
             f,
             indent=1,
