@@ -1575,15 +1575,20 @@ def kmeans_train(
     # bought nothing but an extra materialized corpus-sized RDD copy per
     # iteration. Measured A/B at sf0.1 (5 warm noop iters each, same
     # session conditions): a WASH locally (2.07/2.28 s → 2.05/2.24 s best
-    # for embedding_kmeans / simsearch_ivf_kmeans) — lazy checkpoints
-    # piggyback on the consuming job, they are not separate barriers — so
-    # the change is an at-scale memory-footprint trim, not a speedup. The
-    # committed per-iteration profile (KM_ITERS=1/2/3 best-of-4:
-    # 0.87/1.40/1.93 s) puts the marginal iteration at ~0.53 s at sf0.1:
-    # ~5 AQE stage materializations x fixed scheduling/codegen latency on
-    # a 5k-row corpus — the floor is stage-count latency at gate scale
-    # and genuine E/M-step compute at 100 TB; the iteration count is the
-    # algorithm, so this is the documented stop point (guide §1.3).
+    # for embedding_kmeans / simsearch_ivf_kmeans), so the change is an
+    # at-scale memory-footprint trim, not a speedup. A lazy checkpoint is
+    # still a barrier under AQE: localCheckpoint(eager=False) needs the
+    # final plan, so every upstream shuffle and broadcast stage runs at the
+    # call and only the checkpointed stage itself waits for the consuming
+    # job (a range -> groupBy -> join probe: 2 jobs at the call with AQE
+    # on, 0-1 with it off). The committed per-iteration profile
+    # (KM_ITERS=1/2/3 best-of-4: 0.87/1.40/1.93 s) puts the marginal
+    # iteration at ~0.53 s at sf0.1: ~5 AQE stage materializations x fixed
+    # scheduling/codegen latency on a 5k-row corpus. That latency included
+    # recompiling generated classes evicted from Spark's default 100-entry
+    # cache, which get_spark now sizes to the working set; the rest is
+    # stage-count latency at gate scale and genuine E/M-step compute at
+    # 100 TB. The iteration count is the algorithm (guide §1.3).
     centroids = seeds.select(
         F.col("vec_id").alias("cid"),
         F.transform("embedding", trunc6).alias("centroid"),

@@ -1,4 +1,5 @@
-"""bench.py's timing loop: failure recording, job-group labels, headline set."""
+"""bench.py's timing loop: failure recording, job-group labels, compile
+counts, headline set."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ def test_failing_query_is_recorded_and_the_next_is_timed(spark, sf_dir, monkeypa
         raise RuntimeError("broken on purpose")
 
     monkeypatch.setitem(QUERIES, "bench_test_broken", broken)
-    seconds, rows, failures = bench.time_queries(
+    seconds, rows, compiles, failures = bench.time_queries(
         spark, ["bench_test_broken", "orc_groupby_count"], sf_dir, 2
     )
     assert failures == [
@@ -27,8 +28,9 @@ def test_failing_query_is_recorded_and_the_next_is_timed(spark, sf_dir, monkeypa
             "error": "RuntimeError: broken on purpose",
         }
     ]
-    assert list(seconds) == ["orc_groupby_count"]
+    assert list(seconds) == list(compiles) == ["orc_groupby_count"]
     assert len(seconds["orc_groupby_count"]) == 2
+    assert len(compiles["orc_groupby_count"]) == 2
     assert rows["orc_groupby_count"][0] == rows["orc_groupby_count"][1] > 0
 
 
