@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import inspect
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -69,54 +71,78 @@ def test_no_nested_or_date_output_columns(spark, sf_dir):
     assert not offenders, offenders
 
 
-def test_gate_rotation_ledger_policy(tmp_path, monkeypatch):
-    """The rotation ledger counts only hash-matched stamps as HARD; weaker
-    records (no_oracle, comparator errors, red rows) re-front the query —
-    unless it still has no oracle (permanently weak rows keep their
-    rows-only stamp instead of burning gate slots forever)."""
+def _write_artifacts(tmp_path, artifacts):
+    """Write {round: rows} as CORRECTNESS_r{round}.json; return their paths."""
     import json
 
-    art = {
-        "hard_green": {"hash_match": True, "err": None},
-        "red_row": {"hash_match": False, "err": None},
-        "errored": {"hash_match": None, "err": "boom"},
-        "weak_with_oracle_now": {"hash_match": None, "err": "no_oracle"},
-        "weak_still_no_oracle": {"hash_match": None, "err": "no_oracle"},
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(art))
-    monkeypatch.setattr(
-        entrymod.os.path, "dirname", lambda _: str(tmp_path)
-    )
-    monkeypatch.setattr(
-        "datafusion_datasource_orc_spark.operators.ORACLES",
-        {"hard_green": "SELECT 1", "red_row": "SELECT 1",
-         "errored": "SELECT 1", "weak_with_oracle_now": "SELECT 1"},
-    )
-    led = entrymod._driver_ledger()
-    assert "hard_green" in led
-    assert "weak_still_no_oracle" in led  # permanently weak → keeps stamp
-    assert "red_row" not in led  # red → resample until green
-    assert "errored" not in led
-    assert "weak_with_oracle_now" not in led  # earned an oracle → re-front
+    paths = []
+    for rnd, rows in artifacts.items():
+        path = tmp_path / f"CORRECTNESS_r{rnd}.json"
+        path.write_text(json.dumps(rows))
+        paths.append(str(path))
+    return paths
 
 
-def test_gate_rotation_legacy_list_artifact(tmp_path, monkeypatch):
-    """A legacy list-format artifact carries no per-row status, so it can
-    never grant a HARD stamp: names route through the weak-row path and
-    stay fronted unless they (still) have no oracle (ADVICE r04)."""
-    import json
+def test_gate_rotation_ledger_policy(tmp_path):
+    """Only hash-matched records are stamps; red, errored and no_oracle rows
+    leave the query unstamped, so it keeps its front slot until it earns
+    one. Artifacts are read in numeric round order (r9 before r10)."""
+    paths = _write_artifacts(
+        tmp_path,
+        {
+            10: {"hard_green": {"hash_match": True, "spark_rows": 4}},
+            9: {
+                "hard_green": {"hash_match": True, "spark_rows": 3},
+                "red_row": {"hash_match": False, "err": None},
+                "errored": {"hash_match": None, "err": "boom"},
+                "weak": {"hash_match": None, "err": "no_oracle"},
+            },
+        },
+    )
+    assert entrymod._driver_stamps(paths) == {"hard_green": [(9, 3), (10, 4)]}
 
-    (tmp_path / "CORRECTNESS_r98.json").write_text(
-        json.dumps(["listed_with_oracle", "listed_no_oracle"])
-    )
-    monkeypatch.setattr(entrymod.os.path, "dirname", lambda _: str(tmp_path))
+
+def test_gate_rotation_legacy_list_artifact(tmp_path):
+    """A list-format artifact carries no per-row status, so it cannot prove
+    a hash match: it grants no stamp."""
+    paths = _write_artifacts(tmp_path, {98: ["listed_a", "listed_b"]})
+    assert entrymod._driver_stamps(paths) == {}
+
+
+@pytest.mark.parametrize(
+    "histories, expected",
+    [
+        # a single 0-row stamp re-fronts ahead of a same-round nonzero one
+        ({"b": [3, 3], "a": [3, 0]}, ["a", "b"]),
+        # a 0-row stamp re-confirmed 0-row by the next examination is
+        # by-nature empty: it leaves the 0-row tier and rotates normally
+        ({"a": [0, 0], "b": [0]}, ["b", "a"]),
+        # a zero after a nonzero is fresh news, even with an older zero
+        ({"b": [4, 4, 4], "a": [0, 4, 0]}, ["a", "b"]),
+    ],
+    ids=[
+        "single_zero_row_stamp_refronts",
+        "twice_confirmed_zero_exits_tier",
+        "nonzero_then_zero_refronts_again",
+    ],
+)
+def test_bounded_zero_row_refront(tmp_path, monkeypatch, histories, expected):
+    """histories: {name: spark_rows per stamp, oldest..newest}, each ending
+    at the newest round; registration order is the dict order."""
+    n_rounds = max(len(h) for h in histories.values())
+    artifacts = {rnd: {} for rnd in range(1, n_rounds + 1)}
+    for name, h in histories.items():
+        for rnd, rows in enumerate(h, start=n_rounds - len(h) + 1):
+            artifacts[rnd][name] = {"hash_match": True, "spark_rows": rows}
+    paths = _write_artifacts(tmp_path, artifacts)
+    real = entrymod._driver_stamps
+    monkeypatch.setattr(entrymod, "_driver_stamps", lambda: real(paths))
+    monkeypatch.setattr(entrymod, "_stale_stamps", lambda stamped: set())
     monkeypatch.setattr(
-        "datafusion_datasource_orc_spark.operators.ORACLES",
-        {"listed_with_oracle": "SELECT 1"},
+        "datafusion_datasource_orc_spark.operators.QUERIES",
+        dict.fromkeys(histories),
     )
-    led = entrymod._driver_ledger()
-    assert "listed_with_oracle" not in led  # no proof of a hash match → re-front
-    assert "listed_no_oracle" in led  # permanently weak → keeps its stamp
+    assert list(entrymod.queries()) == expected
 
 
 def test_git_blob_sha_matches_git_hash_object(tmp_path):
@@ -181,27 +207,75 @@ def test_stale_stamps_refront_on_module_change(tmp_path, monkeypatch):
     assert stale == {"q_changed"}
 
 
-def test_round_priority_names_are_registered():
-    """A typo in _ROUND_PRIORITY silently no-ops (the list is filtered
-    against the fresh pool), which would quietly demote a query this round
-    meant to front — so every listed name must exist in the registry."""
-    from datafusion_datasource_orc_spark.operators import QUERIES
-
-    unknown = [n for n in entrymod._ROUND_PRIORITY if n not in QUERIES]
-    assert not unknown, f"_ROUND_PRIORITY names not in registry: {unknown}"
-
-
 def test_queries_order_fresh_then_stale_then_stamped():
     """Ordering contract over the REAL registry + committed artifacts:
-    never-stamped first (first stamps outrank everything), then stale
-    re-fronts (material change since stamp), then current stamps."""
-    stamped = entrymod._driver_ledger()
-    stale = entrymod._stale_stamps(stamped)
-    tiers = [
-        0 if n not in stamped else (1 if n in stale else 2)
-        for n in entrymod.queries()
-    ]
-    assert tiers == sorted(tiers), "queries() must order fresh < stale < stamped"
+    never-stamped first (first stamps outrank everything), then a single
+    0-row latest stamp, then stale re-fronts (material change since stamp),
+    then current stamps; within a tier, oldest latest stamp first."""
+    stamps = entrymod._driver_stamps()
+    stale = entrymod._stale_stamps(set(stamps))
+
+    def tier(name):
+        if name not in stamps:
+            return (0, 0)
+        rows = [r for _, r in stamps[name]]
+        zero = rows[-1] == 0 and rows[-2:] != [0, 0]
+        return (1 if zero else 2 if name in stale else 3, stamps[name][-1][0])
+
+    tiers = [tier(n) for n in entrymod.queries()]
+    assert tiers == sorted(tiers), "queries() must order fresh < 0-row < stale < current"
+
+
+# The 21 queries whose module changed after their latest stamp, per the
+# stamp_hashes.json regenerated over CORRECTNESS_r01..r15.
+_STALE_AT_R15 = {
+    "approx_heavy_hitters", "dedup_embedding_cosine", "embedding_dim_stats",
+    "embedding_kmeans", "embedding_power_iteration", "embedding_stats",
+    "embedding_whitening", "except_all_keys", "grouping_id_rollup",
+    "join_null_safe", "percentile_by_priority", "simsearch_bruteforce",
+    "simsearch_bruteforce_arrow", "simsearch_ivf", "simsearch_ivfpq",
+    "simsearch_knn_join", "simsearch_lsh", "simsearch_pq", "simsearch_sq",
+    "udaf_sum_squares", "udtf_sentences",
+}
+
+# The driver's first-50 gate window over those frozen inputs: the 21 stale
+# queries (r14 stamps, then r15), then the 29 oldest current stamps (24 from
+# r8, 5 from r9), each run in registration order.
+_GATE_WINDOW_AT_R15 = [
+    "except_all_keys", "join_null_safe", "grouping_id_rollup",
+    "percentile_by_priority", "udtf_sentences", "udaf_sum_squares",
+    "approx_heavy_hitters", "embedding_whitening", "simsearch_sq",
+    "simsearch_bruteforce", "simsearch_knn_join", "simsearch_lsh",
+    "dedup_embedding_cosine", "simsearch_ivf", "embedding_stats",
+    "simsearch_bruteforce_arrow", "embedding_dim_stats", "simsearch_pq",
+    "embedding_power_iteration", "simsearch_ivfpq", "embedding_kmeans",
+    "dedup_containment", "approx_countmin_tokens", "events_conversion_funnel",
+    "events_zscore_anomaly", "events_retention_cohorts",
+    "events_interarrival_stats", "events_ewma_smooth", "simsearch_hybrid_rrf",
+    "simsearch_ivf_kmeans", "multimodal_bytes", "multimodal_frame_sample",
+    "multimodal_batch_packing", "orc_encoding_stats", "agg_avg_filter",
+    "distinct_values", "join_inner", "orc_scan_full", "orc_projection",
+    "orc_filter_eq", "orc_filter_range", "orc_filter_neq",
+    "orc_filter_compound", "orc_filter_isnull", "training_epoch_shard",
+    "training_curriculum_quantiles", "multimodal_phash_neardup",
+    "text_pii_scrub", "text_blocklist_screen", "window_rank",
+]
+
+
+def test_gate_window_golden(monkeypatch):
+    """Pin the first 50 of queries() over frozen inputs: CORRECTNESS_r01..r15
+    only, and the stale set above instead of the live module hashes, so a
+    later artifact or an operator edit does not move it."""
+    import os
+
+    here = os.path.dirname(os.path.abspath(entrymod.__file__))
+    frozen = [os.path.join(here, f"CORRECTNESS_r{r:02d}.json") for r in range(1, 16)]
+    real = entrymod._driver_stamps
+    monkeypatch.setattr(entrymod, "_driver_stamps", lambda: real(frozen))
+    monkeypatch.setattr(
+        entrymod, "_stale_stamps", lambda stamped: _STALE_AT_R15 & stamped
+    )
+    assert list(entrymod.queries())[:50] == _GATE_WINDOW_AT_R15
 
 
 def test_stamp_hashes_sidecar_is_current():
@@ -214,8 +288,6 @@ def test_stamp_hashes_sidecar_is_current():
     from tools.stamp_ledger import SIDECAR, build
 
     if not os.path.exists(SIDECAR):
-        import pytest
-
         pytest.skip("no sidecar committed yet")
     with open(SIDECAR) as f:
         sidecar = json.load(f)

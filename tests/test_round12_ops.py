@@ -269,15 +269,19 @@ class TestSweepRecertLedger:
         }
         artifacts = [
             (5, 0, {"q_old": ok}),  # driver stamps q_old in round 5
-            # round-12 sweep re-certifies q_old and claims q_new —
+            # round-12 full sweep re-certifies q_old and claims q_new —
             # q_new has no driver stamp, so the claim must be ignored
-            (12, 1, {"q_old": ok, "q_new": ok}),
+            (
+                12,
+                1,
+                {
+                    "__meta__": {"full_registry": True, "n_registry": 2, "n_run": 2},
+                    "q_old": {**ok, "module_blob": "sha_r12"},
+                    "q_new": {**ok, "module_blob": "sha_new"},
+                },
+            ),
         ]
-        blobs = {
-            ("c_CORRECTNESS_r5.json", "mod_a.py"): "sha_r5",
-            ("c_SWEEP_r12.json", "mod_a.py"): "sha_r12",
-            ("c_SWEEP_r12.json", "mod_b.py"): "sha_new",
-        }
+        blobs = {("c_CORRECTNESS_r5.json", "mod_a.py"): "sha_r5"}
         import sys
         import types
 
@@ -322,12 +326,18 @@ class TestSweepRecertLedger:
         }
         artifacts = [
             (5, 0, {"q": ok}),
-            (12, 1, {"q": ok}),
+            (
+                12,
+                1,
+                {
+                    "__meta__": {"full_registry": True, "n_registry": 1, "n_run": 1},
+                    "q": {**ok, "module_blob": "s12"},
+                },
+            ),
             (13, 0, {"q": ok}),
         ]
         blobs = {
             ("c_CORRECTNESS_r5.json", "m.py"): "s5",
-            ("c_SWEEP_r12.json", "m.py"): "s12",
             ("c_CORRECTNESS_r13.json", "m.py"): "s13",
         }
         import sys

@@ -1,6 +1,5 @@
 """Round-13 mechanics: sweep-evidence integrity (run-time module blobs +
-scope meta, r12 ADVICE), the bounded tier-1.5 re-front, and the
-duration-balanced sweep sharding."""
+scope meta, r12 ADVICE) and the duration-balanced sweep sharding."""
 
 from __future__ import annotations
 
@@ -21,8 +20,8 @@ def _build_ledger(monkeypatch, artifacts, blobs, queries_mods):
     """Run tools.stamp_ledger.build over synthetic artifacts.
 
     artifacts: list of (round, kind, rows-dict); kind 0 = CORRECTNESS,
-    kind 1 = SWEEP. blobs: {(commit, relpath): sha} for the legacy
-    blob_at resolution. queries_mods: {query_name: module_relpath}."""
+    kind 1 = SWEEP. blobs: {(commit, relpath): sha} for the driver
+    artifacts' blob_at resolution. queries_mods: {query_name: module_relpath}."""
     import sys
     import types
 
@@ -85,23 +84,20 @@ class TestSweepEvidenceIntegrity:
     def test_partial_sweep_grants_no_recert(self, monkeypatch):
         """r12 ADVICE: a --front/named-query/--shard run writes
         full_registry=false meta; the ledger must ignore it entirely —
-        the driver's round-5 blob stays the record."""
-        artifacts = [
-            (5, 0, {"q": _OK}),
-            (
-                13,
-                1,
-                {
-                    "__meta__": {"full_registry": False, "n_registry": 2, "n_run": 1},
-                    "q": {**_OK, "module_blob": "sha_ran", "module": "m.py"},
-                },
-            ),
-        ]
-        blobs = {("c_CORRECTNESS_r5.json", "m.py"): "sha_r5"}
-        records = _build_ledger(monkeypatch, artifacts, blobs, {"q": "m.py"})
-        assert records["q"]["round"] == 5
-        assert records["q"]["blob"] == "sha_r5"
-        assert "evidence" not in records["q"]
+        the driver's round-5 blob stays the record. A sweep without any
+        meta cannot show its scope, so it grants nothing either."""
+        row = {**_OK, "module_blob": "sha_ran", "module": "m.py"}
+        partial = {"full_registry": False, "n_registry": 2, "n_run": 1}
+        for sweep in ({"__meta__": partial, "q": row}, {"q": row}):
+            artifacts = [(5, 0, {"q": _OK}), (13, 1, sweep)]
+            blobs = {
+                ("c_CORRECTNESS_r5.json", "m.py"): "sha_r5",
+                ("c_SWEEP_r13.json", "m.py"): "sha_committed",
+            }
+            records = _build_ledger(monkeypatch, artifacts, blobs, {"q": "m.py"})
+            assert records["q"]["round"] == 5
+            assert records["q"]["blob"] == "sha_r5"
+            assert "evidence" not in records["q"]
 
     def test_full_sweep_certifies_the_blob_that_ran(self, monkeypatch):
         """The committed sweep's introducing commit may contain a
@@ -131,22 +127,6 @@ class TestSweepEvidenceIntegrity:
         assert records["q"]["blob"] == "sha_ran", (
             "ledger certified the committed blob, not the one that ran"
         )
-
-    def test_legacy_sweep_without_meta_keeps_old_resolution(self, monkeypatch):
-        """SWEEP_r12.json predates the meta/module_blob format and was
-        judge-adjudicated under the introducing-commit rule — grandfather
-        it."""
-        artifacts = [
-            (5, 0, {"q": _OK}),
-            (12, 1, {"q": _OK}),
-        ]
-        blobs = {
-            ("c_CORRECTNESS_r5.json", "m.py"): "sha_r5",
-            ("c_SWEEP_r12.json", "m.py"): "sha_r12",
-        }
-        records = _build_ledger(monkeypatch, artifacts, blobs, {"q": "m.py"})
-        assert records["q"]["round"] == 12
-        assert records["q"]["blob"] == "sha_r12"
 
     def test_sweep_out_records_meta_and_runtime_blobs(self, tmp_path):
         """End-to-end over the real registry, no Spark: a named-query
@@ -183,58 +163,6 @@ class TestSweepEvidenceIntegrity:
         assert rec["module"].startswith("datafusion_datasource_orc_spark/")
         assert isinstance(rec["module_blob"], str) and len(rec["module_blob"]) == 40
         assert rec["secs"] >= 0
-
-
-class TestBoundedZeroRowRefront:
-    def _stamps(self, monkeypatch, histories):
-        """histories: {name: [spark_rows per round, oldest..newest]} —
-        synthesize one CORRECTNESS artifact per round index."""
-        import builtins
-        import io
-        import os as _os
-
-        import __spark_entry__ as entry
-
-        n_rounds = max(len(h) for h in histories.values())
-        arts = []
-        for r in range(n_rounds):
-            rows = {}
-            for name, h in histories.items():
-                if r < len(h):
-                    rows[name] = {**_OK, "spark_rows": h[r], "oracle_rows": h[r]}
-            arts.append((f"CORRECTNESS_r{r + 1}.json", rows))
-        paths = dict(arts)
-        monkeypatch.setattr(
-            entry, "_artifact_paths", lambda here: [p for p, _ in arts]
-        )
-        real_open = builtins.open
-
-        def fake_open(path, *a, **kw):
-            base = _os.path.basename(str(path))
-            if base in paths:
-                return io.StringIO(_json.dumps(paths[base]))
-            return real_open(path, *a, **kw)
-
-        monkeypatch.setattr("builtins.open", fake_open)
-        return entry._zero_row_stamps()
-
-    def test_single_zero_row_stamp_refronts(self, monkeypatch):
-        got = self._stamps(monkeypatch, {"a": [3, 0], "b": [3, 3]})
-        assert got == {"a"}
-
-    def test_twice_confirmed_zero_exits_tier(self, monkeypatch):
-        """r12 ADVICE: a 0-row stamp RE-confirmed 0-row by the next driver
-        examination is by-nature-empty — it must stop occupying front
-        gate-window slots."""
-        got = self._stamps(monkeypatch, {"a": [0, 0], "b": [0]})
-        assert got == {"b"}
-
-    def test_nonzero_then_zero_refronts_again(self, monkeypatch):
-        """A zero AFTER a nonzero certificate is fresh news (possible
-        regression) — one re-front is warranted even if an older zero
-        exists further back."""
-        got = self._stamps(monkeypatch, {"a": [0, 4, 0]})
-        assert got == {"a"}
 
 
 class TestRecallAtK:

@@ -9,28 +9,22 @@ those recorded shas against the current on-disk modules: a mismatch means
 the stamped code has materially changed, so the query re-enters the fresh
 pool for re-certification (judge r05 task 3).
 
-Since round 12 (judge r11 task 2), committed SWEEP_r{N}.json artifacts —
-full-registry runs of tools/check_oracles.py --sweep-out, in the exact
-CORRECTNESS row schema — count as RE-certification evidence: a sweep's
-hash_match=true row updates the recorded blob for a query that ALREADY
-holds a driver hash stamp, so an audit-pass edit re-verified by a
-committed full sweep stops re-consuming gate slots. First stamps stay
-driver-only (a sweep row for a never-driver-stamped query is ignored),
-and the gate window stays the authority for fresh work. Evidence is
-processed in (round, driver-before-sweep) order with latest-wins, so a
-later driver stamp always supersedes an earlier sweep and a round-end
-sweep supersedes that round's gate (it certifies the final tree).
+Committed SWEEP_r{N}.json artifacts (tools/check_oracles.py --sweep-out,
+in the CORRECTNESS row schema) count as RE-certification evidence: a
+sweep's hash_match=true row updates the recorded blob for a query that
+ALREADY holds a driver hash stamp, so an edit re-verified by a committed
+sweep stops re-consuming gate slots. First stamps stay driver-only.
+Evidence is processed in (round, driver-before-sweep) order with
+latest-wins, so a later driver stamp supersedes an earlier sweep and a
+round-end sweep supersedes that round's gate.
 
-Since round 13 (r12 ADVICE), sweep evidence is tied to the tree that
-actually RAN, not the commit the artifact lands in: check_oracles records
-each query's registered-module git blob sha at run time into the sweep
-rows ("module_blob") plus a "__meta__" scope record, and this tool
-certifies THOSE shas. A module edited after the sweep ran — even if
-committed together with SWEEP_r{N}.json — therefore stays stale, and a
-partial (--front / named-query / --shard) run is excluded outright by its
-full_registry=false meta. Legacy sweeps without "__meta__" (SWEEP_r12
-only, already judge-adjudicated) keep the old introducing-commit blob
-resolution.
+A sweep certifies the tree that actually RAN, not the commit the artifact
+lands in: check_oracles records each query's registered-module git blob
+sha at run time ("module_blob") plus a "__meta__" scope record, and this
+tool certifies THOSE shas. A module edited after the sweep ran therefore
+stays stale. Only a sweep whose meta says full_registry=true counts; a
+partial (--front / named-query / --shard) run or a sweep without meta
+grants nothing.
 
 Run at ROUND START (before editing code) so the working tree still equals
 the state the driver verified; re-runs are idempotent. Mechanical and
@@ -120,11 +114,8 @@ def build(max_round: int | None = None) -> dict[str, dict[str, object]]:
         if not isinstance(rows, dict):
             continue  # legacy list artifacts grant no hard stamp
         meta = rows.get("__meta__")
-        if kind == 1 and isinstance(meta, dict) and not meta.get("full_registry"):
-            # r13 format, partial scope: --front / named-query / --shard
-            # runs are NOT re-certification evidence (r12 ADVICE — their
-            # output used to be indistinguishable from a full sweep)
-            continue
+        if kind == 1 and not (isinstance(meta, dict) and meta.get("full_registry")):
+            continue  # only a full-registry sweep is re-certification evidence
         hard = [
             n
             for n, rec in rows.items()
@@ -144,20 +135,16 @@ def build(max_round: int | None = None) -> dict[str, dict[str, object]]:
                 # (judge r11 task 2 — the gate window is the authority
                 # for fresh work)
                 continue
-            if kind == 1 and isinstance(meta, dict):
-                # r13 format: certify ONLY the blob that RAN (recorded by
-                # check_oracles at run time) — a post-sweep edit committed
-                # alongside the artifact stays stale. A null/missing
-                # module_blob in this format is NO evidence (falling back
-                # to the introducing-commit blob would reopen the exact
-                # hole this format closes), so the prior record stands.
-                run_blob = rows[name].get("module_blob")
-                if not run_blob:
+            if kind == 1:
+                # certify ONLY the blob that RAN (recorded by check_oracles
+                # at run time) — a post-sweep edit committed alongside the
+                # artifact stays stale. A null/missing module_blob is NO
+                # evidence, so the prior record stands.
+                blob = rows[name].get("module_blob")
+                if not blob:
                     continue
-                blob = run_blob
             else:
-                # driver artifacts / legacy (pre-meta) sweeps: the blob at
-                # the introducing commit
+                # driver artifacts: the blob at the introducing commit
                 blob = blob_at(commit, rel)
             records[name] = {
                 "round": rnd,
