@@ -481,6 +481,11 @@ def register(spark) -> None:
     Also enables Python data source filter pushdown (runtime-settable
     session conf, default false): a reader that implements pushFilters()
     FAILS ANALYSIS when the conf is off, so registering the format without
-    it would break on a vanilla caller session (the driver's)."""
+    it would break on a vanilla caller session (the driver's). The conf is
+    set on every call, since a caller may unset it; the source is pickled
+    and registered only when the session has no ``orcmeta`` yet, because
+    re-registering replaces it and logs a warning on every operator build."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(OrcMetadataDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(OrcMetadataDataSource.name()):
+        spark.dataSource.register(OrcMetadataDataSource)

@@ -318,6 +318,36 @@ class TestOrcMetaDataSource:
             assert r.file_bytes > 0
             assert r.file_name.endswith(".orc") or "part-" in r.file_name
 
+    def test_register_is_idempotent(self, spark, sf_dir, monkeypatch):
+        """A second register() keeps the registered source (re-registering
+        logs a replacement warning on every operator build) but sets the
+        pushdown conf again."""
+        from pyspark.sql.datasource import DataSourceRegistration
+
+        from datafusion_datasource_orc_spark.sources import orcmeta
+
+        registered = []
+        register = DataSourceRegistration.register
+
+        def counting(self, source):
+            registered.append(source)
+            return register(self, source)
+
+        monkeypatch.setattr(DataSourceRegistration, "register", counting)
+        manager = spark._jsparkSession.sessionState().dataSourceManager()
+        # the shared session may hold it from an earlier test; a new session
+        # cannot register it while the active one has it (Spark checks there)
+        before = manager.dataSourceExists("orcmeta")
+        conf = "spark.sql.python.filterPushdown.enabled"
+        orcmeta.register(spark)
+        spark.conf.unset(conf)
+        orcmeta.register(spark)
+        assert registered == ([] if before else [orcmeta.OrcMetadataDataSource])
+        assert manager.dataSourceExists("orcmeta")
+        assert spark.conf.get(conf) == "true"
+        d = orc_dir_for(spark, sf_dir, "region")
+        assert spark.read.format("orcmeta").load(d).count() >= 1
+
     def test_missing_path_rejected(self):
         import pytest as _pytest
 
