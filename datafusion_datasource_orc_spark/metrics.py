@@ -111,6 +111,42 @@ def per_file_row_counts(df: DataFrame) -> dict[str, int]:
     return {r.file: r["count"] for r in rows if r.file}
 
 
+def _plan_children(node) -> list:
+    """Children of a physical plan node, looking through the nodes AQE
+    hides a subtree behind: ``AdaptiveSparkPlanExec`` (the final plan),
+    ``*QueryStageExec`` (a leaf whose stage sits in ``plan()``) and
+    ``ReusedExchangeExec``. Subqueries count as children."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    out = []
+    for seq in (node.children(), node.subqueries()):
+        it = seq.iterator()
+        while it.hasNext():
+            out.append(it.next())
+    return out
+
+
+def _plan_leaves(plan) -> list:
+    """Leaf nodes under ``plan``, left to right, each once: a reused
+    exchange leads back to the subtree it reuses."""
+    leaves, seen, todo = [], set(), [plan]
+    while todo:
+        node = todo.pop()
+        if node.id() in seen:
+            continue
+        seen.add(node.id())
+        children = _plan_children(node)
+        if not children:
+            leaves.append(node)
+        todo.extend(reversed(children))
+    return leaves
+
+
 def scan_sql_metrics(df: DataFrame) -> list[dict]:
     """Per-scan SQL metrics from the df's LAST execution — the A14 counters
     Spark does expose (the reference's stripes_pruned / io_requests have no
@@ -120,18 +156,13 @@ def scan_sql_metrics(df: DataFrame) -> list[dict]:
     ``metadataTime`` on file scans, src/metrics.rs:57-118 parity axis).
 
     Execute an action on ``df`` first (e.g. ``collect``); metrics accumulate
-    on that DataFrame's query execution. AQE-wrapped plans are unwrapped to
-    the final physical plan. Returns one dict per leaf scan node:
-    ``{"node": ..., "metrics": {name: value}}``; [] if the JVM surface is
-    unavailable."""
+    on that DataFrame's query execution. The walk looks through AQE's query
+    stages, so a scan below an exchange is found. Returns one dict per leaf
+    node: ``{"node": ..., "metrics": {name: value}}``; [] if the JVM surface
+    is unavailable."""
     out: list[dict] = []
     try:
-        plan = df._jdf.queryExecution().executedPlan()
-        if "AdaptiveSparkPlan" in plan.getClass().getSimpleName():
-            plan = plan.executedPlan()
-        leaves = plan.collectLeaves()
-        for i in range(leaves.size()):
-            node = leaves.apply(i)
+        for node in _plan_leaves(df._jdf.queryExecution().executedPlan()):
             metrics = {}
             it = node.metrics().iterator()
             while it.hasNext():

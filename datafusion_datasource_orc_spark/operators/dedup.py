@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -557,12 +557,35 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
     (doc_id, band, bh): the one-pass aggregate MinHash signature (see
     minhash_lsh_pairs' docstring) split into LSH_BANDS xxhash64 band keys.
 
-    Extracted (round 10) so the SAME certified signature/banding code
-    serves both the symmetric whole-corpus banding (minhash_lsh_pairs) and
+    One function, so the SAME certified signature/banding code serves
+    both the symmetric whole-corpus banding (minhash_lsh_pairs) and
     the materialized triage band INDEX (operators.triage_index), which
     persists these rows for the existing corpus once so per-batch ingest
     never re-shingles it — bit-identical band keys are what make the two
-    paths interchangeable."""
+    paths interchangeable.
+
+    The band keys are one lambda over the band numbers, not LSH_BANDS
+    structs unrolled in Python: xxhash64 sees the same longs in the same
+    order, so the keys are bit-identical, and building the expression takes
+    a few dozen py4j round trips instead of several hundred."""
+    rows_per_band = MINHASH_PERMS // LSH_BANDS
+    band_keys = F.transform(
+        F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.xxhash64(
+                *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
+            ).alias("bh"),
+        ),
+    )
+    return minhash_signatures(sh).select(
+        "doc_id", F.explode(band_keys).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """Shingle arrays (doc_id, n, s) → (doc_id, sig): MINHASH_PERMS minhashes
+    per document, folded over the shingles in one pass."""
     P = F.lit(_MH_PRIME)
     hh = F.transform(
         F.col("s"),
@@ -582,18 +605,7 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
             lambda a, b: F.least(a, b),
         ),
     )
-    sig = sh.select("doc_id", sig_arr.alias("sig"))
-
-    rows_per_band = MINHASH_PERMS // LSH_BANDS
-    band_cols = []
-    for band in range(LSH_BANDS):
-        cols = [F.col("sig")[band * rows_per_band + r] for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(band).alias("band"), F.xxhash64(*cols).alias("bh"))
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    return sh.select("doc_id", sig_arr.alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -819,42 +831,53 @@ def min_label_propagation(
     node takes the min label among itself and its neighbours; converges in
     O(diameter) rounds, and near-dup clusters have tiny diameters. The
     caller materializes ``pairs`` (localCheckpoint) so edge generation runs
-    once, not once per round; labels are checkpointed per round to keep
-    lineage flat. Shared by dedup_connected_components (exact-Jaccard
-    edges) and dedup_connected_components_lsh (minhash-LSH edges — the
-    100 TB edge generator).
+    once, not once per round. Shared by dedup_connected_components
+    (exact-Jaccard edges) and dedup_connected_components_lsh (minhash-LSH
+    edges — the 100 TB edge generator).
 
-    The loop iterates over EDGE-INCIDENT nodes only (r14 optimization):
-    an isolated document receives no neighbour message and its own label
-    never changes, so every round's joins/checkpoints/convergence-count
-    need only the near-dup graph's nodes — a vanishingly small fraction of
-    a 100 TB corpus — instead of corpus-sized label tables. The identity
-    labels of untouched documents are unioned back LAZILY at the end (one
-    anti-join, zero per-round corpus work); results are bit-identical
-    because untouched nodes kept lbl = doc_id under the old loop too."""
+    One aggregation and one action per round. The edge table is checkpointed
+    once, in both directions plus one self-edge per node, so a round is
+    ``edges ⋈ labels`` on ``dst`` and one ``groupBy(src)`` that yields both
+    the new label (the min over the node's edges, its own label included)
+    and the old one (the label its self-edge carries). The count of nodes
+    whose label fell is an ``Observation`` on the round's eager
+    localCheckpoint, so the check rides in the checkpoint's own job instead
+    of a second ``count()`` action. An empty graph observes a NULL sum,
+    read as 0. Labels are checkpointed per round to keep lineage flat.
+
+    The loop iterates over EDGE-INCIDENT nodes only: an isolated document
+    receives no neighbour message and its own label never changes, so every
+    round's join, checkpoint and convergence count need only the near-dup
+    graph's nodes — a vanishingly small fraction of a 100 TB corpus —
+    instead of corpus-sized label tables. The identity labels of untouched
+    documents are unioned back LAZILY at the end (one anti-join, zero
+    per-round corpus work)."""
     ed = pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a"))).toDF("src", "dst")
     # src alone covers both endpoints: ed holds each pair in both directions
     active = ed.select(F.col("src").alias("doc_id")).distinct()
+    ed = ed.union(active.select("doc_id", "doc_id")).localCheckpoint()
 
-    labels = active.select("doc_id", F.col("doc_id").alias("lbl")).localCheckpoint()
+    # identity labels, read off the self-edges
+    labels = ed.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("doc_id"), F.col("dst").alias("lbl")
+    )
     converged = False
     for _ in range(CC_MAX_ROUNDS):  # backstop; real exit is the convergence check
-        nb_min = (
-            ed.join(labels, ed.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nb_lbl"))
-        )
-        new_labels = (
-            labels.join(nb_min, labels.doc_id == nb_min.src, "left")
-            .select(
-                "doc_id",
-                F.least("lbl", F.coalesce("nb_lbl", "lbl")).alias("lbl"),
-                (F.coalesce("nb_lbl", "lbl") < F.col("lbl")).alias("chg"),
+        obs = Observation()
+        labels = (
+            ed.join(labels.toDF("dst", "lbl"), "dst")
+            .groupBy(F.col("src").alias("doc_id"))
+            .agg(
+                F.min("lbl").alias("lbl"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("lbl"))).alias("old"),
             )
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("chg")).count()
-        labels = new_labels.select("doc_id", "lbl")
-        if changed == 0:
+            .observe(
+                obs, F.sum((F.col("lbl") < F.col("old")).cast("long")).alias("chg")
+            )
+            .select("doc_id", "lbl")
+            .localCheckpoint()
+        )
+        if not obs.get["chg"]:  # NULL when the graph has no edges
             converged = True
             break
     # The cap silently truncating a pathological chain (diameter >

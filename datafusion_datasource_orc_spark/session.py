@@ -30,6 +30,19 @@ Scale design notes (local[32] here, 1000-executor cluster in production):
   every run still builds, plans and executes every job. The conf is static,
   so a session started elsewhere keeps Spark's default of 100: the driver's
   vanilla session, or any SparkContext already running when this is called.
+- DataFrame debugging off: ``spark.python.sql.dataFrameDebugging.enabled``.
+  pyspark 4.1 defaults it to true, and then every ``functions``/Column call
+  goes through ``_with_origin`` (``pyspark/errors/utils.py``), which makes a
+  ``getActiveSession()`` call, a ``conf.get`` call, a JVM
+  ``PySparkCurrentOrigin.set``/``clear`` pair and a stack walk per call.
+  Building an operator is thousands of such calls over py4j. Main-thread
+  round trips per warm build at sf0.01, with the setting on and off:
+  ``pipeline_end_to_end`` 4,056 and 1,677, ``dedup_connected_components_lsh``
+  2,515 and 1,196, ``embedding_kmeans`` 2,138 and 1,058. The trade-off: a
+  Spark error no longer names the Python line that built the failing
+  expression in its "DataFrame context"; its error class and message are
+  unchanged. pyspark reads the setting once per process, from the first
+  session active when a ``functions`` call is made.
 """
 
 from __future__ import annotations
@@ -93,6 +106,8 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         # --- generated code: keep the whole working set compiled ---
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # --- plan construction: no call-site capture per Column call ---
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # split planning: A6 partitioned scan (tune down for many small files)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # --- python interchange: Arrow everywhere (pandas UDF fast path) ---

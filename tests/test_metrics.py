@@ -60,6 +60,17 @@ def test_scan_sql_metrics_numoutputrows(spark, sf_dir):
     assert m.get("filesSize", 0) > 0
 
 
+def test_scan_sql_metrics_through_an_exchange(spark, sf_dir):
+    # under AQE the aggregate's shuffle makes the scan part of a query
+    # stage, which the final plan shows as a leaf
+    from datafusion_datasource_orc_spark.metrics import scan_sql_metrics
+
+    df = load_orc_table(spark, sf_dir, "orders").groupBy().count()
+    assert df.collect()[0][0] == 1500
+    scans = [s for s in scan_sql_metrics(df) if "Scan" in s["node"]]
+    assert [s["metrics"].get("numOutputRows") for s in scans] == [1500]
+
+
 def test_stripe_pruning_reads_fewer_rows_than_table(spark, tmp_path):
     """Numeric stripe/row-group-pruning proof (A14): on a range-clustered
     ORC layout, a selective filter's scan must DECODE fewer rows than the
