@@ -11,6 +11,11 @@ warmup like criterion's sampling does), and prints ONE JSON line:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": ...}
 
+Each query's time is its best iteration net of hypervisor steal (`best_of`),
+and `drift` is the whole run's steal factor, 1.0 when nothing was stolen.
+`vs_prev` compares the run with the newest committed BENCH_r*.json at the
+same scale factor and core count (`compare`), and is {} when there is none.
+
 An unknown query name exits non-zero before anything runs. A subset runs
 through the same path as the full set.
 
@@ -45,74 +50,36 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # generated code differs between runs (bench_detail.json["codegen_compiles"]).
 ITERATIONS = int(os.environ.get("BENCH_ITERATIONS", "3"))
 
-# --- host-load calibration (judge r07 task 2; r08 task 2) -------------------
-# TWO fixed probes timed at harness start and end, drift = max of the legs:
-#
-# 1. CPU leg — deterministic in-memory aggregate over a generated range,
-#    zero I/O, whole-stage-codegen. Catches pure CPU contention.
-# 2. SHUFFLE leg (round 9) — range -> repartition(64, key) -> hash aggregate:
-#    a real exchange (serialize, spill-path shuffle writes/reads, hash-table
-#    build), i.e. the memory-bandwidth + disk axes Spark queries actually
-#    contend on. BENCH_r08 proved the CPU leg alone is blind to these: the
-#    probe read 0.93 while every query ran uniformly +44% on the loaded
-#    driver box. max() is correct because host load can only SLOW a leg —
-#    whichever axis is contended shows up as the larger drift.
-#
-# drift = probe_time / reference measures how loaded THIS run's box is
-# relative to the pinned idle-box references; regression flags are computed
-# on drift-NORMALIZED times so a uniformly loaded host (the BENCH_r07
-# episode: ~1.33x drift produced 4 spurious flags the judge had to
-# adjudicate) cannot fake a plan regression. Raw ratios stay in
-# bench_detail.json.
-_CAL_ROWS = 6_000_000_000
-CAL_REFERENCE = 1.42  # idle-box best-of-3 seconds, measured r08 on local[32]
-_SHUF_ROWS = 60_000_000
-_SHUF_KEYS = 1_000_000
-# idle-box best-of-5 seconds, measured r09 on local[32] across 4 sessions
-# (session floors 1.66-1.95; the shuffle path has ~2x the CPU probe's
-# session-to-session noise, hence best-of-5 where the CPU leg uses 3)
-SHUF_REFERENCE = 1.80
-
-def _calibrate(spark) -> float:
-    """Best-of-3 seconds for the fixed CPU probe (sum of two modulos over a
-    6B-row range; term bound keeps the ANSI int64 sum far from overflow)."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, _CAL_ROWS, 1).selectExpr(
-            "sum(id % 97 + id % 101) as s"
-        ).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+# Wall time net of hypervisor steal, as perfbench nets its end-to-end
+# metrics: a query that ran while the hypervisor gave a share s of the CPU
+# time this machine's virtual CPUs wanted to other guests is taken to have
+# needed T * (1 - s) ** STEAL_COST of its wall time T. The exponent exceeds 1
+# because threads that wait on a stolen one (task stragglers, JVM safepoints,
+# the Python process waiting on the JVM) stall too; 1.5 gave the least spread
+# between runs of the same code on a 4-vCPU VM whose steal ran from 1% to 32%.
+STEAL_COST = 1.5
 
 
-def _calibrate_shuffle(spark) -> float:
-    """Best-of-5 seconds for the fixed SHUFFLE probe: 60M (key, id) rows
-    through a 64-partition exchange + hash aggregate over 1M groups — the
-    serialize/spill/hash-build path real queries contend on (see the
-    calibration block comment). Best-of-5 because the shuffle path carries
-    ~2x the CPU probe's iteration noise (measured r09: raw iterations
-    1.83-2.24 s within one session after warm-up)."""
-    from pyspark.sql import functions as F
+def _host_cpu() -> list[int]:
+    """The machine's CPU time counters, in ticks, from ``/proc/stat``."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
 
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, _SHUF_ROWS)
-            .select((F.col("id") % _SHUF_KEYS).alias("k"), F.col("id"))
-            .repartition(64, "k")
-            .groupBy("k")
-            .agg(F.sum("id").alias("s"), F.count(F.lit(1)).alias("c"))
-            .agg(F.sum("k"), F.sum("s"), F.sum("c"))
-            .collect()
-        )
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+
+def stolen_share(before: list[int], after: list[int]) -> float:
+    """Share of the CPU time the machine's virtual CPUs wanted between two
+    ``_host_cpu`` readings that the hypervisor gave to other guests: steal
+    over user, nice, system, irq, softirq and steal time."""
+    d = [b - a for a, b in zip(before, after)]
+    wanted = d[0] + d[1] + d[2] + d[5] + d[6] + d[7]
+    return d[7] / wanted if wanted else 0.0
+
 
 # Headline set: the reference's demonstrated core (scan/filter/agg/groupby via
-# the ORC path), the join/window/TPC-H analytical surface, and one of each
-# beyond-reference pipeline family.
+# the ORC path), the join/window/TPC-H/TPC-DS analytical surface, and at least
+# one query of each beyond-reference pipeline family. The `_incremental`
+# queries time the per-batch path over a materialized index, whose one-time
+# build is amortized across iterations like the TPC-DS star materialization.
 HEADLINE = [
     "orc_groupby_count",
     "orc_filter_range",
@@ -148,25 +115,20 @@ HEADLINE = [
     "events_zscore_anomaly",
     "asof_join_last_order",
     "basket_part_pairs",
-    # round 5 additions
     "multimodal_decode",
     "simsearch_pq",
     "text_ngram_novelty",
     "training_pack_sequences",
     "text_vocab_coverage",
-    # round 6 additions
     "ingest_incremental_bloom",
     "orc_column_stats",
     "embedding_power_iteration",
     "multimodal_resize",
-    # round 7 additions
     "orc_rowgroup_stats",
     "orc_bloom_prune",
     "text_bigram_commonness",
     "simsearch_ivfpq",
     "embedding_kmeans",
-    # round 8 additions: the composed end-to-end training-data build + the
-    # three family extensions
     "pipeline_end_to_end",
     "multimodal_phash_neardup",
     "dedup_containment",
@@ -174,37 +136,22 @@ HEADLINE = [
     "simsearch_ivf_kmeans",
     "approx_countmin_tokens",
     "simsearch_hybrid_rrf",
-    # round 9 additions: the LSH clustering path, SemDeDup, the
-    # split-leakage audit, and curriculum quantile bucketing
     "dedup_connected_components_lsh",
     "embedding_semantic_dedup",
     "training_split_leakage",
     "training_curriculum_quantiles",
     "simsearch_mips",
     "ingest_triage",
-    # round 10 additions: the materialized-index triage path (one-time
-    # index build amortized across iterations, like the tpcds star
-    # materialization) and the MIPS banded rung
     "ingest_triage_incremental",
     "simsearch_mips_banded",
-    # round 10 additions, second batch: the NB quality classifier, the
-    # Lee-et-al duplicated-span coverage, and DSIR data selection
     "text_quality_nb",
     "dedup_substring_spans",
     "training_dsir_select",
-    # round 11 additions: the materialized span-hash index (per-batch
-    # duplicated-span coverage without re-spanning the corpus) and the
-    # BM25 lexical retrieval rung
     "dedup_substring_spans_incremental",
     "simsearch_bm25",
     "tokenizer_bpe_merges",
-    # round 12 additions: hybrid retrieval over the certified BM25 leg and
-    # the tokenizer-inference (merge application / corpus encode) rung
     "simsearch_hybrid_bm25",
     "tokenizer_bpe_encode",
-    # round 13 additions: the ANN retrieval-quality evaluation, the shipped
-    # tokenizer vocabulary, the composed curation manifest, and SemDeDup's
-    # banded at-scale twin
     "simsearch_recall_at_k",
     "tokenizer_bpe_vocab",
     "curation_manifest",
@@ -228,9 +175,10 @@ def time_queries(spark, names, sf_dir, iters):
     event log attribute its jobs to it. A query that raises is recorded as
     ``{"query", "iteration", "error"}`` and dropped, and the next query runs.
 
-    Returns ``(seconds, rows, compiles, failures)``: per-iteration seconds,
-    row counts and generated-code compiles for every query that finished,
-    keyed by name, and the failures.
+    Returns ``(seconds, rows, compiles, stolen, failures)``: per-iteration
+    seconds, row counts and generated-code compiles, and the stolen share of
+    the CPU over all its iterations (``stolen_share``), for every query that
+    finished, keyed by name; and the failures.
     """
     from datafusion_datasource_orc_spark.operators import QUERIES
     from datafusion_datasource_orc_spark.operators.tpcds import _register_tpcds_views
@@ -247,12 +195,14 @@ def time_queries(spark, names, sf_dir, iters):
     seconds: dict[str, list[float]] = {}
     rows: dict[str, list[int]] = {}
     compiles: dict[str, list[int]] = {}
+    stolen: dict[str, float] = {}
     failures: list[dict[str, object]] = []
     try:
         for name in names:
             times: list[float] = []
             counts: list[int] = []
             classes: list[int] = []
+            host0 = _host_cpu()
             try:
                 for i in range(iters):
                     sc.setJobGroup(f"{name}#{i}", name)
@@ -270,14 +220,78 @@ def time_queries(spark, names, sf_dir, iters):
             seconds[name] = times
             rows[name] = counts
             compiles[name] = classes
+            stolen[name] = round(stolen_share(host0, _host_cpu()), 4)
             print(
-                f"# {name}: {min(times):.3f}s rows={counts[-1]} iters={times}",
+                f"# {name}: {min(times):.3f}s rows={counts[-1]} iters={times}"
+                f" stolen={stolen[name]}",
                 file=sys.stderr,
             )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return seconds, rows, compiles, failures
+    return seconds, rows, compiles, stolen, failures
+
+
+def best_of(seconds, stolen):
+    """Each query's best iteration, net of the steal its iterations saw:
+    ``min(seconds) * (1 - stolen) ** STEAL_COST``, 3 dp (stdout budget)."""
+    return {
+        n: round(min(its) * (1.0 - stolen[n]) ** STEAL_COST, 3)
+        for n, its in seconds.items()
+    }
+
+
+def _round_no(path: str) -> int:
+    """N of ``BENCH_r<N>.json`` or ``BENCH_r<N>_c<M>.json``, as a number, so
+    r10 sorts after r9."""
+    m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
+    return int(m.group(1)) if m else -1
+
+
+def compare(results, sf, cpus, root) -> dict:
+    """Compare per-query seconds with the newest ``BENCH_r*.json`` under
+    `root` that ran at the same scale factor and core count.
+
+    A committed artifact records a run: its top-level ``cpus`` and, under
+    ``parsed``, the run's stdout line. One whose line did not parse
+    (``"parsed": null``), that has no ``cpus`` or no ``queries``, or that ran
+    at another ``sf`` or ``cpus`` is never a baseline: data size and core
+    count move query times without any change to the plan. Queries under the
+    stdout print cutoff are not in the line, so they are not compared. With
+    no baseline the result is ``{}``.
+
+    A query is flagged as a likely plan regression when it is more than 1.5x
+    AND more than 0.5 s slower than the baseline: back-to-back runs of the
+    same code swing sub-second queries by 1.5-1.8x (+/-0.4 s), so neither
+    test alone tells a regression from noise. Host load that the steal
+    netting misses moves the geomean of all the ratios, so a real regression
+    is a flag that stands out from a steady geomean.
+
+    Returns ``{"vs", "n", "geomean", "flagged", "ratios"}``.
+    """
+    paths = glob.glob(os.path.join(root, "BENCH_r*.json"))
+    for path in sorted(paths, key=_round_no, reverse=True):
+        with open(path) as f:
+            art = json.load(f)
+        parsed = art.get("parsed") or {}
+        prev = parsed.get("queries")
+        if prev and art.get("cpus") == cpus and str(parsed.get("sf")) == str(sf):
+            break
+    else:
+        return {}
+    common = sorted(set(prev) & set(results))
+    ratios = {n: round(results[n] / prev[n], 3) for n in common if prev[n] > 0}
+    return {
+        "vs": os.path.basename(path),
+        "n": len(common),
+        "geomean": (
+            round(statistics.geometric_mean(ratios.values()), 3) if ratios else None
+        ),
+        "flagged": {
+            n: r for n, r in ratios.items() if r > 1.5 and results[n] - prev[n] > 0.5
+        },
+        "ratios": ratios,
+    }
 
 
 def main() -> None:
@@ -293,48 +307,19 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}")
 
     spark = get_spark(app_name="bench")
-    # shared identifier stamped into BOTH the stdout JSON line and
-    # bench_detail.json: the regression comparator's sidecar backfill
-    # requires them equal, so detail from a different (e.g. newer local,
-    # uncommitted) run can never masquerade as the committed baseline's
+    cpus = spark.sparkContext.defaultParallelism
+    # stamped into both the stdout line and bench_detail.json, so a sidecar
+    # can be told apart from another run's
     run_id = f"{int(time.time())}-{os.getpid()}"
 
-    cal_start = _calibrate(spark)
-    shuf_start = _calibrate_shuffle(spark)
-
-    iterations, rows, compiles, failures = time_queries(
+    host0 = _host_cpu()
+    iterations, rows, compiles, stolen, failures = time_queries(
         spark, names, sf_dir, ITERATIONS
     )
-    # headline value stays best-of-N (see ITERATIONS), but every iteration
-    # is recorded so host-load spikes are separable from real regressions
-    # when BENCH artifacts are compared (3dp: stdout-line budget)
-    results = {n: round(min(its), 3) for n, its in iterations.items()}
-
-    cal_end = _calibrate(spark)
-    shuf_end = _calibrate_shuffle(spark)
-    # MIN of the start/end probes per leg (round 9; was geomean): sustained
-    # host load — the only kind that uniformly inflates query times, the
-    # r07/r08 episodes — inflates BOTH endpoints, so min still reads it.
-    # What min ignores is single-endpoint pollution, and that's correct on
-    # both ends: end-only elevation is dominated by post-run JVM state
-    # (measured: the shuffle end-probe reads ~2.7 s after the 59-query run
-    # vs the 1.66-2.12 s idle floor — heap fragmentation/GC, not host
-    # load), and load arriving only after the last query never affected
-    # the queries at all. Geomean over-normalized a clean run to 0.80.
-    cal_sec = round(min(cal_start, cal_end), 4)
-    cpu_drift = round(cal_sec / CAL_REFERENCE, 3)
-    shuf_sec = round(min(shuf_start, shuf_end), 4)
-    shuf_drift = round(shuf_sec / SHUF_REFERENCE, 3)
-    # max of the legs: load can only slow a probe down, so the contended
-    # axis is whichever leg reads higher (BENCH_r08: cpu leg 0.93 while the
-    # field ran +44% — the shuffle leg exists to catch exactly that)
-    cal_drift = max(cpu_drift, shuf_drift)
-    print(
-        f"# calibration: cpu start={cal_start}s end={cal_end}s ref={CAL_REFERENCE}s "
-        f"drift={cpu_drift}x | shuffle start={shuf_start}s end={shuf_end}s "
-        f"ref={SHUF_REFERENCE}s drift={shuf_drift}x | effective={cal_drift}x",
-        file=sys.stderr,
-    )
+    # the run's steal factor: its wall time over what it would have been
+    # without steal (1.0: the hypervisor stole nothing)
+    drift = round((1.0 - stolen_share(host0, _host_cpu())) ** -STEAL_COST, 3)
+    results = best_of(iterations, stolen)
 
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     try:
@@ -342,194 +327,60 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # Cold/warm split (judge r04 task 4): iteration 0 carries codegen +
-    # session warm-up; the warm median is the steady-state signal a repeated
-    # production query sees; `codegen_compiles` shows how much of it was
-    # recompiling (see ITERATIONS). `queries` stays best-of-N for
-    # cross-round comparability with BENCH_r01-r04.
+    # Iteration 0 carries codegen and session warm-up; the warm median is
+    # the steady state a repeated query sees, and `codegen_compiles` shows
+    # how much of it was recompiling (see ITERATIONS). `queries` is the
+    # best-of-N net of steal (`best_of`), comparable with committed BENCH
+    # artifacts, which record best-of-N.
     cold = {n: its[0] for n, its in iterations.items()}
     warm = {
         n: round(statistics.median(its[1:]), 4) if len(its) > 1 else its[0]
         for n, its in iterations.items()
     }
 
-    # The driver records only the LAST 2000 chars of stdout and parses the
-    # JSON line out of that window (BENCH_r02/r04 carried per-query
-    # iteration dicts, overflowed it, and recorded parsed=null). The stdout
-    # line therefore stays compact — per-query cold/warm/iteration detail
-    # and the full regression ratio table go to a committed sidecar.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
+    root = os.path.dirname(os.path.abspath(__file__))
+    try:
+        regression = compare(results, sf_val, cpus, root)
+    except (OSError, ValueError, AttributeError, TypeError) as exc:
+        regression = {"error": f"{type(exc).__name__}: {exc}"}
+    if "vs" in regression:
+        print(
+            f"# regression vs {regression['vs']}: geomean {regression['geomean']}"
+            f" over {regression['n']} common queries,"
+            f" flagged {sorted(regression['flagged'])}",
+            file=sys.stderr,
+        )
+    else:
+        print(
+            f"# regression: {regression.get('error', 'no baseline')}"
+            f" (sf={sf_val}, cpus={cpus})",
+            file=sys.stderr,
+        )
 
-    # Tolerance-checked regression table vs the previous committed BENCH
-    # artifact: a real plan regression is a per-query outlier (>1.5x AND
-    # >0.5s absolute on best-basis); uniform host drift moves the geometric
-    # mean ratio of ALL common queries without tripping per-query flags.
-    # sort by NUMERIC round (not lexicographic) so an unpadded BENCH_r9.json
-    # or round >= 100 still picks the true newest artifact as baseline
-    def _round_no(path: str) -> int:
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    prev_art = sorted(
-        glob.glob(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")
-        ),
-        key=_round_no,
-    )
-    regression: dict[str, object] = {}
-    ratios: dict[str, float] = {}
-    norm_ratios: dict[str, float] = {}
-    if prev_art:
-        try:
-            # newest artifact whose JSON actually parsed: the driver artifact
-            # shape is {"parsed": {...the one-line JSON...}, ...} with
-            # parsed=null when the line overflowed its 2000-char stdout tail
-            # (BENCH_r02/r04); a bare local run is the line itself
-            prev_q: dict[str, float] = {}
-            baseline_name = None  # stays None unless a same-sf baseline parses
-            prev_drift = 1.0
-            for path in reversed(prev_art):
-                with open(path) as f:
-                    prev = json.load(f)
-                parsed = prev.get("parsed") or prev
-                # only compare same-scale runs: a cross-sf baseline would
-                # flag pure data-size effects as plan regressions
-                prev_sf = parsed.get("sf", prev.get("sf"))
-                if str(prev_sf) != str(sf_val):
-                    continue
-                prev_q = parsed.get("queries") or {}
-                if prev_q:
-                    baseline_name = os.path.basename(path)
-                    # the stdout line drops sub-0.5s queries (stdout-budget
-                    # trim, rounds 11/12), so a fast query that regresses
-                    # would otherwise lose its baseline and never flag —
-                    # backfill MISSING entries from the committed detail
-                    # sidecar's full-precision queries_best, but ONLY when
-                    # the sidecar is provably from the SAME run as the
-                    # chosen baseline artifact: both carry a run_id since
-                    # round 12 and they must be equal. Every local bench run
-                    # overwrites bench_detail.json, so an sf-only guard
-                    # would happily backfill "baselines" from a newer
-                    # uncommitted run (ADVICE r11). Legacy pairs (both
-                    # pre-run_id, i.e. both None) still match.
-                    try:
-                        with open(detail_path) as f:
-                            det = json.load(f)
-                        if str(det.get("sf")) == str(sf_val) and det.get(
-                            "run_id"
-                        ) == parsed.get("run_id"):
-                            for n, v in (det.get("queries_best") or {}).items():
-                                prev_q.setdefault(n, v)
-                    except (OSError, ValueError):
-                        pass
-                    # the baseline's recorded drift (every artifact since
-                    # r10 carries one); an exact 0.0 is data, not absence
-                    drift = parsed.get("drift")
-                    prev_drift = 1.0 if drift is None else float(drift)
-                    break
-            common = sorted(set(prev_q) & set(results))
-            ratios = {
-                n: round(results[n] / prev_q[n], 3) for n in common if prev_q[n] > 0
-            }
-            # drift-normalized comparison, ONE-SIDED on each run: times are
-            # divided by max(drift, 1.0), so a LOADED box's inflation is
-            # removed but a probe reading "faster than reference" (probe
-            # noise, +/-10% between sessions) never inflates times into
-            # false flags. Host load can only slow queries down; a drift
-            # below 1 is measurement noise, not a speedup to correct for.
-            eff = max(cal_drift, 1.0)
-            prev_eff = max(prev_drift, 1.0)
-            norm_scale = prev_eff / eff
-            norm_ratios = {n: round(r * norm_scale, 3) for n, r in ratios.items()}
-            # flag = likely plan regression. Thresholds sized to this host's
-            # observed noise: back-to-back identical-code runs swing
-            # sub-second queries by 1.5-1.8x (+/-0.4s), so both a large
-            # NORMALIZED ratio AND a >0.5s normalized absolute delta are
-            # required.
-            flagged = {
-                n: r
-                for n, r in norm_ratios.items()
-                if r > 1.5 and results[n] / eff - prev_q[n] / prev_eff > 0.5
-            }
-            geomean = (
-                round(statistics.geometric_mean(norm_ratios.values()), 3)
-                if norm_ratios
-                else None
-            )
-            geomean_raw = (
-                round(statistics.geometric_mean(ratios.values()), 3) if ratios else None
-            )
-            regression = {
-                "vs": baseline_name,
-                "n": len(common),
-                "geomean": geomean,
-                "geomean_raw": geomean_raw,
-                "prev_drift": prev_drift,
-                "flagged": flagged,
-            }
-            # self-annotate: if the NORMALIZED field still drifted uniformly
-            # (load the probes missed, e.g. bursty competitors), per-query
-            # flags remain suspect — a real plan regression is an outlier
-            # against a stable field
-            if geomean and geomean > 1.25 and flagged:
-                regression["note"] = (
-                    "normalized geomean is uniformly elevated; flags may be "
-                    "residual host-load artifacts — re-run on an idle box "
-                    "before treating them as plan regressions"
-                )
-            print(
-                f"# regression vs {regression['vs']}: normalized geomean {geomean} "
-                f"(raw {geomean_raw}, prev_drift {prev_drift}x) over "
-                f"{len(common)} common queries, {len(flagged)} flagged"
-                + (
-                    " (uniform drift = host load, flagged outlier = plan regression)"
-                    if common
-                    else ""
-                ),
-                file=sys.stderr,
-            )
-        except (OSError, ValueError, KeyError, AttributeError) as exc:
-            regression = {"error": f"{type(exc).__name__}: {exc}"}
-
-    with open(detail_path, "w") as f:
+    # A BENCH artifact keeps only the LAST 2000 chars of stdout and parses
+    # the JSON line out of that window; a line that overflows it is recorded
+    # as parsed=null (BENCH_r02, BENCH_r04). So the stdout line stays compact,
+    # and per-query detail and the full regression table go to this sidecar.
+    with open(os.path.join(root, "bench_detail.json"), "w") as f:
         json.dump(
             {
                 "sf": sf_val,
                 "run_id": run_id,
-                "iterations": iterations,
-                "queries_best": results,  # full precision (stdout line is 2dp)
+                "iterations": {
+                    n: {"seconds": its, "stolen_share": stolen[n]}
+                    for n, its in iterations.items()
+                },
+                "queries_best": results,  # 3 dp (the stdout line rounds further)
                 "queries_cold": cold,
                 "queries_warm_median": warm,
                 "cold_total": round(sum(cold.values()), 4),
                 "warm_total": round(sum(warm.values()), 4),
-                "calibration": {
-                    "start": cal_start,
-                    "end": cal_end,
-                    "sec": cal_sec,
-                    "ref": CAL_REFERENCE,
-                    "cpu_drift": cpu_drift,
-                    "shuffle": {
-                        "start": shuf_start,
-                        "end": shuf_end,
-                        "sec": shuf_sec,
-                        "ref": SHUF_REFERENCE,
-                        "drift": shuf_drift,
-                        "probe": f"range({_SHUF_ROWS}) repartition(64, id%{_SHUF_KEYS})"
-                        " groupBy(k) sum/count, best-of-5",
-                    },
-                    "drift": cal_drift,
-                    "probe": f"range({_CAL_ROWS}) sum(id%97 + id%101), best-of-3"
-                    " | max(cpu, shuffle)",
-                },
-                "regression_ratios_vs_prev_raw": ratios,
-                "regression_ratios_vs_prev_normalized": norm_ratios,
                 "regression_summary": regression,
                 "failures": failures,
                 "codegen_compiles": compiles,
                 "context": {
                     "nproc": os.cpu_count(),
+                    "cpus": cpus,
                     "pyspark_version": pyspark.__version__,
                     "python_version": platform.python_version(),
                     "sf_dir": sf_dir,
@@ -540,11 +391,8 @@ def main() -> None:
             indent=1,
         )
 
-    # Stdout line carries SCALARS ONLY for the regression block: the driver
-    # parses the JSON out of the last 2000 chars of stdout, and an unbounded
-    # flagged-query dict + note can overflow that window (the BENCH_r02/r04
-    # parsed=null failure). The full flagged table and note live in
-    # bench_detail.json.
+    # The stdout line carries scalars only for the regression block; the
+    # flagged table, unbounded in size, lives in bench_detail.json.
     regression_compact = {
         k: regression[k]
         for k in ("geomean", "error")
@@ -552,17 +400,15 @@ def main() -> None:
     }
     if "flagged" in regression:
         regression_compact["flags"] = len(regression["flagged"])
-    # stdout budget (the 1900-char assert below): sub-0.5 s queries live in
-    # bench_detail.json ONLY (their stdout entries are ~23 chars each of
-    # pure noise — this host swings sub-second queries 1.5-1.8x between
-    # identical-code runs, so no 0.3-0.5 s entry can carry a trustworthy
-    # flag anyway; the run_id-guarded sidecar backfill keeps their
-    # regression baselines alive); remaining queries print 2dp under 1.0 s,
-    # 1dp at/above (quantization <= 5%, still far under the 1.5x flag
-    # threshold); "value" and n_queries still cover EVERY headliner;
-    # calibration carries ONLY the drift scalar the next round's comparator
-    # reads — bench_detail.json carries full-precision times for all
-    # queries + the full blocks. Measured r12: 72 headliners ≈ 1610 chars.
+    # stdout budget (the 1900-char assert below): queries under the 0.5 s
+    # cutoff live in bench_detail.json only. Their stdout entries are ~23
+    # chars each of noise: sub-second queries swing 1.5-1.8x between runs of
+    # the same code, so no 0.3-0.5 s entry can carry a trustworthy flag. The
+    # rest print 2 dp under 1.0 s and 1 dp above (quantization <= 5%, far
+    # under the 1.5x flag threshold). `n_below_cutoff` and
+    # `below_cutoff_sum_sec` count and sum the unprinted queries, so a query
+    # that got faster never reads as dropped from the bench; "value" and
+    # n_queries cover every query. 72 headliners measured about 1,610 chars.
     def _emit(cutoff: float) -> str:
         below = [v for v in results.values() if v < cutoff]
         return json.dumps(
@@ -577,29 +423,18 @@ def main() -> None:
                     for n, v in results.items()
                     if v >= cutoff
                 },
-                # additions-only (r14 VERDICT item 7): make the stdout
-                # record self-evidently complete — queries under the print
-                # cutoff are counted and summed here so a faster query can
-                # never read as "dropped from bench" (their full-precision
-                # times stay in bench_detail.json)
                 "n_below_cutoff": len(below),
                 "below_cutoff_sum_sec": round(sum(below), 2),
-                "drift": cal_drift,
+                "drift": drift,
                 "vs_prev": regression_compact,
                 "sf": sf_val,
             }
         )
 
-    # the driver parses the JSON line out of the LAST 2000 chars of stdout
-    # (BENCH_r02/r04 recorded parsed=null after overflowing it). The 0.5 s
-    # print cutoff normally keeps the line well under budget, but a
-    # host-degraded run pushes MORE queries over the cutoff (r14: a cold
-    # 1-iteration run hit 2,062 chars and the old assert crashed the whole
-    # bench, which would have lost the round's record entirely). Degrade
-    # gracefully instead: raise the cutoff in 0.1 s steps until the line
-    # fits — bench_detail.json always carries every query at full
-    # precision, so nothing is lost, and on a normal run the emitted line
-    # is byte-identical to the old behaviour.
+    # A host-degraded run pushes more queries over the 0.5 s print cutoff (a
+    # cold 1-iteration run has reached 2,062 chars). Rather than lose the
+    # run's record, raise the cutoff in 0.1 s steps until the line fits;
+    # bench_detail.json carries every query at full precision regardless.
     cutoff = 0.5
     line = _emit(cutoff)
     while len(line) >= 1900 and cutoff < 60.0:
