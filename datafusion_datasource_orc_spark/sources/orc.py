@@ -14,6 +14,11 @@ Re-expresses the reference's format layer on Spark's native ORC datasource:
   (src/writer.rs:18-23); Spark-native, with compression + partitioning,
   so this exceeds the reference.
 
+Codec: every writer here (and ``streaming.events.stream_to_orc``) writes with
+the session's ``spark.sql.orc.compression.codec`` (zstd, by ``get_spark`` and
+by Spark's own default) unless a caller passes ``compression``, which then
+wins for that write.
+
 Scale notes: registration is metadata-only (no data read besides footers);
 ``write_orc`` controls output file sizing via ``maxRecordsPerFile`` /
 repartition so a 100 TB write yields reader-friendly (~128-512 MB) files
@@ -183,7 +188,7 @@ def write_orc_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 8,
     sort_cols: list[str] | None = None,
-    compression: str = "snappy",
+    compression: str | None = None,
 ) -> None:
     """Bucketed + sorted ORC table — closes the reference's file-sort-order
     gap (with_file_sort_order, src/bin/tpcds_bench.rs:603-607, which SURVEY §4
@@ -191,12 +196,9 @@ def write_orc_bucketed(
     is a bucketed table, which additionally makes equi-joins on the bucket
     key shuffle-free. At 100 TB, bucketing both fact tables on the join key
     turns the nightly join from a full shuffle into a local zip per bucket."""
-    writer = (
-        df.write.mode("overwrite")
-        .format("orc")
-        .option("compression", compression)
-        .bucketBy(num_buckets, *bucket_cols)
-    )
+    writer = df.write.mode("overwrite").format("orc").bucketBy(num_buckets, *bucket_cols)
+    if compression:
+        writer = writer.option("compression", compression)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
@@ -207,7 +209,7 @@ def write_orc_clustered(
     path: str,
     cluster_cols: list[str],
     num_files: int = 8,
-    compression: str = "snappy",
+    compression: str | None = None,
 ) -> None:
     """Range-clustered ORC layout: repartitionByRange + sortWithinPartitions
     on the cluster key, one file per range.
@@ -221,32 +223,37 @@ def write_orc_clustered(
     within partitions additionally narrows every stripe's min/max, so
     stripe-level pruning composes with file-level.
     """
-    (
+    writer = (
         df.repartitionByRange(num_files, *cluster_cols)
         .sortWithinPartitions(*cluster_cols)
         .write.mode("overwrite")
-        .option("compression", compression)
-        .orc(path)
     )
+    if compression:
+        writer = writer.option("compression", compression)
+    writer.orc(path)
 
 
 def _hadoop_dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(data_file_count, total_bytes) for a directory via the Hadoop
     FileSystem API — storage-agnostic (file://, s3a://, gs://, abfs://),
     exactly the layer the reference's object_store reads sit on
-    (src/reader.rs:119-148). Hidden/_SUCCESS files excluded."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    (src/reader.rs:119-148). Descends into every directory; files named
+    ``_*`` or ``.*`` (_SUCCESS, .crc sidecars) are excluded.
+
+    Walks ``listStatus`` rather than ``listFiles``: each ``LocatedFileStatus``
+    that ``listFiles`` builds reads its file's permission, which the local
+    filesystem without libhadoop gets by forking ``ls -ld`` once per file."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
+    pending = [jpath]
     n = total = 0
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        n += 1
-        total += f.getLen()
+    while pending:
+        for status in fs.listStatus(pending.pop()):
+            if status.isDirectory():
+                pending.append(status.getPath())
+            elif not status.getPath().getName().startswith(("_", ".")):
+                n += 1
+                total += status.getLen()
     return n, total
 
 
@@ -255,7 +262,7 @@ def compact_orc(
     src_dir: str,
     dst_dir: str,
     target_file_bytes: int = 128 << 20,
-    compression: str = "snappy",
+    compression: str | None = None,
     shuffle: bool = False,
 ) -> dict:
     """Small-file compaction: rewrite an ORC directory into
@@ -270,13 +277,17 @@ def compact_orc(
     ``shuffle=False`` (default) uses coalesce — a narrow, shuffle-free merge
     of co-located small files (file counts may be slightly uneven);
     ``shuffle=True`` uses repartition for exactly even output at the cost of
-    a full exchange. Returns before/after stats.
+    a full exchange. The output is written with the session's ORC codec
+    unless ``compression`` names one. Returns before/after stats.
     """
     src_files, src_bytes = _hadoop_dir_stats(spark, src_dir)
     n_out = max(1, -(-src_bytes // target_file_bytes))
     df = spark.read.orc(src_dir)
     out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    out.write.mode("overwrite").option("compression", compression).orc(dst_dir)
+    writer = out.write.mode("overwrite")
+    if compression:
+        writer = writer.option("compression", compression)
+    writer.orc(dst_dir)
     dst_files, dst_bytes = _hadoop_dir_stats(spark, dst_dir)
     return {
         "src_files": src_files,
@@ -290,7 +301,7 @@ def compact_orc(
 def write_orc(
     df: DataFrame,
     path: str,
-    compression: str = "snappy",
+    compression: str | None = None,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     target_file_rows: int | None = None,
@@ -305,7 +316,9 @@ def write_orc(
     """
     if coalesce:
         df = df.coalesce(coalesce)
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode(mode)
+    if compression:
+        writer = writer.option("compression", compression)
     if target_file_rows:
         writer = writer.option("maxRecordsPerFile", str(target_file_rows))
     if partition_by:

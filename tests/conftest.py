@@ -20,6 +20,29 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def process_starts(spark, tmp_path):
+    """``count(fn)``: how many processes the session's JVM starts while
+    ``fn()`` runs, from a JFR recording with only ``jdk.ProcessStart``
+    enabled. Every start in the JVM counts, whichever thread makes it."""
+    jvm = spark._jvm
+
+    def count(fn) -> int:
+        dump = jvm.java.io.File(str(tmp_path / "process_starts.jfr")).toPath()
+        recording = jvm.jdk.jfr.Recording()
+        try:
+            recording.enable("jdk.ProcessStart")
+            recording.start()
+            fn()
+            recording.stop()
+            recording.dump(dump)
+        finally:
+            recording.close()
+        return jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump).size()
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -5,7 +5,10 @@ error paths + config behavior (tests/basic_reading.rs:450-606), writer."""
 from __future__ import annotations
 
 import os
+from collections import Counter
+from urllib.parse import unquote, urlparse
 
+import pyarrow.orc as porc
 import pytest
 
 from datafusion_datasource_orc_spark.sources import (
@@ -216,10 +219,8 @@ class TestWriter:
         assert stats["dst_files"] == 1  # everything fits one 1 GiB target
         back = spark.read.orc(compacted)
         assert back.count() == df.count()
-        # content-preserving: same multiset of keys
-        a = sorted(r.o_orderkey for r in back.select("o_orderkey").collect())
-        b = sorted(r.o_orderkey for r in df.select("o_orderkey").collect())
-        assert a == b
+        # content-preserving: same multiset of full rows
+        assert Counter(back.collect()) == Counter(df.collect())
 
     def test_compact_orc_even_with_shuffle(self, spark, sf_dir, tmp_path):
         from datafusion_datasource_orc_spark.sources.orc import compact_orc
@@ -237,6 +238,111 @@ class TestWriter:
         )
         assert stats["dst_files"] == 2
         assert spark.read.orc(out).count() == df.count()
+
+    def test_dir_stats_list_without_starting_processes(
+        self, spark, tmp_path, process_starts
+    ):
+        """The compaction listing starts no process: through ``listFiles``
+        the local filesystem forked ``ls -ld`` once per file and directory
+        (19 here). The counts equal a Python walk, through partition
+        directories."""
+        from pyspark.sql import functions as F
+
+        from datafusion_datasource_orc_spark.sources.orc import _hadoop_dir_stats
+
+        out = str(tmp_path / "sixteen")
+        df = spark.range(1600).withColumn("p", F.col("id") % 2)
+        write_orc(df, out, partition_by=["p"], target_file_rows=100, coalesce=1)
+        files = [
+            os.path.join(d, f)
+            for d, _, names in os.walk(out)
+            for f in names
+            if not f.startswith(("_", "."))
+        ]
+        assert process_starts(lambda: _hadoop_dir_stats(spark, out)) == 0
+        assert _hadoop_dir_stats(spark, out) == (16, sum(os.path.getsize(f) for f in files))
+        assert len(files) == 16
+
+    @pytest.mark.parametrize(
+        "conf, kwargs, codec",
+        [(None, {}, "ZSTD"), ("zlib", {}, "ZLIB"), ("zlib", {"compression": "lz4"}, "LZ4")],
+        ids=["session_default", "session_conf", "explicit_wins"],
+    )
+    @pytest.mark.parametrize(
+        "writer",
+        ["write_orc", "compact_orc", "write_orc_clustered", "write_orc_bucketed", "stream_to_orc"],
+    )
+    def test_writers_follow_session_codec(
+        self, spark, sf_dir, tmp_path, writer, conf, kwargs, codec
+    ):
+        """Every ORC writer writes with ``spark.sql.orc.compression.codec``
+        (zstd from ``get_spark``) unless the caller names a codec."""
+        key = "spark.sql.orc.compression.codec"
+        prev = spark.conf.get(key)
+        if conf:
+            spark.conf.set(key, conf)
+        try:
+            files = _WRITERS[writer](spark, load_table(spark, sf_dir, "nation"), tmp_path, kwargs)
+            codecs = {porc.ORCFile(unquote(urlparse(f).path)).compression for f in files}
+        finally:
+            spark.conf.set(key, prev)
+            spark.sql("DROP TABLE IF EXISTS codec_bucketed")
+        assert files
+        assert codecs == {codec}
+
+
+def _compacted(spark, df, tmp_path, kwargs):
+    from datafusion_datasource_orc_spark.sources.orc import compact_orc
+
+    src, out = str(tmp_path / "shards"), str(tmp_path / "out")
+    write_orc(df.repartition(4), src, compression="none")
+    compact_orc(spark, src, out, **kwargs)
+    return spark.read.orc(out).inputFiles()
+
+
+def _written(spark, df, tmp_path, kwargs):
+    out = str(tmp_path / "out")
+    write_orc(df, out, **kwargs)
+    return spark.read.orc(out).inputFiles()
+
+
+def _clustered(spark, df, tmp_path, kwargs):
+    from datafusion_datasource_orc_spark.sources.orc import write_orc_clustered
+
+    out = str(tmp_path / "out")
+    write_orc_clustered(df, out, ["n_nationkey"], num_files=2, **kwargs)
+    return spark.read.orc(out).inputFiles()
+
+
+def _bucketed(spark, df, tmp_path, kwargs):
+    import shutil
+
+    from datafusion_datasource_orc_spark.sources.orc import write_orc_bucketed
+
+    # stale-location guard, as in test_planning's bucketed join
+    spark.sql("DROP TABLE IF EXISTS codec_bucketed")
+    shutil.rmtree("spark-warehouse/codec_bucketed", ignore_errors=True)
+    write_orc_bucketed(df, "codec_bucketed", ["n_nationkey"], 2, **kwargs)
+    return spark.table("codec_bucketed").inputFiles()
+
+
+def _streamed(spark, df, tmp_path, kwargs):
+    from datafusion_datasource_orc_spark.streaming.events import stream_to_orc
+
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    stream_to_orc(stream, out, str(tmp_path / "ckpt"), "codec_sink", **kwargs).awaitTermination()
+    return spark.read.orc(out).inputFiles()
+
+
+_WRITERS = {
+    "write_orc": _written,
+    "compact_orc": _compacted,
+    "write_orc_clustered": _clustered,
+    "write_orc_bucketed": _bucketed,
+    "stream_to_orc": _streamed,
+}
 
 
 class TestListingOptions:
