@@ -1,14 +1,13 @@
 """Materialized span-hash index for INCREMENTAL substring-dedup coverage —
-the 100 TB form of ``dedup_substring_spans`` (judge r10 task 2, the
-triage_index build/append/probe precedent applied to the Lee et al. 2022
-span signal).
+the 100 TB form of ``dedup_substring_spans`` (the triage_index
+build/append/probe shape applied to the Lee et al. 2022 span signal).
 
 The batch form re-spans the ENTIRE corpus per run: at 100 TB that is a
 full-corpus tokenize + explode per crawl batch — the same linear-per-batch
-cost round 10 killed for ingest triage. This module persists the existing
-corpus's span statistics ONCE as one compact ORC table and computes each
-incoming batch's duplicated-token coverage against it, so per-batch work is
-dominated by the batch:
+cost triage_index avoids for ingest triage. This module persists the
+existing corpus's span statistics ONCE as one compact ORC table and computes
+each incoming batch's duplicated-token coverage against it, so per-batch
+work is dominated by the batch:
 
 - ``spans/`` (h, df)   per-span-hash DISTINCT-document counts, directory-
                        partitioned by ``hb = int(h[:2], 16) % 32`` (the
@@ -36,8 +35,8 @@ Appends: ``append_to_span_index`` writes an admitted batch's (h, df) rows
 under a ``seg=<label>`` subtree with overwrite mode — replaying a batch
 after a mid-batch failure rewrites the same directories instead of
 inflating df (the overwrite-by-segment idempotence discipline of
-triage_index), pinned by a forced double-apply test in
-tests/test_round11_ops.py.
+triage_index), pinned by a forced double-apply test
+(``test_append_is_idempotent_under_replay``).
 
 Scale shape per batch: one batch scan (tokenize + explode spans, batch-
 sized), one map-side-combinable groupBy on the batch's span hashes, one
@@ -51,9 +50,7 @@ text is never re-read, never re-tokenized.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,17 +69,7 @@ from datafusion_datasource_orc_spark.operators.substring import (
     span_coverage,
     span_manifest,
 )
-from datafusion_datasource_orc_spark.sources.tables import load_table
-
-_INDEX_ROOT: str | None = None
-_INDEX_CACHE: dict[str, str] = {}  # abspath(sf_dir) -> built index dir
-
-
-def _index_root() -> str:
-    global _INDEX_ROOT
-    if _INDEX_ROOT is None:
-        _INDEX_ROOT = tempfile.mkdtemp(prefix="span_index_")
-    return _INDEX_ROOT
+from datafusion_datasource_orc_spark.sources.tables import load_table, materialized_dir
 
 
 def _span_df(docs: DataFrame) -> DataFrame:
@@ -207,21 +194,13 @@ def span_coverage_incremental(
 
 
 def span_index_dir_for(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process) the span index for ``sf_dir``'s existing
-    split — amortized across every batch in the process, exactly as the
-    production index amortizes across crawl batches. The directory name
-    carries an abspath hash so same-basename corpora cannot clobber each
-    other (the triage index_dir_for precedent)."""
-    key = os.path.abspath(sf_dir)
-    path = _INDEX_CACHE.get(key)
-    if path and os.path.isdir(path):
-        return path
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = hashlib.md5(key.encode()).hexdigest()[:8]
-    path = os.path.join(_index_root(), f"{sf_tag}_{tag}")
-    build_span_index(spark, sf_dir, path)
-    _INDEX_CACHE[key] = path
-    return path
+    """Build (once per process, ``materialized_dir``) the span index for
+    ``sf_dir``'s existing split — amortized across every batch in the
+    process, exactly as the production index amortizes across crawl
+    batches."""
+    return materialized_dir(
+        sf_dir, "span_index", lambda path: build_span_index(spark, sf_dir, path)
+    )
 
 
 @query(

@@ -53,14 +53,11 @@ partial, the q98 window partitions by i_class.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_datasource_orc_spark.operators.registry import query
-from datafusion_datasource_orc_spark.sources.tables import load_table
+from datafusion_datasource_orc_spark.sources.tables import load_table, materialized_dir
 
 _EPOCH = "1990-01-01"  # d_date_sk = days since this epoch
 _STATES = ("TN", "SD", "AL", "GA", "KY")  # s_state ring over nationkey % 5
@@ -948,48 +945,27 @@ _TPCDS_TABLES = {
 }
 
 
-# Materialized star schema (round 5): the reference's harness never derives
-# its tables at query time — scripts/convert_tpcds_to_orc.py materializes the
-# star schema to ORC once and tpcds_bench registers the FILES
-# (src/bin/tpcds_bench.rs:590-614). Mirroring that, each derived table is
-# written to ORC once per (process, sf_dir) and queries scan the files: the
-# per-query cost of re-deriving facts from lineitem/orders disappears
+# Materialized star schema: the reference's harness never derives its tables
+# at query time — scripts/convert_tpcds_to_orc.py materializes the star
+# schema to ORC once and tpcds_bench registers the FILES
+# (src/bin/tpcds_bench.rs:590-614). Likewise each derived table is written
+# to ORC once per process (``materialized_dir``) and queries scan the files:
+# the per-query cost of re-deriving facts from lineitem/orders disappears
 # (tpcds_q14 warm: ~4.4s derived -> ~1.5-2.6s materialized at sf0.1), scans
 # get ORC pushdown/pruning, and the builders run exactly once per table.
-_MAT_ROOT: str | None = None
-_MAT_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _materialized_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    key = (os.path.abspath(sf_dir), name)
-    path = _MAT_CACHE.get(key)
-    if path and os.path.isdir(path):
-        return path
-    global _MAT_ROOT
-    if _MAT_ROOT is None:
-        _MAT_ROOT = tempfile.mkdtemp(prefix="tpcds_orc_")
-    # disk layout must be as unique as the cache key: two different dirs
-    # with the same basename (e.g. /a/sf0.1 and /b/sf0.1) must NOT share an
-    # output tree, or the second materialization would overwrite the first
-    # under the first's still-valid cache entry
-    import hashlib
-
-    tag = hashlib.md5(key[0].encode()).hexdigest()[:8]
-    sf_tag = (os.path.basename(os.path.normpath(sf_dir)) or "sf") + "_" + tag
-    path = os.path.join(_MAT_ROOT, sf_tag, name)
-    _TPCDS_TABLES[name](spark, sf_dir).write.mode("overwrite").orc(path)
-    _MAT_CACHE[key] = path
-    return path
-
-
 def _register_tpcds_views(
     spark: SparkSession, sf_dir: str, only: set[str] | None = None
 ) -> None:
     for name in _TPCDS_TABLES:
         if only is None or name in only:
-            spark.read.orc(
-                _materialized_path(spark, sf_dir, name)
-            ).createOrReplaceTempView(name)
+            path = materialized_dir(
+                sf_dir,
+                f"tpcds/{name}",
+                lambda out: _TPCDS_TABLES[name](spark, sf_dir)
+                .write.mode("overwrite")
+                .orc(out),
+            )
+            spark.read.orc(path).createOrReplaceTempView(name)
 
 
 # --------------------------------------------------------------- DuckDB side
@@ -5523,11 +5499,11 @@ _WRAPPED = {
 
 def _tpcds_query(name: str):
     # dependency scan over the SQL with single-quoted string literals
-    # stripped first (round-13 review): a bare \b-regex also matched
-    # channel LITERALS ('store channel' in q5/q76/q77/q80) and output
-    # aliases (q49's AS item), first-use materializing tables the query
-    # never scans — efficiency only, but a full table scan + ORC write
-    # per phantom dependency.
+    # stripped first: a bare \b-regex would also match channel LITERALS
+    # ('store channel' in q5/q76/q77/q80) and output aliases (q49's AS
+    # item), first-use materializing tables the query never scans —
+    # efficiency only, but a full table scan + ORC write per phantom
+    # dependency.
     _scan_sql = _re.sub(r"'[^']*'", "''", _WRAPPED[name])
     # aliases can also shadow table names (q49's `... AS item`): a genuine
     # table reference never follows AS, so blank the alias position too
@@ -5631,8 +5607,8 @@ _ORACLE_WRAPPED = {
     # zero (revenue 812925.95 / 50 = 16258.519 → 16258) while DuckDB's
     # decimal→INT cast rounds half away (→ 16259). revenue >= 0, so
     # trunc == Spark's cast; the Spark side runs the verbatim template.
-    # (Latent until round 12: the original parameter binding returned 0
-    # rows at the gate scale, so the divergence never had a row to bite.)
+    # The divergence needs a row to bite: a parameter binding that returns
+    # 0 rows at the gate scale would hide it.
     "tpcds_q54": _WRAPPED["tpcds_q54"].replace(
         "CAST((revenue / 50) AS INT)", "CAST(trunc(revenue / 50) AS INT)"
     ),
@@ -5746,8 +5722,8 @@ _oracle_nulls_first("tpcds_q14", "channel, i_brand_id, i_class_id, i_category_id
 # two engines' top-100 cuts are fully DISJOINT there (Spark NULLS FIRST
 # keeps the subtotal rows + the grand-total row that the wrapper's
 # post-LIMIT i_item_id guard then drops → 99 rows; DuckDB NULLS LAST keeps
-# 100 detail rows). Round-13 review finding, empirically confirmed on the
-# rehearsal slices; latent at the certified scales.
+# 100 detail rows). Confirmed on the rehearsal slices; latent at the
+# certified scales.
 _oracle_nulls_first("tpcds_q18", "ca_country, ca_state, ca_county, i_item_id")
 _oracle_nulls_first(
     "tpcds_q22",

@@ -1,5 +1,5 @@
 """Materialized LSH band index for INCREMENTAL ingest triage — the 100 TB
-form of ``ingest_triage`` (judge r09 task 2).
+form of ``ingest_triage``.
 
 The batch form (operators.ingest_triage.triage_against) re-shingles the
 ENTIRE existing corpus per run — at 100 TB that is a full-corpus scan per
@@ -46,18 +46,17 @@ exactly as stored-existing + incoming-batch counts), same best-match
 window. The registered query ``ingest_triage_incremental`` therefore
 shares ``ingest_triage``'s oracle verbatim.
 
-Appends (judge r09 task 6): ``append_to_index`` writes a batch's postings
-for all four tables under a ``seg=<label>`` subtree with overwrite mode —
-replaying the same batch after a mid-batch failure rewrites the same
-directories instead of duplicating rows (the overwrite-by-batch-id
-discipline the streaming twin's manifest sink already uses), pinned by
-tests/test_round10_ops.py with a forced double-apply.
+Appends: ``append_to_index`` writes a batch's postings for all four tables
+under a ``seg=<label>`` subtree with overwrite mode — replaying the same
+batch after a mid-batch failure rewrites the same directories instead of
+duplicating rows (the overwrite-by-batch-id discipline the streaming twin's
+manifest sink already uses), pinned by a forced double-apply test
+(``test_append_is_idempotent_under_replay``).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,19 +71,9 @@ from datafusion_datasource_orc_spark.operators.dedup import (
     checkpointed_shingles,
 )
 from datafusion_datasource_orc_spark.operators.registry import ORACLES, query
-from datafusion_datasource_orc_spark.sources.tables import load_table
+from datafusion_datasource_orc_spark.sources.tables import load_table, materialized_dir
 
 N_PB = 32  # directory-partition fanout for the DPP-prunable fetch tables
-
-_INDEX_ROOT: str | None = None
-_INDEX_CACHE: dict[str, str] = {}  # abs(sf_dir) -> built index dir
-
-
-def _index_root() -> str:
-    global _INDEX_ROOT
-    if _INDEX_ROOT is None:
-        _INDEX_ROOT = tempfile.mkdtemp(prefix="triage_index_")
-    return _INDEX_ROOT
 
 
 def _hb(h: Column) -> Column:
@@ -256,10 +245,9 @@ def triage_incremental(
 
     # ---- near tier: shingle ONLY the batch, band-join the index ----
     # widen=False: this is the per-batch probe path — the width probe +
-    # conditional repartition cost ~1.9x warm floor per invocation (r11
-    # regression, judge-confirmed); a batch is small enough to shingle at
-    # its scan width, and callers with genuinely narrow huge batches
-    # pre-repartition once before probing.
+    # conditional repartition costs ~1.9x the warm floor per invocation; a
+    # batch is small enough to shingle at its scan width, and callers with
+    # genuinely narrow huge batches pre-repartition once before probing.
     sh_inc = checkpointed_shingles(incoming, widen=False)
     inc_bands = minhash_bands(sh_inc)
     ex_bands = _read(spark, index_dir, "bands", ["band", "bh", "e_id"])
@@ -366,25 +354,13 @@ def triage_incremental(
 
 
 def index_dir_for(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process) the triage index for ``sf_dir``'s existing
-    split and return its directory — the tpcds-materialization precedent:
-    amortized across every incremental query/batch in the process, exactly
-    as the production index amortizes across crawl batches."""
-    import hashlib
-
-    key = os.path.abspath(sf_dir)
-    path = _INDEX_CACHE.get(key)
-    if path and os.path.isdir(path):
-        return path
-    # abspath hash in the directory name (the stage_ingest_dir precedent):
-    # two corpora sharing a basename must never build into — and silently
-    # clobber — the same index directory
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = hashlib.md5(key.encode()).hexdigest()[:8]
-    path = os.path.join(_index_root(), f"{sf_tag}_{tag}")
-    build_triage_index(spark, sf_dir, path)
-    _INDEX_CACHE[key] = path
-    return path
+    """Build (once per process, ``materialized_dir``) the triage index for
+    ``sf_dir``'s existing split and return its directory — amortized across
+    every incremental query/batch in the process, exactly as the production
+    index amortizes across crawl batches."""
+    return materialized_dir(
+        sf_dir, "triage_index", lambda path: build_triage_index(spark, sf_dir, path)
+    )
 
 
 @query("ingest_triage_incremental", oracle=ORACLES["ingest_triage"])
@@ -396,16 +372,14 @@ def ingest_triage_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate therefore certifies the index path end-to-end: build, band join,
     ubiquity recomposition, verify, fold.
 
-    Cost-parity probe (r15, VERDICT r14 item 8 — the bench read both twins
-    at ~1.8 s at sf0.1 and the judge asked whether the index buys anything
-    beyond session overhead): same-session labelled A/B with the noop
-    sink, 5 warm iters each, index pre-built. sf0.1: full-rebuild 2.29 s
-    best vs incremental 1.81 s (-21%); 10× disjoint-shard slice
-    (tools/make_scale_slice.py): 7.45 s vs 4.80 s (-36%). The saving is
-    real and GROWS with the existing/batch ratio — the probe path never
-    re-shingles the existing corpus (the full twin's dominant term) — and
-    the near-parity bench reading at sf0.1 is the ~0.2-0.4 s/query session
-    fixed cost plus this box's noise, not a re-banding bug."""
+    Cost against the full twin, same session, noop sink, 5 warm iterations
+    each, index pre-built: sf0.1 full-rebuild 2.29 s best vs incremental
+    1.81 s (-21%); 10× disjoint-shard slice (tools/make_scale_slice.py)
+    7.45 s vs 4.80 s (-36%). The saving GROWS with the existing/batch
+    ratio, because the probe path never re-shingles the existing corpus
+    (the full twin's dominant term). The bench reads both twins near 1.8 s
+    at sf0.1; that near-parity is per-query fixed cost plus host noise, not
+    a re-banding bug."""
     incoming = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())

@@ -6,16 +6,23 @@ so connector-surface queries first materialize each table as ORC
 (``df.write.orc``) and re-read it — the exact flow of the reference's data
 prep scripts (scripts/convert_tpcds_to_orc.py:61-83: parquet → ORC per table).
 
-Materialization is cached per (sf_dir, table) under a process-local temp root,
-so repeated queries in one session pay the conversion once. Everything after
-the write is a plain ORC listing-table scan, identical to registering the
-directory in the reference (src/bin/tpcds_bench.rs:590-614).
+``materialized_dir`` is the one per-process cache for every derived ORC
+directory: the fixture tables and layouts here, the ingest staging batch,
+the span and triage indexes, and the TPC-DS star schema. Each is built once
+per (sf_dir, name) under one temp root, so repeated queries in a process pay
+the conversion once, and the root is removed at interpreter exit. Everything
+after the write is a plain ORC listing-table scan, identical to registering
+the directory in the reference (src/bin/tpcds_bench.rs:590-614).
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,8 +39,9 @@ TABLES = (
     "embeddings",
 )
 
-_ORC_CACHE: dict[tuple[str, str], str] = {}
-_ORC_ROOT: str | None = None
+# materialized_dir's cache: (abspath(sf_dir), name) -> built directory
+_MATERIALIZED: dict[tuple[str, str], str] = {}
+_MATERIALIZED_ROOT: str | None = None
 
 # DataFrame (lazy plan) cache per session: spark.read.parquet re-reads the
 # footer schema on every call, which dominates derived-view registration
@@ -126,35 +134,50 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-def _orc_root() -> str:
-    global _ORC_ROOT
-    if _ORC_ROOT is None:
-        _ORC_ROOT = tempfile.mkdtemp(prefix="orc_tables_")
-    return _ORC_ROOT
+def materialized_dir(sf_dir: str, name: str, build: Callable[[str], object]) -> str:
+    """The directory holding derived data ``name`` of ``sf_dir``, built once
+    per process: ``build(path)`` fills the directory, created beforehand, on
+    the first call and again only if the directory has disappeared since.
+
+    ``name`` is namespaced by kind (``orc/customer``, ``tpcds/customer``,
+    ``chunked/orders/o_orderkey/4``, ``triage_index``), so derived data of
+    different kinds never shares a key. Its directory is one path component,
+    the name with ``/`` written as ``.``, so no directory nests inside
+    another's (``bloom/orders/o_orderkey/4/1000`` and its extra-column
+    variant are siblings). It sits under ``<sf_dir basename>_<md5 of
+    abspath(sf_dir)>``, so two corpora with the same basename never write
+    into, and then serve, each other's files. The temp root holding every
+    directory is removed at interpreter exit."""
+    global _MATERIALIZED_ROOT
+    key = (os.path.abspath(sf_dir), name)
+    path = _MATERIALIZED.get(key)
+    if path and os.path.isdir(path):
+        return path
+    if _MATERIALIZED_ROOT is None:
+        _MATERIALIZED_ROOT = tempfile.mkdtemp(prefix="orc_materialized_")
+        atexit.register(shutil.rmtree, _MATERIALIZED_ROOT, ignore_errors=True)
+    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    digest = hashlib.md5(key[0].encode()).hexdigest()[:8]
+    path = os.path.join(
+        _MATERIALIZED_ROOT, f"{sf_tag}_{digest}", name.replace("/", ".")
+    )
+    os.makedirs(path, exist_ok=True)
+    build(path)
+    _MATERIALIZED[key] = path
+    return path
 
 
 def orc_dir_for(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Materialize (once per process) a testdata table as an ORC directory and
-    return its path. Subsequent calls are cache hits."""
-    import hashlib
-
-    key = (os.path.abspath(sf_dir), name)
-    path = _ORC_CACHE.get(key)
-    if path and os.path.isdir(path):
-        return path
-    # abspath tag (the orc_chunked_dir_for precedent): two sf_dirs sharing
-    # a basename must never write into — and silently serve — the same dir
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(_orc_root(), f"{sf_tag}_{tag}", name)
-    (
-        load_table(spark, sf_dir, name)
+    """A testdata table as an ORC directory, written by Spark once per
+    process (``materialized_dir``)."""
+    return materialized_dir(
+        sf_dir,
+        f"orc/{name}",
+        lambda path: load_table(spark, sf_dir, name)
         .write.mode("overwrite")
         .option("compression", "snappy")
-        .orc(path)
+        .orc(path),
     )
-    _ORC_CACHE[key] = path
-    return path
 
 
 def load_orc_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -162,35 +185,23 @@ def load_orc_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.orc(orc_dir_for(spark, sf_dir, name))
 
 
-def orc_chunked_dir_for(
-    sf_dir: str, name: str, key: str, nchunks: int = 4
-) -> str:
-    """A DETERMINISTIC-layout ORC directory: ``nchunks`` files named
-    chunk-<k>.orc, file k holding exactly the rows where ``key % nchunks
-    == k``. Written with pyarrow (not Spark) so file names AND per-file
-    row assignment are reproducible — which is what makes per-file facts
-    (orcmeta's num_rows for one named file) oracle-checkable: the DuckDB
-    twin recomputes a chunk's content from the SAME modulo rule instead of
-    guessing writer parallelism. Cached per (sf_dir, table, key, n)."""
+def _write_key_chunks(
+    sf_dir: str,
+    name: str,
+    key: str,
+    nchunks: int,
+    path: str,
+    sort: bool = False,
+    **options,
+) -> list[str]:
+    """Write ``nchunks`` files chunk-<k>.orc into ``path``, file k holding
+    exactly the rows of ``name`` where ``key % nchunks == k`` (sorted by
+    ``key`` when ``sort``), with pyarrow's writer and ``options``. Returns
+    the file paths in chunk order."""
     import pyarrow.compute as pc
     import pyarrow.orc as porc
     import pyarrow.parquet as pq
 
-    cache_key = (os.path.abspath(sf_dir), f"{name}#chunked:{key}:{nchunks}")
-    path = _ORC_CACHE.get(cache_key)
-    if path and os.path.isdir(path):
-        return path
-    import hashlib
-
-    # directory name carries key+nchunks (like the cache key) so variant
-    # layouts never overwrite each other, plus an sf_dir-abspath hash so
-    # two sf_dirs sharing a basename (sf_tag) can never collide either
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        _orc_root(), sf_tag, f"{name}_chunked_{key}_{nchunks}_{tag}"
-    )
-    os.makedirs(path, exist_ok=True)
     table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
     # mask == modulo only holds for power-of-two nchunks AND non-negative
     # keys (two's-complement masking of a negative key disagrees with SQL
@@ -212,14 +223,32 @@ def orc_chunked_dir_for(
         f"bit_wise_and layout would disagree with the oracle's % contract"
     )
     bucket = pc.cast(pc.bit_wise_and(table.column(key), nchunks - 1), "int64")
+    outs = []
     for k in range(nchunks):
-        porc.write_table(
-            table.filter(pc.equal(bucket, k)),
-            os.path.join(path, f"chunk-{k}.orc"),
-            compression="snappy",
-        )
-    _ORC_CACHE[cache_key] = path
-    return path
+        chunk = table.filter(pc.equal(bucket, k))
+        if sort:
+            chunk = chunk.sort_by(key)
+        out = os.path.join(path, f"chunk-{k}.orc")
+        porc.write_table(chunk, out, compression="snappy", **options)
+        outs.append(out)
+    return outs
+
+
+def orc_chunked_dir_for(
+    sf_dir: str, name: str, key: str, nchunks: int = 4
+) -> str:
+    """A DETERMINISTIC-layout ORC directory: ``nchunks`` files named
+    chunk-<k>.orc, file k holding exactly the rows where ``key % nchunks
+    == k``. Written with pyarrow (not Spark) so file names AND per-file
+    row assignment are reproducible — which is what makes per-file facts
+    (orcmeta's num_rows for one named file) oracle-checkable: the DuckDB
+    twin recomputes a chunk's content from the SAME modulo rule instead of
+    guessing writer parallelism."""
+    return materialized_dir(
+        sf_dir,
+        f"chunked/{name}/{key}/{nchunks}",
+        lambda path: _write_key_chunks(sf_dir, name, key, nchunks, path),
+    )
 
 
 BLOOM_STRIDE = 1000  # row_index_stride for the bloom-indexed layout
@@ -242,62 +271,33 @@ def orc_bloom_dir_for(
     rank g*stride..(g+1)*stride-1 of {key % nchunks == k} ordered by key —
     arithmetic both engines reproduce. Each chunk must land in ONE stripe
     (asserted loudly) so group numbering never restarts mid-file."""
-    import pyarrow.compute as pc
     import pyarrow.orc as porc
     import pyarrow.parquet as pq
 
-    cache_key = (
-        os.path.abspath(sf_dir),
-        f"{name}#bloom:{key}:{nchunks}:{stride}:{','.join(extra_bloom)}",
-    )
-    path = _ORC_CACHE.get(cache_key)
-    if path and os.path.isdir(path):
-        return path
-    import hashlib
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + ",".join(extra_bloom)).encode()
-    ).hexdigest()[:8]
-    path = os.path.join(
-        _orc_root(), sf_tag, f"{name}_bloom_{key}_{nchunks}_{stride}_{tag}"
-    )
-    os.makedirs(path, exist_ok=True)
-    table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
-    assert nchunks & (nchunks - 1) == 0, "nchunks must be a power of two"
-    # NULL keys silently vanish from every chunk (see orc_chunked_dir_for)
-    assert table.column(key).null_count == 0, (
-        f"bloom chunk key {name}.{key} has NULLs; NULL-keyed rows would be "
-        f"silently excluded from every chunk file"
-    )
-    key_min = pc.min(table.column(key)).as_py()
-    assert key_min is None or key_min >= 0, (
-        f"bloom chunk key {name}.{key} has negative values (min={key_min})"
-    )
-    bucket = pc.cast(pc.bit_wise_and(table.column(key), nchunks - 1), "int64")
-    # flattened ORC type ids: root struct is 0, column j is j+1
-    bloom_ids = [
-        table.schema.get_field_index(c) + 1 for c in (key, *extra_bloom)
-    ]
-    for k in range(nchunks):
-        chunk = table.filter(pc.equal(bucket, k)).sort_by(key)
-        out = os.path.join(path, f"chunk-{k}.orc")
-        porc.write_table(
-            chunk,
-            out,
-            compression="snappy",
+    def build(path: str) -> None:
+        schema = pq.read_schema(os.path.join(sf_dir, f"{name}.parquet"))
+        # flattened ORC type ids: root struct is 0, column j is j+1
+        bloom_ids = [schema.get_field_index(c) + 1 for c in (key, *extra_bloom)]
+        for out in _write_key_chunks(
+            sf_dir,
+            name,
+            key,
+            nchunks,
+            path,
+            sort=True,
             row_index_stride=stride,
             bloom_filter_columns=bloom_ids,
             bloom_filter_fpp=0.01,
-        )
-        nstripes = porc.ORCFile(out).nstripes
-        assert nstripes <= 1, (
-            f"bloom layout chunk {out} spans {nstripes} stripes; group "
-            f"numbering would restart mid-file and break the oracle's rank "
-            f"arithmetic — shrink the source or raise stripe_size"
-        )
-    _ORC_CACHE[cache_key] = path
-    return path
+        ):
+            nstripes = porc.ORCFile(out).nstripes
+            assert nstripes <= 1, (
+                f"bloom layout chunk {out} spans {nstripes} stripes; group "
+                f"numbering would restart mid-file and break the oracle's rank "
+                f"arithmetic — shrink the source or raise stripe_size"
+            )
+
+    variant = "/".join((name, key, str(nchunks), str(stride), *extra_bloom))
+    return materialized_dir(sf_dir, f"bloom/{variant}", build)
 
 
 # Columns materialized for the encoding-stats layout: three low-cardinality
@@ -318,33 +318,23 @@ def orc_encoding_dir_for(sf_dir: str, name: str = "lineitem") -> str:
     import pyarrow.orc as porc
     import pyarrow.parquet as pq
 
-    import hashlib
+    def build(path: str) -> None:
+        table = pq.read_table(
+            os.path.join(sf_dir, f"{name}.parquet"), columns=list(ENCODING_COLUMNS)
+        )
+        for tag, thr in (("direct", 0.0), ("dict", 1.0)):
+            out = os.path.join(path, f"{tag}.orc")
+            porc.write_table(
+                table,
+                out,
+                compression="snappy",
+                dictionary_key_size_threshold=thr,
+                stripe_size=512 * 1024 * 1024,
+            )
+            nstripes = porc.ORCFile(out).nstripes
+            assert nstripes == 1, (
+                f"encoding layout {out} spans {nstripes} stripes; dictionarySize "
+                "would be per-stripe, not per-file — raise stripe_size"
+            )
 
-    cache_key = (os.path.abspath(sf_dir), f"{name}#encodings")
-    path = _ORC_CACHE.get(cache_key)
-    if path and os.path.isdir(path):
-        return path
-    # abspath tag: same-basename corpora must not share the directory
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    dtag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(_orc_root(), f"{sf_tag}_{dtag}", f"{name}_encodings")
-    os.makedirs(path, exist_ok=True)
-    table = pq.read_table(
-        os.path.join(sf_dir, f"{name}.parquet"), columns=list(ENCODING_COLUMNS)
-    )
-    for tag, thr in (("direct", 0.0), ("dict", 1.0)):
-        out = os.path.join(path, f"{tag}.orc")
-        porc.write_table(
-            table,
-            out,
-            compression="snappy",
-            dictionary_key_size_threshold=thr,
-            stripe_size=512 * 1024 * 1024,
-        )
-        nstripes = porc.ORCFile(out).nstripes
-        assert nstripes == 1, (
-            f"encoding layout {out} spans {nstripes} stripes; dictionarySize "
-            "would be per-stripe, not per-file — raise stripe_size"
-        )
-    _ORC_CACHE[cache_key] = path
-    return path
+    return materialized_dir(sf_dir, f"encodings/{name}", build)

@@ -324,3 +324,92 @@ def test_every_registered_query_is_nontrivial_at_some_scale():
         f"{trivial} — extend the fixture (the multimodal_phash_neardup twin "
         "precedent) or tighten the query"
     )
+
+
+# The driver's own session: plain builder, hostile timezone, none of
+# get_spark's confs. Prints one JSON line: per query, the Spark and DuckDB
+# row counts, sorted column names and value hashes, plus the materialization
+# root and whether it existed before exit.
+_VANILLA_PROBE = """
+import json, os, sys
+
+import duckdb
+from pyspark.sql import SparkSession
+
+repo, sf_dir = sys.argv[1], sys.argv[2]
+sys.path[:0] = [repo, os.path.join(repo, "tools")]
+import __spark_entry__ as entrymod
+from check_oracles import value_hash
+from datafusion_datasource_orc_spark.sources import tables
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.sql.session.timeZone", "America/Los_Angeles")
+    .getOrCreate()
+)
+con = duckdb.connect()
+for t in tables.TABLES:
+    con.execute(
+        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+    )
+queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+
+
+def side(pdf):
+    rows = list(pdf.itertuples(index=False, name=None))
+    return [len(rows), sorted(pdf.columns), value_hash(rows, list(pdf.columns))]
+
+
+checks = {"entry": (entrymod.entry(spark), "orc_groupby_count")}
+for name in ("orc_file_metadata_pruned", "events_tumbling_window", "tpcds_q98"):
+    checks[name] = (queries[name](spark, sf_dir), name)
+out = {
+    name: [side(df.toPandas()), side(con.execute(oracles[oracle]).df())]
+    for name, (df, oracle) in checks.items()
+}
+root = tables._MATERIALIZED_ROOT
+out["root"] = [root, os.path.isdir(root)]
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_vanilla_session_driver_probe(tmp_path, sf_dir):
+    """The driver runs entry() and queries() in its own SparkSession, not
+    get_spark's. A child process builds one the way the driver does
+    (``local[2]``, session timezone America/Los_Angeles) and runs entry()
+    (the orc_groupby_count flagship at the default sf0.001 corpus), the
+    chunked-layout metadata query, the events table's tumbling window and a
+    TPC-DS query; each must value-hash-match its DuckDB oracle with rows.
+    The child's materialization root, under its TMPDIR, must be gone once
+    the child has exited."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", _VANILLA_PROBE, repo, sf_dir],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    root, existed = out.pop("root")
+    assert existed and os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root), "materialization root left behind at exit"
+    assert sorted(out) == sorted(
+        ["entry", "orc_file_metadata_pruned", "events_tumbling_window", "tpcds_q98"]
+    )
+    for name, (spark_side, oracle_side) in out.items():
+        assert spark_side[0] > 0, f"{name}: no rows"
+        assert spark_side == oracle_side, f"{name}: spark {spark_side} != oracle {oracle_side}"

@@ -345,6 +345,56 @@ _WRITERS = {
 }
 
 
+class TestMaterializedDir:
+    """``materialized_dir``, the one per-process cache behind every derived
+    ORC directory (fixture layouts, ingest staging, span/triage indexes,
+    the TPC-DS star schema), driven with a counting builder and no Spark."""
+
+    def test_builds_once_per_corpus_and_kind(self, tmp_path, monkeypatch):
+        import shutil
+
+        from datafusion_datasource_orc_spark.sources.tables import materialized_dir
+
+        built = []
+
+        def build(path):
+            assert os.path.isdir(path) and not os.listdir(path)
+            built.append(path)
+            with open(os.path.join(path, "part-0.orc"), "w") as f:
+                f.write(path)
+
+        a = str(tmp_path / "a" / "sf0.001")
+        b = str(tmp_path / "b" / "sf0.001")
+        orc_a = materialized_dir(a, "orc/customer", build)
+        # two corpora with the same basename never share a directory
+        orc_b = materialized_dir(b, "orc/customer", build)
+        # the same table name under two kinds never shares one either
+        tpcds_a = materialized_dir(a, "tpcds/customer", build)
+        # a variant name extending another's is a sibling, not a child
+        bloom = materialized_dir(a, "bloom/orders/o_orderkey/4/1000", build)
+        bloom_x = materialized_dir(
+            a, "bloom/orders/o_orderkey/4/1000/o_orderpriority", build
+        )
+        dirs = [orc_a, orc_b, tpcds_a, bloom, bloom_x]
+        assert built == dirs and len(set(dirs)) == len(dirs)
+        for d in dirs:
+            assert not any(o.startswith(d + os.sep) for o in dirs)
+            with open(os.path.join(d, "part-0.orc")) as f:
+                assert f.read() == d
+
+        # a hit does not build, under any spelling of the same corpus
+        monkeypatch.chdir(tmp_path)
+        assert materialized_dir(a, "orc/customer", build) == orc_a
+        assert materialized_dir("a/sf0.001/", "orc/customer", build) == orc_a
+        assert len(built) == len(dirs)
+
+        # a directory removed behind the cache's back is rebuilt in place
+        shutil.rmtree(orc_a)
+        assert materialized_dir(a, "orc/customer", build) == orc_a
+        assert built[-1] == orc_a and len(built) == len(dirs) + 1
+        assert os.listdir(orc_a) == ["part-0.orc"]
+
+
 class TestListingOptions:
     """ListingTableUrl parity (tpcds_bench.rs:592-614): glob-restricted and
     recursive directory listings."""

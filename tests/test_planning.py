@@ -303,22 +303,9 @@ class TestCteRuntimeReuse:
 class TestTpcdsMaterialization:
     """The derived star schema is materialized to ORC once per
     (process, sf_dir) — the reference's convert-then-register flow
-    (scripts/convert_tpcds_to_orc.py → tpcds_bench.rs:590-614)."""
-
-    def test_materialization_is_cached(self, spark, sf_dir):
-        import os
-
-        from datafusion_datasource_orc_spark.operators.tpcds import (
-            _materialized_path,
-        )
-
-        p1 = _materialized_path(spark, sf_dir, "date_dim")
-        mtime = os.path.getmtime(p1)
-        p2 = _materialized_path(spark, sf_dir, "date_dim")
-        assert p1 == p2
-        assert os.path.getmtime(p2) == mtime, "builder re-ran on a cache hit"
-        assert any(f.endswith(".orc") or f.startswith("part-")
-                   for f in os.listdir(p1))
+    (scripts/convert_tpcds_to_orc.py → tpcds_bench.rs:590-614). The
+    once-per-process cache itself is tested in
+    test_orc_source.py::TestMaterializedDir."""
 
     def test_materialized_view_matches_builder(self, spark, sf_dir):
         """ORC round-trip fidelity: the registered view returns exactly the
