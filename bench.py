@@ -14,7 +14,8 @@ warmup like criterion's sampling does), and prints ONE JSON line:
 Each query's time is its best iteration net of hypervisor steal (`best_of`),
 and `drift` is the whole run's steal factor, 1.0 when nothing was stolen.
 `vs_prev` compares the run with the newest committed BENCH_r*.json at the
-same scale factor and core count (`compare`), and is {} when there is none.
+same scale factor, core count and `host` (`compare`), and is {} when there
+is none; `host` is a short hash of the machine (`host_fingerprint`).
 
 An unknown query name exits non-zero before anything runs. A subset runs
 through the same path as the full set.
@@ -30,6 +31,7 @@ listed under `failures` in bench_detail.json.
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import platform
@@ -64,6 +66,26 @@ def _host_cpu() -> list[int]:
     """The machine's CPU time counters, in ticks, from ``/proc/stat``."""
     with open("/proc/stat") as f:
         return [int(x) for x in f.readline().split()[1:]]
+
+
+def host_fingerprint() -> str:
+    """A short hash of the machine: CPU model, ``os.cpu_count()`` and
+    MemTotal. Two machines with the same core count can time the same query
+    apart by more than the flag threshold, so a baseline must come from this
+    one."""
+
+    def field(path: str, key: str) -> str:
+        try:
+            with open(path) as f:
+                lines = [ln for ln in f if ln.startswith(key)]
+        except OSError:
+            return ""
+        return lines[0].split(":", 1)[1].strip() if lines else ""
+
+    cpu = field("/proc/cpuinfo", "model name")
+    mem = field("/proc/meminfo", "MemTotal")
+    raw = f"{cpu}|{os.cpu_count()}|{mem}"
+    return hashlib.sha256(raw.encode()).hexdigest()[:10]
 
 
 def stolen_share(before: list[int], after: list[int]) -> float:
@@ -248,17 +270,18 @@ def _round_no(path: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-def compare(results, sf, cpus, root) -> dict:
+def compare(results, sf, cpus, host, root) -> dict:
     """Compare per-query seconds with the newest ``BENCH_r*.json`` under
-    `root` that ran at the same scale factor and core count.
+    `root` that ran at the same scale factor and core count on the same
+    machine (`host`, from `host_fingerprint`).
 
     A committed artifact records a run: its top-level ``cpus`` and, under
     ``parsed``, the run's stdout line. One whose line did not parse
-    (``"parsed": null``), that has no ``cpus`` or no ``queries``, or that ran
-    at another ``sf`` or ``cpus`` is never a baseline: data size and core
-    count move query times without any change to the plan. Queries under the
-    stdout print cutoff are not in the line, so they are not compared. With
-    no baseline the result is ``{}``.
+    (``"parsed": null``), that has no ``cpus``, ``host`` or ``queries``, or
+    that ran at another ``sf``, ``cpus`` or ``host`` is never a baseline:
+    data size, core count and the machine move query times without any
+    change to the plan. Queries under the stdout print cutoff are not in the
+    line, so they are not compared. With no baseline the result is ``{}``.
 
     A query is flagged as a likely plan regression when it is more than 1.5x
     AND more than 0.5 s slower than the baseline: back-to-back runs of the
@@ -275,7 +298,12 @@ def compare(results, sf, cpus, root) -> dict:
             art = json.load(f)
         parsed = art.get("parsed") or {}
         prev = parsed.get("queries")
-        if prev and art.get("cpus") == cpus and str(parsed.get("sf")) == str(sf):
+        if (
+            prev
+            and art.get("cpus") == cpus
+            and str(parsed.get("sf")) == str(sf)
+            and parsed.get("host") == host
+        ):
             break
     else:
         return {}
@@ -308,6 +336,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench")
     cpus = spark.sparkContext.defaultParallelism
+    host = host_fingerprint()
     # stamped into both the stdout line and bench_detail.json, so a sidecar
     # can be told apart from another run's
     run_id = f"{int(time.time())}-{os.getpid()}"
@@ -340,7 +369,7 @@ def main() -> None:
 
     root = os.path.dirname(os.path.abspath(__file__))
     try:
-        regression = compare(results, sf_val, cpus, root)
+        regression = compare(results, sf_val, cpus, host, root)
     except (OSError, ValueError, AttributeError, TypeError) as exc:
         regression = {"error": f"{type(exc).__name__}: {exc}"}
     if "vs" in regression:
@@ -353,7 +382,7 @@ def main() -> None:
     else:
         print(
             f"# regression: {regression.get('error', 'no baseline')}"
-            f" (sf={sf_val}, cpus={cpus})",
+            f" (sf={sf_val}, cpus={cpus}, host={host})",
             file=sys.stderr,
         )
 
@@ -381,6 +410,7 @@ def main() -> None:
                 "context": {
                     "nproc": os.cpu_count(),
                     "cpus": cpus,
+                    "host": host,
                     "pyspark_version": pyspark.__version__,
                     "python_version": platform.python_version(),
                     "sf_dir": sf_dir,
@@ -428,6 +458,7 @@ def main() -> None:
                 "drift": drift,
                 "vs_prev": regression_compact,
                 "sf": sf_val,
+                "host": host,
             }
         )
 

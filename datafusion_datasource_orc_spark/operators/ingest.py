@@ -9,11 +9,11 @@ incremental-ingest filter), and the admitted remainder is what the
 exactly-once ORC sink appends (streaming/events.py stream_to_orc — the
 streaming twin lives in tests/test_streaming.py).
 
-At 100 TB the shapes hold: discovery reads file TAILS only (one task per
-file); the filter is ONE bit_or aggregate over the existing corpus
-broadcast at 16 KB to the probe side; the probe never shuffles the corpus;
-admission appends through the checkpointed file-sink manifest so a replayed
-batch never double-commits.
+At 100 TB the shapes hold: discovery reads file TAILS only, on the driver
+(``orcmeta.load``); the filter is ONE bit_or aggregate over
+the existing corpus broadcast at 16 KB to the probe side; the probe never
+shuffles the corpus; admission appends through the checkpointed file-sink
+manifest so a replayed batch never double-commits.
 
 The batch query is deterministic end to end because staging uses a
 pyarrow-written chunk layout (chunk-<k>.orc holds exactly the incoming
@@ -164,12 +164,10 @@ def ingest_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the staged data."""
     from datafusion_datasource_orc_spark.sources import orcmeta
 
-    orcmeta.register(spark)
     staging = stage_ingest_dir(sf_dir)
 
     manifest = (
-        spark.read.format("orcmeta")
-        .load(staging)
+        orcmeta.load(spark, staging)
         .select("file_name", F.col("num_rows").alias("n_staged"))
     )
 

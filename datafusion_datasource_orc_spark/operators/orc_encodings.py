@@ -16,9 +16,8 @@ dictionarySize = the stripe's exact distinct count). The DuckDB twin pins
 the kinds as literals and the dictionary sizes as COUNT(DISTINCT) over
 the same rows — a parser or writer drift fails the hash gate loudly.
 
-Scale shape: the orcmeta data source parses one stripe footer per file
-executor-side (tail + one ranged read); file partitions prune via the
-pushFilters seam like every other orcmeta mode.
+Scale shape: the orcmeta reader parses one stripe footer per file (tail +
+one ranged read) on the driver (``orcmeta.load``).
 """
 
 from __future__ import annotations
@@ -59,12 +58,9 @@ def orc_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_encoding_dir_for
 
-    orcmeta.register(spark)
     d = orc_encoding_dir_for(sf_dir)
     return (
-        spark.read.format("orcmeta")
-        .option("stats", "encodings")
-        .load(d)
+        orcmeta.load(spark, d, stats="encodings")
         .select(
             F.regexp_replace("file_name", r"\.orc$", "").alias("variant"),
             "column_name",

@@ -289,12 +289,12 @@ def sql_string_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A1/A2/A4 via the PUBLIC PLUGIN SEAM — a registered Python Data Source
-# (round 5): the reference is a format plugin (OrcFormat implements
-# DataFusion's FileFormat, src/file_format.rs:90-205); Spark 4's Python Data
-# Source API is the equivalent extension point, and `orcmeta` exercises it
-# end to end — one input partition PER FILE so footer reads fan out like the
-# reference's bounded-concurrency metadata fetches (file_format.rs:146-161).
+# A1/A2/A4 via the PUBLIC PLUGIN SEAM — a registered Python Data Source:
+# the reference is a format plugin (OrcFormat implements DataFusion's
+# FileFormat, src/file_format.rs:90-205); Spark 4's Python Data Source API
+# is the equivalent extension point, and `orcmeta` implements it. Footer
+# reads go through `orcmeta.load`, which parses them on the driver, as the
+# reference reads footers in its own process (file_format.rs:146-161).
 # The comparator-stable projection keeps only layout-independent facts
 # (total rows, column count); per-file rows/stripes/bytes vary with writer
 # parallelism and are covered by pytest instead.
@@ -308,26 +308,26 @@ def sql_string_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def orc_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed metadata-only audit of an ORC directory through the
-    custom `orcmeta` Python data source: SUM of per-file footer row counts
-    and the column count, with NO row data scanned. At 100 TB this shape —
-    file-per-task footer reads — audits lake layout (file sizing, stripe
-    health, schema drift) for the cost of listing + footers."""
+    """Metadata-only audit of an ORC directory through the custom
+    `orcmeta` data source: SUM of per-file footer row counts and the column
+    count, with NO row data scanned. At 100 TB this shape — footer reads
+    on the driver (`orcmeta.load`) — audits lake layout (file sizing,
+    stripe health, schema drift) for the cost of listing + footers."""
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
 
-    orcmeta.register(spark)
     d = orc_dir_for(spark, sf_dir, "lineitem")
-    meta = spark.read.format("orcmeta").load(d)
+    meta = orcmeta.load(spark, d)
     return meta.agg(
         F.sum("num_rows").alias("total_rows"),
         F.max("num_columns").alias("n_columns"),
     )
 
 
-# A8/A10 at the PLUGIN seam, oracle-checked (judge r05 task 5): the
-# pushFilters partition-pruning path (sources/orcmeta.py pushFilters →
-# partitions) exercised by the driver gate, not just pytest. Determinism
+# A8/A10 at the PLUGIN seam, oracle-checked: the pushFilters
+# partition-pruning path (sources/orcmeta.py pushFilters → partitions)
+# exercised by the driver gate, not just pytest, so this query reads
+# through spark.read.format("orcmeta") and not orcmeta.load. Determinism
 # comes from a pyarrow-written chunked layout (sources/tables.py
 # orc_chunked_dir_for): file chunk-<k>.orc holds exactly the rows with
 # o_orderkey % 4 == k, so the oracle recomputes the selected file's row
@@ -359,13 +359,12 @@ def orc_file_metadata_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A4 beyond the reference (judge r05 task 4): the reference's open TODO —
-# "column statistics are not yet extracted" (src/metadata.rs:79-84) —
-# closed at the same seam: orcmeta's stats mode parses file-level column
-# min/max/sum/null-count out of the ORC footer protobuf itself
-# (sources/orcfooter.py, public ORC spec), one file per task, tail bytes
-# only. The query aggregates per-file stats ACROSS files (MIN of mins,
-# SUM of counts), which is exactly how a lake-wide stats audit stays
+# A4 beyond the reference: the reference's open TODO — "column statistics
+# are not yet extracted" (src/metadata.rs:79-84) — closed at the same seam:
+# orcmeta's stats mode parses file-level column min/max/sum/null-count out
+# of the ORC footer protobuf itself (sources/orcfooter.py, public ORC spec),
+# tail bytes only. The query aggregates per-file stats ACROSS files (MIN of
+# mins, SUM of counts), which is exactly how a lake-wide stats audit stays
 # layout-independent — and what makes it oracle-checkable: the cross-file
 # aggregate equals the table-level stats DuckDB computes from the rows.
 # lineitem column -> ORC statistic kind; drives both oracles below
@@ -436,9 +435,8 @@ def orc_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
 
-    orcmeta.register(spark)
     d = orc_dir_for(spark, sf_dir, "lineitem")
-    meta = spark.read.format("orcmeta").option("stats", "true").load(d)
+    meta = orcmeta.load(spark, d, stats="true")
     return _stats_agg(meta)
 
 
@@ -446,8 +444,8 @@ def _stats_consistency(fine, coarse, flag_name: str):
     """Join a FINE-granularity stats rollup against the next-COARSER one
     and flag per-column equality of count + typed min/max — the single
     implementation behind both ladder audits (stripe-vs-file and
-    rowgroup-vs-stripe); two inline copies of the eqNullSafe chain could
-    silently diverge in which stats they compare (round-11 review)."""
+    rowgroup-vs-stripe), so the two cannot diverge in which stats they
+    compare."""
     coarse = coarse.select(
         F.col("column_name").alias("c_column_name"),
         F.col("n_values").alias("c_n_values"),
@@ -496,14 +494,9 @@ def orc_stripe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
 
-    orcmeta.register(spark)
     d = orc_dir_for(spark, sf_dir, "lineitem")
-    stripes = _stats_agg(
-        spark.read.format("orcmeta").option("stats", "stripes").load(d)
-    )
-    files = _stats_agg(
-        spark.read.format("orcmeta").option("stats", "file").load(d)
-    )
+    stripes = _stats_agg(orcmeta.load(spark, d, stats="stripes"))
+    files = _stats_agg(orcmeta.load(spark, d, stats="file"))
     return _stats_consistency(stripes, files, "matches_file_stats")
 
 
@@ -566,7 +559,6 @@ def orc_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_bloom_dir_for
 
-    orcmeta.register(spark)
     d = orc_bloom_dir_for(
         sf_dir, "orders", "o_orderkey", _BLOOM_NCHUNKS,
         extra_bloom=("o_orderpriority",),
@@ -574,12 +566,14 @@ def orc_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bloom_cands(column: str, probes: list, hash_kind: str) -> DataFrame:
         return (
-            spark.read.format("orcmeta")
-            .option("stats", "bloom")
-            .option("bloom_column", column)
-            .option("bloom_hash", hash_kind)
-            .option("bloom_probes", ",".join(str(p) for p in probes))
-            .load(d)
+            orcmeta.load(
+                spark,
+                d,
+                stats="bloom",
+                bloom_column=column,
+                bloom_hash=hash_kind,
+                bloom_probes=",".join(str(p) for p in probes),
+            )
             .filter(F.col("bloom_maybe"))
             .select("file_name", "row_group_id", "probe")
         )
@@ -647,16 +641,11 @@ def orc_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts, per column, that aggregating every row group reproduces the
     stripe-level count and typed min/max — the invariant row-group pruning
     depends on. I/O stays metadata-only (tail + per-stripe stripe-footer
-    and index-region ranged reads), one file per task via `orcmeta`."""
+    and index-region ranged reads), on the driver (`orcmeta.load`)."""
     from datafusion_datasource_orc_spark.sources import orcmeta
     from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
 
-    orcmeta.register(spark)
     d = orc_dir_for(spark, sf_dir, "lineitem")
-    rowgroups = _stats_agg(
-        spark.read.format("orcmeta").option("stats", "rowgroups").load(d)
-    )
-    stripes = _stats_agg(
-        spark.read.format("orcmeta").option("stats", "stripes").load(d)
-    )
+    rowgroups = _stats_agg(orcmeta.load(spark, d, stats="rowgroups"))
+    stripes = _stats_agg(orcmeta.load(spark, d, stats="stripes"))
     return _stats_consistency(rowgroups, stripes, "matches_stripe_stats")

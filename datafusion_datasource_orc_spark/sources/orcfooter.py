@@ -22,9 +22,10 @@ themselves. This module closes that gap from the PUBLIC ORC specification
   maximumUtc=4, zigzag epoch millis), hasNull=10.
 
 Only varint/fixed64/length-delimited wire types occur, so the protobuf
-walker below is ~30 lines, dependency-free, and runs executor-side inside
-the ``orcmeta`` data source's per-file tasks: at 100 TB the stats scan
-reads ONLY file tails (one ranged read per file), never row data.
+walker below is ~30 lines, dependency-free, and runs inside the ``orcmeta``
+data source's reader, on the driver (``orcmeta.load``) or in its per-file
+tasks (``spark.read.format("orcmeta")``): at 100 TB the stats scan reads
+ONLY file tails (one ranged read per file), never row data.
 """
 
 from __future__ import annotations
@@ -436,7 +437,7 @@ def read_rowgroup_statistics(
     I/O shape: one tail read (footer) + TWO ranged reads per stripe (the
     stripe footer, then the whole index region of ``indexLength`` bytes) —
     still metadata-only; row data is never touched. At 100 TB this runs
-    file-per-task under ``orcmeta`` exactly like the file/stripe modes.
+    under ``orcmeta.load`` exactly like the file/stripe modes.
     """
     footer, _, compression = _read_tail_sections(path, size_hint=size_hint)
     column_names = _footer_column_names(footer)

@@ -5,18 +5,35 @@ engine (`OrcFormat` implementing DataFusion's `FileFormat`,
 src/file_format.rs:90-205). Spark ships the ORC *data* path natively, so
 the repo's scan queries ride on it — but Spark 4's Python Data Source API
 (`pyspark.sql.datasource`) is the public equivalent of that plugin seam,
-and this module exercises it end to end: a registered named format whose
-reader plans ONE INPUT PARTITION PER FILE, so footer reads fan out across
-the cluster exactly like the reference's bounded-concurrency metadata
-fetches (src/file_format.rs:146-161, `meta_fetch_concurrency`).
+and this module implements it: a registered named format whose reader
+plans ONE INPUT PARTITION PER FILE.
 
 The table it serves is the reference's per-file metadata surface
 (`read_orc_schema` + exact statistics, src/metadata.rs:35-58 and the
 per-file metrics of src/metrics.rs): one row per ORC file with row count,
-stripe count, column count and byte size. At 100 TB this pattern — a
-metadata-only scan distributed file-per-task with NO row data moving — is
+stripe count, column count and byte size, or, with ``stats``, footer column
+statistics per file, stripe or row group, bloom verdicts and encodings.
+At 100 TB this pattern — a metadata-only scan with NO row data moving — is
 how you audit a lake's layout (file sizing, stripe health, schema drift)
 without paying a data scan.
+
+Placement. ``load(spark, path, **options)`` is the entry point the
+operators use, and it parses the footers on the driver, in this process, as
+the reference reads footers in its own process (src/file_format.rs:146-161,
+`meta_fetch_concurrency`). It runs the data source's own ``partitions()``,
+``read()`` and ``schema()`` and hands the rows to Spark as one Arrow table,
+so no Python worker starts. A task per file costs more than it spreads:
+on ``local[4]`` (4 vCPUs) the data source spends about 15 ms of wall time
+per file, the driver 0.02-2 ms, so the driver was 6-270x faster at every
+size measured, 32 to 8,192 files (CHANGES.md). The table lives in driver
+memory, one row per file, stripe, row group or column as the mode says.
+``spark.read.format("orcmeta")`` stays available directly, for
+``pushFilters`` and for streaming discovery.
+
+The two also differ in time. ``load`` reads the directory when it is
+called and returns a fixed local table: a file added later is not in it,
+and a bad footer fails ``load`` itself. A ``spark.read.format("orcmeta")``
+DataFrame lists and parses again on every action.
 """
 
 from __future__ import annotations
@@ -24,12 +41,36 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Sequence
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+
+def _is_orc(full: str) -> bool:
+    try:
+        with open(full, "rb") as fh:
+            return fh.read(3) == b"ORC"
+    except OSError:
+        return False
+
+
+def _admitted(path: str) -> list[str]:
+    """Sorted names of the ORC files directly under ``path``: ``*.orc`` by
+    name, and an extensionless file only if it starts with the 3-byte ORC
+    magic. Hidden names (``_``, ``.``) and ``.crc`` sidecars are never
+    admitted, and a stray LICENSE or README.txt must not have its tail bytes
+    walked as footer protobuf. The batch reader, the stream reader and
+    ``load`` all list through here."""
+    return sorted(
+        f
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+        and (f.endswith(".orc") or ("." not in f and _is_orc(os.path.join(path, f))))
+    )
 
 
 class OrcFilePartition(InputPartition):
@@ -77,8 +118,8 @@ def _bloom_options(options: dict) -> tuple[str, list, str]:
         )
     raw = options.get("bloom_probes", "")
     # strip each probe: utf8 mode hashes the raw bytes, so 'a, b' must
-    # probe b'b', not b' b' (a false non-membership verdict otherwise —
-    # round-10 review); long mode tolerated whitespace only via int()
+    # probe b'b', not b' b' (a false non-membership verdict otherwise);
+    # long mode would tolerate whitespace anyway, via int()
     parts = [x.strip() for x in str(raw).split(",") if x.strip()]
     if hash_kind == "long":
         try:
@@ -150,37 +191,16 @@ class OrcMetadataReader(DataSourceReader):
         return True
 
     def partitions(self) -> Sequence[OrcFilePartition]:
-        # same admission rule as metadata._orc_files: *.orc by name, and
-        # extensionless part files only if the 3-byte ORC magic matches —
-        # a stray LICENSE/Makefile in the directory must not become a
-        # partition whose tail bytes get walked as footer protobuf
-        files = sorted(
-            f
-            for f in os.listdir(self.path)
-            if not f.startswith(("_", "."))
-            and not f.endswith(".crc")
-            and (
-                f.endswith(".orc")
-                or ("." not in f and self._is_orc(os.path.join(self.path, f)))
-            )
-        )
         return [
             OrcFilePartition(i, os.path.join(self.path, f))
-            for i, f in enumerate(files)
+            for i, f in enumerate(_admitted(self.path))
             if self._keep(f)
         ]
 
-    @staticmethod
-    def _is_orc(full: str) -> bool:
-        try:
-            with open(full, "rb") as fh:
-                return fh.read(3) == b"ORC"
-        except OSError:
-            return False
-
     def read(self, partition: OrcFilePartition) -> Iterator[tuple]:
-        # import inside read(): runs on the executor, keeps the reader object
-        # picklable (the documented pattern for non-serializable resources)
+        # imports inside read(): in a Python worker this keeps the reader
+        # object picklable (the documented pattern for non-serializable
+        # resources); ``load`` calls it on the driver as it is
         if self.stats == "bloom":
             yield from _bloom_rows(partition.path, *self.bloom, self.size_hint)
             return
@@ -238,7 +258,7 @@ def _typed_slots(st: dict) -> tuple:
         # decimal sum (orc_proto DecimalStatistics.sum, a decimal STRING)
         # is deliberately unexposed: no BIGINT slot can carry it, and
         # routing it into sum_l would fail schema conversion the day the
-        # parser learns the field (round-10 review)
+        # parser learns the field
     return (kind, min_l, max_l, sum_l, min_d, max_d, sum_d, min_s, max_s)
 
 
@@ -247,7 +267,7 @@ def _stats_rows(path: str, mode: str, size_hint: int | None = None) -> Iterator[
     unextracted file-level column statistics (src/metadata.rs:79-84 TODO),
     parsed from the footer by sources/orcfooter.py. stats="stripes": one
     row per (stripe, column) from the metadata section — the granularity
-    stripe pruning consults. Both executor-side, tail-bytes only."""
+    stripe pruning consults. Both read tail bytes only."""
     from datafusion_datasource_orc_spark.sources.orcfooter import (
         DEFAULT_TAIL_HINT,
         read_column_statistics,
@@ -315,8 +335,8 @@ def _bloom_rows(
 ) -> Iterator[tuple]:
     """stats="bloom": one row per (stripe, row group, probe key) of one
     file — bloom membership verdicts for the probed keys, from the
-    BLOOM_FILTER_UTF8 index streams (sources/orcfooter.py). Executor-side,
-    index bytes only; the pruning decision a row-group point lookup makes,
+    BLOOM_FILTER_UTF8 index streams (sources/orcfooter.py). Index bytes
+    only; the pruning decision a row-group point lookup makes,
     exposed as data. ``probe`` is surfaced as STRING so the long and utf8
     hash modes share one schema."""
     from datafusion_datasource_orc_spark.sources.orcfooter import (
@@ -362,11 +382,7 @@ class OrcMetaStreamReader(SimpleDataSourceStreamReader):
             )
 
     def _list(self) -> list[str]:
-        return sorted(
-            f
-            for f in os.listdir(self.path)
-            if not f.startswith(("_", ".")) and not f.endswith(".crc")
-        )
+        return _admitted(self.path)
 
     def _rows(self, names: list[str]) -> Iterator[tuple]:
         # same 6-column row shape as the batch reader (DataSource.schema()
@@ -473,6 +489,37 @@ class OrcMetadataDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> OrcMetaStreamReader:
         return OrcMetaStreamReader(self.options)
+
+
+def load(spark, path: str, **options) -> DataFrame:
+    """The orcmeta table of the ORC files under ``path``, with
+    ``spark.read.format("orcmeta")`` options as keywords (``stats``,
+    ``bloom_column``, ``metadata_size_hint``, ...), parsed here on the
+    driver.
+
+    The data source's own ``partitions()``, ``read()`` and ``schema()`` make
+    the rows, and Spark gets them as one Arrow table (``createDataFrame``
+    from a list of tuples would start a Python worker to re-serialize them).
+    The result is a snapshot taken when ``load`` is called: a file added
+    later is not seen by the returned DataFrame, and a footer error is
+    raised here. Each call reads the footers again; nothing is cached."""
+    import pyarrow as pa
+    from pyspark.sql.datasource import CaseInsensitiveDict
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+    from pyspark.sql.utils import to_str
+
+    options = {k: to_str(v) for k, v in options.items()}
+    source = OrcMetadataDataSource(CaseInsensitiveDict(options, path=path))
+    reader = source.reader(None)
+    schema = StructType.fromDDL(source.schema())
+    arrow = to_arrow_schema(schema)
+    rows = [row for p in reader.partitions() for row in reader.read(p)]
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def register(spark) -> None:

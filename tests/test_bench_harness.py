@@ -1,6 +1,6 @@
 """bench.py's timing loop: failure recording, job-group labels, compile
 counts, stolen shares, headline set; and its comparator: baseline choice by
-(sf, cpus) and the flag rule, over synthetic BENCH artifacts."""
+(sf, cpus, host) and the flag rule, over synthetic BENCH artifacts."""
 
 from __future__ import annotations
 
@@ -64,10 +64,16 @@ def test_best_of_is_net_of_steal():
     }
 
 
-def _artifact(root, name, cpus, sf, queries):
+HOST = "h-local"
+
+
+def _artifact(root, name, cpus, sf, queries, host=HOST):
     """A committed BENCH artifact; ``queries=None`` stands for a stdout line
-    that did not parse."""
+    that did not parse, ``host=None`` for one from before the line named its
+    machine."""
     line = None if queries is None else {"queries": queries, "drift": 6.0, "sf": sf}
+    if line is not None and host is not None:
+        line["host"] = host
     record = {"n": 1, "rc": 0, "cpus": cpus, "sf": sf, "parsed": line}
     (root / name).write_text(json.dumps(record))
 
@@ -96,7 +102,7 @@ def test_baseline_is_newest_at_same_sf_and_cpus(tmp_path, sf, cpus, baseline):
     bare = {"queries": q, "drift": 1.0, "sf": 0.1}
     (tmp_path / "BENCH_r30.json").write_text(json.dumps(bare))
 
-    summary = bench.compare({"q": 2.0}, sf, cpus, str(tmp_path))
+    summary = bench.compare({"q": 2.0}, sf, cpus, HOST, str(tmp_path))
     if baseline is None:
         assert summary == {}
     else:
@@ -105,17 +111,29 @@ def test_baseline_is_newest_at_same_sf_and_cpus(tmp_path, sf, cpus, baseline):
         assert summary["flagged"] == {}
 
 
+def test_baseline_is_from_the_same_host(tmp_path):
+    """A run at the same (sf, cpus) on another machine, or from before the
+    line named its machine, is never a baseline: an 8-CPU run on one VM
+    flagged 2 of 5 queries against an 8-CPU artifact from another."""
+    _artifact(tmp_path, "BENCH_r14_c8.json", 8, 0.1, {"q": 1.0})
+    _artifact(tmp_path, "BENCH_r15_c8.json", 8, 0.1, {"q": 1.0}, host="h-driver")
+    _artifact(tmp_path, "BENCH_r16_c8.json", 8, 0.1, {"q": 1.0}, host=None)
+    summary = bench.compare({"q": 2.0}, 0.1, 8, HOST, str(tmp_path))
+    assert summary["vs"] == "BENCH_r14_c8.json"
+    assert bench.compare({"q": 2.0}, 0.1, 8, "h-other", str(tmp_path)) == {}
+
+
 @pytest.mark.parametrize("cpus", [4, 8])
 def test_a_doubled_query_is_flagged(tmp_path, cpus):
     _artifact(tmp_path, "BENCH_r1.json", cpus, 0.1, {"a": 1.0, "b": 3.0})
-    summary = bench.compare({"a": 2.0, "b": 3.0}, 0.1, cpus, str(tmp_path))
+    summary = bench.compare({"a": 2.0, "b": 3.0}, 0.1, cpus, HOST, str(tmp_path))
     assert summary["flagged"] == {"a": 2.0}
     assert summary["ratios"] == {"a": 2.0, "b": 1.0}
 
 
 def test_a_small_delta_is_not_flagged(tmp_path):
     _artifact(tmp_path, "BENCH_r1.json", 4, 0.1, {"a": 0.3})
-    summary = bench.compare({"a": 0.6}, 0.1, 4, str(tmp_path))
+    summary = bench.compare({"a": 0.6}, 0.1, 4, HOST, str(tmp_path))
     assert summary["ratios"] == {"a": 2.0}
     assert summary["flagged"] == {}
 
@@ -123,6 +141,6 @@ def test_a_small_delta_is_not_flagged(tmp_path):
 def test_equal_times_are_not_flagged(tmp_path):
     prev = {"a": 0.7, "b": 1.5, "c": 12.0}
     _artifact(tmp_path, "BENCH_r1.json", 4, 0.1, prev)
-    summary = bench.compare(dict(prev), 0.1, 4, str(tmp_path))
+    summary = bench.compare(dict(prev), 0.1, 4, HOST, str(tmp_path))
     assert summary["flagged"] == {}
     assert summary["geomean"] == 1.0

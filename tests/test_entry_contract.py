@@ -361,7 +361,12 @@ def side(pdf):
 
 
 checks = {"entry": (entrymod.entry(spark), "orc_groupby_count")}
-for name in ("orc_file_metadata_pruned", "events_tumbling_window", "tpcds_q98"):
+for name in (
+    "orc_file_metadata_pruned",
+    "orc_rowgroup_stats",
+    "events_tumbling_window",
+    "tpcds_q98",
+):
     checks[name] = (queries[name](spark, sf_dir), name)
 out = {
     name: [side(df.toPandas()), side(con.execute(oracles[oracle]).df())]
@@ -379,7 +384,9 @@ def test_vanilla_session_driver_probe(tmp_path, sf_dir):
     get_spark's. A child process builds one the way the driver does
     (``local[2]``, session timezone America/Los_Angeles) and runs entry()
     (the orc_groupby_count flagship at the default sf0.001 corpus), the
-    chunked-layout metadata query, the events table's tumbling window and a
+    chunked-layout metadata query, the row-group statistics query (footers
+    parsed on the driver into an Arrow-built frame, which must need none of
+    get_spark's Arrow confs), the events table's tumbling window and a
     TPC-DS query; each must value-hash-match its DuckDB oracle with rows.
     The child's materialization root, under its TMPDIR, must be gone once
     the child has exited."""
@@ -408,7 +415,13 @@ def test_vanilla_session_driver_probe(tmp_path, sf_dir):
     assert existed and os.path.dirname(root) == str(tmp_path)
     assert not os.path.exists(root), "materialization root left behind at exit"
     assert sorted(out) == sorted(
-        ["entry", "orc_file_metadata_pruned", "events_tumbling_window", "tpcds_q98"]
+        [
+            "entry",
+            "orc_file_metadata_pruned",
+            "orc_rowgroup_stats",
+            "events_tumbling_window",
+            "tpcds_q98",
+        ]
     )
     for name, (spark_side, oracle_side) in out.items():
         assert spark_side[0] > 0, f"{name}: no rows"

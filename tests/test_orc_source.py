@@ -1128,6 +1128,75 @@ class TestOrcMetaDataSource:
         with _pytest.raises(ValueError, match="positive"):
             _size_hint({"metadata_size_hint": "0"})
 
+    @pytest.mark.parametrize(
+        "layout, options",
+        [
+            ("plain", {}),
+            ("chunked", {}),
+            ("plain", {"stats": "file"}),
+            ("plain", {"stats": "stripes"}),
+            ("plain", {"stats": "rowgroups"}),
+            ("bloom", {"stats": "bloom", "bloom_column": "o_orderkey",
+                       "bloom_probes": "2,3,5,1000000007"}),
+            ("bloom", {"stats": "bloom", "bloom_column": "o_orderpriority",
+                       "bloom_hash": "utf8", "bloom_probes": "1-URGENT,Z-ABSENT"}),
+            ("encodings", {"stats": "encodings"}),
+        ],
+        ids=[
+            "default", "default-chunked", "file", "stripes", "rowgroups",
+            "bloom-long", "bloom-utf8", "encodings",
+        ],
+    )
+    def test_load_placements_agree(self, spark, sf_dir, layout, options):
+        """orcmeta.load parses the footers on the driver (a local table, no
+        Python data-source scan), and spark.read.format("orcmeta") reads one
+        file per task; both give the same schema and the same rows."""
+        from datafusion_datasource_orc_spark.metrics import _plan_leaves
+        from datafusion_datasource_orc_spark.sources import orcmeta, tables
+
+        d = {
+            "plain": lambda: tables.orc_dir_for(spark, sf_dir, "lineitem"),
+            "chunked": lambda: tables.orc_chunked_dir_for(
+                sf_dir, "orders", "o_orderkey", 4
+            ),
+            "bloom": lambda: tables.orc_bloom_dir_for(
+                sf_dir, "orders", "o_orderkey", 4, extra_bloom=("o_orderpriority",)
+            ),
+            "encodings": lambda: tables.orc_encoding_dir_for(sf_dir),
+        }[layout]()
+
+        def run(df):
+            rows = Counter(tuple(r) for r in df.collect())
+            leaves = _plan_leaves(df._jdf.queryExecution().executedPlan())
+            return df.schema, rows, [leaf.nodeName() for leaf in leaves]
+
+        orcmeta.register(spark)
+        schema, rows, leaves = run(orcmeta.load(spark, d, **options))
+        schema0, rows0, leaves0 = run(
+            spark.read.format("orcmeta").options(**options).load(d)
+        )
+        assert leaves == ["LocalTableScan"]
+        assert leaves0 == ["BatchScan orcmeta"]
+        assert schema == schema0
+        assert rows == rows0 and sum(rows.values()) > 0
+
+    def test_load_is_a_snapshot(self, spark, tmp_path):
+        """orcmeta.load reads the directory when it is called, so a file
+        added before the action is not seen; a spark.read.format("orcmeta")
+        DataFrame lists again on every action and sees it."""
+        import pyarrow as pa
+
+        from datafusion_datasource_orc_spark.sources import orcmeta
+
+        t = pa.table({"k": pa.array(range(10), pa.int64())})
+        porc.write_table(t, str(tmp_path / "a.orc"))
+        orcmeta.register(spark)
+        snap = orcmeta.load(spark, str(tmp_path))
+        live = spark.read.format("orcmeta").load(str(tmp_path))
+        porc.write_table(t, str(tmp_path / "b.orc"))
+        assert sorted(r.file_name for r in snap.collect()) == ["a.orc"]
+        assert sorted(r.file_name for r in live.collect()) == ["a.orc", "b.orc"]
+
 
 class TestRound10SourceFixes:
     """Pins for the round-10 sources-layer review fixes."""

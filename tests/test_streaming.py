@@ -243,6 +243,35 @@ def test_orcmeta_stream_discovers_new_files_exactly_once(spark, sf_dir, tmp_path
         q.stop()
 
 
+def test_orcmeta_stream_skips_a_stray_file(spark, sf_dir, tmp_path_factory):
+    """Streaming discovery admits files as the batch reader does: a
+    README.txt beside an ORC file is skipped, not opened as ORC."""
+    from datafusion_datasource_orc_spark.sources import orcmeta
+    from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
+
+    orcmeta.register(spark)
+    src = orc_dir_for(spark, sf_dir, "nation")
+    orc_file = next(f for f in sorted(os.listdir(src)) if f.endswith(".orc"))
+    grow = tmp_path_factory.mktemp("orcmeta_stray")
+    shutil.copy(os.path.join(src, orc_file), grow / "a.orc")
+    (grow / "README.txt").write_text("not an ORC file\n")
+
+    q = (
+        spark.readStream.format("orcmeta")
+        .load(str(grow))
+        .writeStream.format("memory")
+        .queryName("orcmeta_stray")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM orcmeta_stray").collect()
+        assert [(r.file_name, r.num_rows) for r in rows] == [("a.orc", 25)]
+    finally:
+        q.stop()
+
+
 def test_incremental_ingest_discover_probe_admit_exactly_once(
     spark, sf_dir, tmp_path_factory
 ):
