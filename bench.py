@@ -280,8 +280,7 @@ def compare(results, sf, cpus, host, root) -> dict:
     (``"parsed": null``), that has no ``cpus``, ``host`` or ``queries``, or
     that ran at another ``sf``, ``cpus`` or ``host`` is never a baseline:
     data size, core count and the machine move query times without any
-    change to the plan. Queries under the stdout print cutoff are not in the
-    line, so they are not compared. With no baseline the result is ``{}``.
+    change to the plan. With no baseline the result is ``{}``.
 
     A query is flagged as a likely plan regression when it is more than 1.5x
     AND more than 0.5 s slower than the baseline: back-to-back runs of the
@@ -289,6 +288,15 @@ def compare(results, sf, cpus, host, root) -> dict:
     test alone tells a regression from noise. Host load that the steal
     netting misses moves the geomean of all the ratios, so a real regression
     is a flag that stands out from a steady geomean.
+
+    A query the baseline ran under its print cutoff ``c`` is not in its
+    line. Taking ``c`` as its baseline time bounds it from above, so it is
+    flagged by the same rule, above ``max(1.5 c, c + 0.5)``; its flag holds
+    the ratio to ``c``, and it is left out of ``ratios`` and ``geomean``.
+    ``c`` is the line's ``cutoff``, or, on a line from before it recorded
+    one, its smallest printed time, which is at least the cutoff. A
+    baseline with no query under its cutoff (``n_below_cutoff`` 0) ran none
+    of the missing queries, so they are not compared.
 
     Returns ``{"vs", "n", "geomean", "flagged", "ratios"}``.
     """
@@ -309,15 +317,23 @@ def compare(results, sf, cpus, host, root) -> dict:
         return {}
     common = sorted(set(prev) & set(results))
     ratios = {n: round(results[n] / prev[n], 3) for n in common if prev[n] > 0}
+    flagged = {
+        n: r for n, r in ratios.items() if r > 1.5 and results[n] - prev[n] > 0.5
+    }
+    if parsed.get("n_below_cutoff", 1):
+        c = parsed.get("cutoff") or min(prev.values())
+        flagged.update(
+            (n, round(results[n] / c, 3))
+            for n in sorted(set(results) - set(prev))
+            if results[n] > max(1.5 * c, c + 0.5)
+        )
     return {
         "vs": os.path.basename(path),
         "n": len(common),
         "geomean": (
             round(statistics.geometric_mean(ratios.values()), 3) if ratios else None
         ),
-        "flagged": {
-            n: r for n, r in ratios.items() if r > 1.5 and results[n] - prev[n] > 0.5
-        },
+        "flagged": flagged,
         "ratios": ratios,
     }
 
@@ -453,6 +469,7 @@ def main() -> None:
                     for n, v in results.items()
                     if v >= cutoff
                 },
+                "cutoff": cutoff,
                 "n_below_cutoff": len(below),
                 "below_cutoff_sum_sec": round(sum(below), 2),
                 "drift": drift,

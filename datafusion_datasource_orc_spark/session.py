@@ -22,9 +22,11 @@ Scale design notes (local[32] here, 1000-executor cluster in production):
   writers (``sources.orc``, ``streaming.events.stream_to_orc``) take the
   codec from this conf unless a caller names one, and every later scan
   re-reads what they stored. On perfbench's ingest slice (sf0.01 lineitem,
-  16 files of 2,000 rows, then compacted) zstd stores 523,777 raw and
-  475,980 compacted bytes where snappy stored 686,239 and 639,950, with
-  the same rows and about equal write time. Spark 4.1's own default is
+  16 files of 2,000 rows, then compacted in input order) zstd stores
+  523,777 raw and 475,980 compacted bytes where snappy stored 686,239 and
+  639,950, with the same rows and about equal write time. (``compact_orc``
+  sorts that slice by column cardinality and stores about 387,000
+  compacted bytes with zstd.) Spark 4.1's own default is
   zstd, so a vanilla session not built here writes the same files; the
   conf is set here so the choice is visible beside the other ORC settings.
 - Generated-code cache sized to the working set: ``CODEGEN_CACHE_ENTRIES``.

@@ -11,9 +11,10 @@ Mirrors the reference's metadata module:
   footer reads over many files + Schema::try_merge.
 
 Implementation: pyarrow.orc footer reads (driver-side, metadata-only — no row
-data is materialized). For directories with very many files the footer reads
-are parallelized with a thread pool, mirroring the reference's
-``meta_fetch_concurrency`` (src/file_format.rs:153).
+data is materialized) over the files Spark reads (``_orc_files``). For
+directories with very many files the footer reads are parallelized with a
+thread pool, mirroring the reference's ``meta_fetch_concurrency``
+(src/file_format.rs:153).
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.orc as pa_orc
+
+from datafusion_datasource_orc_spark.sources.orcmeta import _admitted
 
 META_FETCH_CONCURRENCY = 32  # reference: session meta_fetch_concurrency
 
@@ -45,24 +48,16 @@ class OrcFileStatistics:
 
 
 def _orc_files(path: str) -> list[str]:
+    """Sorted paths of the ORC files Spark reads under ``path``: each
+    directory admits files by ``orcmeta._admitted``'s name rule, and the
+    walk descends into ``k=v`` partition directories but never into ``_``
+    or ``.`` ones (``_temporary/``, ``.hidden/``), as Spark's listing does."""
     if os.path.isfile(path):
         return [path]
     out = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            full = os.path.join(root, f)
-            if f.endswith(".orc"):
-                out.append(full)
-            elif not f.startswith(("_", ".")) and "." not in f:
-                # extensionless part files are common in lakes, but so are
-                # LICENSE/Makefile/README — check the 3-byte ORC magic
-                # before admitting one (round-10 review)
-                try:
-                    with open(full, "rb") as fh:
-                        if fh.read(3) == b"ORC":
-                            out.append(full)
-                except OSError:
-                    pass
+    for root, dirs, _files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out.extend(os.path.join(root, f) for f in _admitted(root) if f not in dirs)
     return sorted(out)
 
 

@@ -27,9 +27,16 @@ rather than task-count-many shards.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.orc as pa_orc
 from pyspark.sql import DataFrame, SparkSession
+
+from datafusion_datasource_orc_spark.sources.metadata import directory_statistics
 
 # Reference defaults: src/options.rs:30-47
 DEFAULT_BATCH_SIZE = 8192
@@ -257,6 +264,76 @@ def _hadoop_dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, total
 
 
+# Spark's ORC codec names as pyarrow's ORC writer spells them; lzo and brotli
+# have no pyarrow writer, so a compaction to them keeps the input order.
+_TRIAL_CODECS = {
+    "none": "uncompressed",
+    "uncompressed": "uncompressed",
+    "snappy": "snappy",
+    "zlib": "zlib",
+    "lz4": "lz4",
+    "zstd": "zstd",
+}
+
+
+# The trial encode's row cap. One stripe of a large file can hold all its
+# rows: on sf0.1 lineitem written as one file (600,000 rows, one stripe) the
+# decision takes 1.5-1.9 s on the whole stripe and 0.24-0.31 s on its first
+# 65,536 rows, with the same keys.
+_SAMPLE_ROWS = 1 << 16
+
+
+def _encoded_bytes(table: pa.Table, codec: str) -> int:
+    sink = pa.BufferOutputStream()
+    # 0.8 is the Java ORC writer's dictionary threshold (Spark's writer);
+    # pyarrow's default of 0 would never dictionary-encode a string
+    pa_orc.write_table(table, sink, compression=codec, dictionary_key_size_threshold=0.8)
+    return sink.getvalue().size
+
+
+def _cluster_keys(src_dir: str, codec: str) -> list[str]:
+    """The sort keys ``compact_orc`` applies, or ``[]`` to keep the input
+    order. Decided on the driver, with no Spark job, from the first stripe
+    of the largest source file (at most ``_SAMPLE_ROWS`` rows of it), read
+    with pyarrow: the primitive columns by ascending distinct count, added
+    until the product of their counts reaches the source's footer row count,
+    and kept only if the sample sorted by them encodes smaller with
+    ``codec`` than the sample as it is. A directory pyarrow cannot read
+    (not on the local filesystem) or a codec it cannot write keeps the
+    input order."""
+    url = urlparse(src_dir)
+    trial_codec = _TRIAL_CODECS.get(codec.lower())
+    if trial_codec is None or url.scheme not in ("", "file") or not os.path.isdir(url.path):
+        return []
+    stats = directory_statistics(url.path)
+    if not stats["files"]:
+        return []
+    largest = max(stats["files"], key=lambda s: s.total_byte_size)
+    reader = pa_orc.ORCFile(largest.path)
+    if reader.nstripes == 0:
+        return []
+    sample = pa.Table.from_batches([reader.read_stripe(0)]).slice(0, _SAMPLE_ROWS)
+    distinct = sorted(
+        (pc.count_distinct(sample[name], mode="all").as_py(), name)
+        for name, typ in zip(sample.column_names, sample.schema.types)
+        if not pa.types.is_nested(typ)
+    )
+    keys, product = [], 1
+    for n, name in distinct:
+        if product >= stats["num_rows"]:
+            break
+        if n > 1:
+            keys.append(name)
+            product *= n
+    if not keys:
+        return []
+    # Spark sorts NULLs first in ascending order
+    clustered = sample.sort_by([(k, "ascending") for k in keys], null_placement="at_start")
+    if _encoded_bytes(clustered, trial_codec) < _encoded_bytes(sample, trial_codec):
+        return keys
+    return []
+
+
 def compact_orc(
     spark: SparkSession,
     src_dir: str,
@@ -278,12 +355,40 @@ def compact_orc(
     of co-located small files (file counts may be slightly uneven);
     ``shuffle=True`` uses repartition for exactly even output at the cost of
     a full exchange. The output is written with the session's ORC codec
-    unless ``compression`` names one. Returns before/after stats.
+    unless ``compression`` names one.
+
+    Row order: each output file is sorted within itself
+    (``sortWithinPartitions``) by the keys ``_cluster_keys`` picks, or keeps
+    the input order when they would not store fewer bytes. The keys are the
+    primitive columns in ascending order of distinct count, the standard
+    row-reordering heuristic for run-length and dictionary encodings; the
+    leading keys' row-group min/max narrow too, which is what stripe and
+    row-group pruning read. A driver-side trial decides: the first stripe of
+    the largest source file, read with pyarrow like the other footer reads
+    in ``sources/`` (``metadata.directory_statistics``), is encoded in input
+    order and sorted, with the codec of this write. The trial is required,
+    not a refinement: cardinality sorting shrinks lineitem by 9-21% but
+    grows tables with sequential keys (``p_partkey``, ``c_custkey``) by up
+    to 70%, since their delta encoding is lost, and the trial's verdict
+    matched the full-file outcome on all 11 inputs tried (CHANGES.md). On
+    the benchmark's ingest slice (16 files of up to 2,000 lineitem rows) the
+    decision takes about 16 ms and starts no Spark job, and the sort about
+    60 ms, against 0.27 s for the input-order compaction.
+
+    Returns before/after stats, and ``sort_keys``: the keys applied, ``[]``
+    when the input order won.
     """
     src_files, src_bytes = _hadoop_dir_stats(spark, src_dir)
     n_out = max(1, -(-src_bytes // target_file_bytes))
     df = spark.read.orc(src_dir)
     out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
+    codec = compression or spark.conf.get("spark.sql.orc.compression.codec")
+    keys = _cluster_keys(src_dir, codec)
+    if not set(keys) <= set(df.columns):
+        # the sampled file has a column the schema Spark inferred lacks
+        keys = []
+    if keys:
+        out = out.sortWithinPartitions(*keys)
     writer = out.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
@@ -295,6 +400,7 @@ def compact_orc(
         "dst_files": dst_files,
         "dst_bytes": dst_bytes,
         "target_file_bytes": target_file_bytes,
+        "sort_keys": keys,
     }
 
 

@@ -67,11 +67,11 @@ def test_best_of_is_net_of_steal():
 HOST = "h-local"
 
 
-def _artifact(root, name, cpus, sf, queries, host=HOST):
+def _artifact(root, name, cpus, sf, queries, host=HOST, **fields):
     """A committed BENCH artifact; ``queries=None`` stands for a stdout line
     that did not parse, ``host=None`` for one from before the line named its
-    machine."""
-    line = None if queries is None else {"queries": queries, "drift": 6.0, "sf": sf}
+    machine. ``fields`` go onto the line (``cutoff``, ``n_below_cutoff``)."""
+    line = None if queries is None else {"queries": queries, "drift": 6.0, "sf": sf, **fields}
     if line is not None and host is not None:
         line["host"] = host
     record = {"n": 1, "rc": 0, "cpus": cpus, "sf": sf, "parsed": line}
@@ -144,3 +144,30 @@ def test_equal_times_are_not_flagged(tmp_path):
     summary = bench.compare(dict(prev), 0.1, 4, HOST, str(tmp_path))
     assert summary["flagged"] == {}
     assert summary["geomean"] == 1.0
+
+
+@pytest.mark.parametrize(
+    "fields, printed",
+    [
+        ({"cutoff": 0.5, "n_below_cutoff": 3}, {"a": 2.0}),
+        # a line from before it recorded its cutoff: the smallest printed
+        # time, 0.5 here, stands in for it
+        ({}, {"a": 2.0, "b": 0.5}),
+    ],
+    ids=["cutoff", "no_cutoff"],
+)
+def test_a_query_under_the_baseline_cutoff_is_compared(tmp_path, fields, printed):
+    """A query the baseline ran under its 0.5 s cutoff is flagged above
+    max(1.5 * 0.5, 0.5 + 0.5) = 1.0 s, not ignored."""
+    _artifact(tmp_path, "BENCH_r1.json", 4, 0.1, printed, **fields)
+    slow = bench.compare({**printed, "q": 1.2}, 0.1, 4, HOST, str(tmp_path))
+    assert slow["flagged"] == {"q": 2.4}
+    assert "q" not in slow["ratios"] and slow["n"] == len(printed)
+    fast = bench.compare({**printed, "q": 0.6}, 0.1, 4, HOST, str(tmp_path))
+    assert fast["flagged"] == {}
+
+
+def test_a_query_the_baseline_did_not_run_is_not_compared(tmp_path):
+    _artifact(tmp_path, "BENCH_r1.json", 4, 0.1, {"a": 2.0}, cutoff=0.5, n_below_cutoff=0)
+    summary = bench.compare({"a": 2.0, "q": 3.0}, 0.1, 4, HOST, str(tmp_path))
+    assert summary["flagged"] == {}

@@ -89,6 +89,28 @@ class TestMetadata:
         assert stats["total_byte_size"] > 0
         assert all(s.num_rows >= 0 for s in stats["files"])
 
+    @pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "k=v"])
+    def test_listing_counts_only_what_spark_reads(self, spark, tmp_path, partitioned):
+        """Hidden names and ``_``/``.`` directories (a job's ``_temporary/``)
+        are not counted; ``k=v`` partition directories are."""
+        import pyarrow as pa
+
+        d = tmp_path / "lake"
+        visible = d / "k=1" if partitioned else d
+        hidden = [
+            visible / "_tmp.orc",
+            visible / ".x.orc",
+            d / "_temporary" / "0" / "part-1.orc",
+            d / ".hidden" / "part-2.orc",
+        ]
+        for f in [visible / "part-0.orc", *hidden]:
+            f.parent.mkdir(parents=True, exist_ok=True)
+            porc.write_table(pa.table({"x": [1, 2, 3]}), str(f))
+        stats = directory_statistics(str(d))
+        assert stats["num_files"] == 1
+        assert stats["num_rows"] == spark.read.orc(str(d)).count() == 3
+        assert infer_merged_schema(str(d)).names == ["x"]
+
     def test_merged_schema_over_directory(self, spark, sf_dir):
         d = orc_dir_for(spark, sf_dir, "lineitem")
         merged = infer_merged_schema(d)
@@ -209,18 +231,20 @@ class TestWriter:
     def test_compact_orc_merges_small_files(self, spark, sf_dir, tmp_path):
         from datafusion_datasource_orc_spark.sources.orc import compact_orc
 
-        df = load_table(spark, sf_dir, "orders")
-        shards = str(tmp_path / "orders_shards")
-        # simulate a fragmented ingest: ~30 tiny files
-        write_orc(df.repartition(30), shards)
-        compacted = str(tmp_path / "orders_compacted")
-        stats = compact_orc(spark, shards, compacted, target_file_bytes=1 << 30)
-        assert stats["src_files"] >= 25
-        assert stats["dst_files"] == 1  # everything fits one 1 GiB target
-        back = spark.read.orc(compacted)
-        assert back.count() == df.count()
-        # content-preserving: same multiset of full rows
-        assert Counter(back.collect()) == Counter(df.collect())
+        # shuffled shards, which the compaction sorts: the rows must survive
+        for table in ["orders", "lineitem"]:
+            df = load_table(spark, sf_dir, table)
+            shards = str(tmp_path / f"{table}_shards")
+            # simulate a fragmented ingest: ~30 tiny files
+            write_orc(df.repartition(30), shards)
+            compacted = str(tmp_path / f"{table}_compacted")
+            stats = compact_orc(spark, shards, compacted, target_file_bytes=1 << 30)
+            assert stats["src_files"] >= 25
+            assert stats["dst_files"] == 1  # everything fits one 1 GiB target
+            assert stats["sort_keys"] and set(stats["sort_keys"]) <= set(df.columns)
+            _assert_sorted_within_files(compacted, stats["sort_keys"])
+            # content-preserving: same multiset of full rows
+            _assert_same_rows(spark.read.orc(compacted), df)
 
     def test_compact_orc_even_with_shuffle(self, spark, sf_dir, tmp_path):
         from datafusion_datasource_orc_spark.sources.orc import compact_orc
@@ -237,7 +261,10 @@ class TestWriter:
             spark, shards, out, target_file_bytes=max(-(-total // 2), 1), shuffle=True
         )
         assert stats["dst_files"] == 2
-        assert spark.read.orc(out).count() == df.count()
+        # the sort runs after the exchange: each output file is in key order
+        assert stats["sort_keys"]
+        _assert_sorted_within_files(out, stats["sort_keys"])
+        _assert_same_rows(spark.read.orc(out), df)
 
     def test_dir_stats_list_without_starting_processes(
         self, spark, tmp_path, process_starts
@@ -289,6 +316,163 @@ class TestWriter:
             spark.sql("DROP TABLE IF EXISTS codec_bucketed")
         assert files
         assert codecs == {codec}
+
+
+def _assert_same_rows(a, b):
+    """``a`` and ``b`` hold the same multiset of full rows."""
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _assert_sorted_within_files(path, keys):
+    """Every ORC file under ``path`` holds its rows in ``keys`` order."""
+    from datafusion_datasource_orc_spark.sources.metadata import _orc_files
+
+    for f in _orc_files(path) if keys else []:
+        table = porc.read_table(f, columns=keys)
+        assert table.sort_by([(k, "ascending") for k in keys]).equals(table), f
+
+
+def _both_orders(spark, src, out):
+    """``compact_orc`` of ``src`` and the input-order rewrite of it (the
+    ordering decision patched to ``[]``): ``(stats, input_order_stats)``,
+    written to ``out/clustered`` and ``out/input_order``."""
+    from datafusion_datasource_orc_spark.sources import orc
+
+    stats = orc.compact_orc(spark, src, str(out / "clustered"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(orc, "_cluster_keys", lambda src_dir, codec: [])
+        input_order = orc.compact_orc(spark, src, str(out / "input_order"))
+    assert input_order["sort_keys"] == []
+    return stats, input_order
+
+
+def _sf01(sf_dir):
+    """The sf0.01 corpus beside the test corpus: the benchmark's scale."""
+    return os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+
+
+def _ingest_slice(spark, sf_dir):
+    """The benchmark's ingest slice at sf0.01: the lineitem rows with an odd
+    ``l_orderkey``, about 30,000."""
+    from pyspark.sql import functions as F
+
+    return load_table(spark, _sf01(sf_dir), "lineitem").where(
+        F.col("l_orderkey").bitwiseAND(1) == 1
+    )
+
+
+class TestCompactionOrder:
+    """``compact_orc`` sorts each output file by ascending column cardinality
+    only where a driver-side trial encode of one stripe shows it stores fewer
+    bytes; sf0.01 sources written as 2,000-row files, as the benchmark's
+    ingest op writes them."""
+
+    def test_random_order_lineitem_is_clustered_smaller(self, spark, sf_dir, tmp_path):
+        from pyspark.sql import functions as F
+
+        df = _ingest_slice(spark, sf_dir).orderBy(F.rand(7))
+        src = str(tmp_path / "raw")
+        write_orc(df, src, target_file_rows=2000)
+        stats, input_order = _both_orders(spark, src, tmp_path)
+        # distinct counts in a 2,000-row file: 2, 3, 7, 9, 11, then 50, whose
+        # product first reaches the slice's 29,822 rows
+        assert stats["sort_keys"] == [
+            "l_linestatus",
+            "l_returnflag",
+            "l_linenumber",
+            "l_tax",
+            "l_discount",
+            "l_quantity",
+        ]
+        assert stats["dst_bytes"] < 0.9 * input_order["dst_bytes"]
+        _assert_sorted_within_files(str(tmp_path / "clustered"), stats["sort_keys"])
+        _assert_same_rows(spark.read.orc(str(tmp_path / "clustered")), df)
+
+    @pytest.mark.parametrize("table", ["part", "orders"])
+    def test_sequential_keys_keep_input_order(self, spark, sf_dir, tmp_path, table):
+        """Sorting ``part`` by cardinality stores 1.7x the bytes, ``orders``
+        1.02x: the sequential keys lose their delta encoding. The trial
+        sees it, and the output is the input-order rewrite, byte for byte
+        in size."""
+        df = load_table(spark, _sf01(sf_dir), table)
+        src = str(tmp_path / "raw")
+        write_orc(df, src, target_file_rows=2000)
+        stats, input_order = _both_orders(spark, src, tmp_path)
+        assert stats["sort_keys"] == []
+        assert stats["dst_bytes"] == input_order["dst_bytes"]
+        _assert_same_rows(spark.read.orc(str(tmp_path / "clustered")), df)
+
+    def test_decision_starts_no_job_or_process(
+        self, spark, sf_dir, tmp_path, process_starts
+    ):
+        from datafusion_datasource_orc_spark.sources.orc import _cluster_keys
+
+        src = str(tmp_path / "raw")
+        write_orc(_ingest_slice(spark, sf_dir), src, target_file_rows=2000)
+        sc = spark.sparkContext
+        sc.setJobGroup("cluster_keys_probe", "cluster_keys_probe")
+        try:
+            keys = _cluster_keys(src, "zstd")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert keys
+        assert list(sc.statusTracker().getJobIdsForGroup("cluster_keys_probe")) == []
+        assert process_starts(lambda: _cluster_keys(src, "zstd")) == 0
+
+    def test_sources_the_sample_cannot_order(self, spark, tmp_path):
+        """An empty source (one ORC file with no stripe) and a source whose
+        largest file has a column the schema Spark inferred lacks keep the
+        input order, and compact as before."""
+        import pyarrow as pa
+
+        from datafusion_datasource_orc_spark.sources.orc import compact_orc
+
+        empty = str(tmp_path / "empty")
+        write_orc(spark.range(0), empty)
+        stats = compact_orc(spark, empty, str(tmp_path / "empty_out"))
+        assert stats["sort_keys"] == []
+        assert spark.read.orc(str(tmp_path / "empty_out")).count() == 0
+
+        # Spark takes the schema of the first file it lists; with either
+        # name on the small file, some listing order puts it first
+        n = 5000
+        wide = pa.table({"x": [i % 7 for i in range(n)], "y": [i % 3 for i in range(n)]})
+        for small, large in [("a.orc", "b.orc"), ("b.orc", "a.orc")]:
+            mixed = tmp_path / f"mixed_{small}"
+            mixed.mkdir()
+            porc.write_table(pa.table({"x": [1, 2, 3]}), str(mixed / small))
+            porc.write_table(wide, str(mixed / large))
+            out = str(tmp_path / f"out_{small}")
+            stats = compact_orc(spark, str(mixed), out)
+            back = spark.read.orc(out)
+            assert set(stats["sort_keys"]) <= set(back.columns)
+            assert back.count() == n + 3
+
+    def test_clustering_narrows_row_group_ranges(self, spark, sf_dir, tmp_path):
+        """Fewer row groups (stride 10,000) admit the leading keys' values by
+        their min/max: 3 of 3 in input order, 2 of 3 clustered."""
+        from pyspark.sql import functions as F
+
+        from datafusion_datasource_orc_spark.sources import orcmeta
+
+        src = str(tmp_path / "raw")
+        write_orc(_ingest_slice(spark, sf_dir), src, target_file_rows=2000)
+        stats, _ = _both_orders(spark, src, tmp_path)
+        assert stats["sort_keys"][:2] == ["l_linestatus", "l_returnflag"]
+
+        def admitting(layout, column, value):
+            groups = orcmeta.load(spark, str(tmp_path / layout), stats="rowgroups")
+            return groups.where(
+                (F.col("column_name") == column)
+                & (F.col("min_s") <= value)
+                & (F.col("max_s") >= value)
+            ).count()
+
+        for column, value in [("l_linestatus", "F"), ("l_returnflag", "A")]:
+            assert admitting("input_order", column, value) == 3
+            assert admitting("clustered", column, value) == 2
 
 
 def _compacted(spark, df, tmp_path, kwargs):
