@@ -111,6 +111,28 @@ class TestMetadata:
         assert stats["num_rows"] == spark.read.orc(str(d)).count() == 3
         assert infer_merged_schema(str(d)).names == ["x"]
 
+    def test_footer_reads_start_no_thread(self, spark, tmp_path, monkeypatch):
+        """Local footers are read one after another: on 16 files,
+        ``directory_statistics`` and ``infer_merged_schema`` start no
+        thread (a 32-thread pool took longer than the reads)."""
+        import threading
+
+        out = str(tmp_path / "sixteen")
+        write_orc(spark.range(1600), out, target_file_rows=100, coalesce=1)
+        started, start = [], threading.Thread.start
+
+        def counting_start(thread):
+            started.append(thread.name)
+            start(thread)
+
+        monkeypatch.setattr(threading.Thread, "start", counting_start)
+        stats = directory_statistics(out)
+        merged = infer_merged_schema(out)
+        monkeypatch.undo()
+        assert stats["num_files"] == 16
+        assert merged.names == ["id"]
+        assert started == []
+
     def test_merged_schema_over_directory(self, spark, sf_dir):
         d = orc_dir_for(spark, sf_dir, "lineitem")
         merged = infer_merged_schema(d)
@@ -272,7 +294,10 @@ class TestWriter:
         """The compaction listing starts no process: through ``listFiles``
         the local filesystem forked ``ls -ld`` once per file and directory
         (19 here). The counts equal a Python walk, through partition
-        directories."""
+        directories, and leave out a failed job's ``_temporary/`` file,
+        which Spark never reads."""
+        import shutil
+
         from pyspark.sql import functions as F
 
         from datafusion_datasource_orc_spark.sources.orc import _hadoop_dir_stats
@@ -286,6 +311,8 @@ class TestWriter:
             for f in names
             if not f.startswith(("_", "."))
         ]
+        os.makedirs(os.path.join(out, "_temporary", "0"))
+        shutil.copy(files[0], os.path.join(out, "_temporary", "0", "part-x.orc"))
         assert process_starts(lambda: _hadoop_dir_stats(spark, out)) == 0
         assert _hadoop_dir_stats(spark, out) == (16, sum(os.path.getsize(f) for f in files))
         assert len(files) == 16
@@ -341,7 +368,7 @@ def _both_orders(spark, src, out):
 
     stats = orc.compact_orc(spark, src, str(out / "clustered"))
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(orc, "_cluster_keys", lambda src_dir, codec: [])
+        mp.setattr(orc, "_cluster_keys", lambda stats, codec: [])
         input_order = orc.compact_orc(spark, src, str(out / "input_order"))
     assert input_order["sort_keys"] == []
     return stats, input_order
@@ -410,21 +437,29 @@ class TestCompactionOrder:
 
         src = str(tmp_path / "raw")
         write_orc(_ingest_slice(spark, sf_dir), src, target_file_rows=2000)
+
+        def decide():
+            return _cluster_keys(directory_statistics(src), "zstd")
+
         sc = spark.sparkContext
         sc.setJobGroup("cluster_keys_probe", "cluster_keys_probe")
         try:
-            keys = _cluster_keys(src, "zstd")
+            keys = decide()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert keys
         assert list(sc.statusTracker().getJobIdsForGroup("cluster_keys_probe")) == []
-        assert process_starts(lambda: _cluster_keys(src, "zstd")) == 0
+        assert process_starts(decide) == 0
 
     def test_sources_the_sample_cannot_order(self, spark, tmp_path):
-        """An empty source (one ORC file with no stripe) and a source whose
-        largest file has a column the schema Spark inferred lacks keep the
-        input order, and compact as before."""
+        """An empty source (one ORC file with no stripe) keeps the input
+        order and compacts as before. A source whose files differ in
+        columns keeps every column, in either listing order: the 3 rows of
+        its small ``x`` file read a null ``y`` and ``t``, and the
+        Spark-written wide file's ``timestamp_ntz`` column keeps its type."""
+        import shutil
+
         import pyarrow as pa
 
         from datafusion_datasource_orc_spark.sources.orc import compact_orc
@@ -435,20 +470,32 @@ class TestCompactionOrder:
         assert stats["sort_keys"] == []
         assert spark.read.orc(str(tmp_path / "empty_out")).count() == 0
 
+        n = 5000
+        wide = spark.range(n).selectExpr(
+            "id % 7 AS x",
+            "id % 3 AS y",
+            "timestamp_ntz'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id % 11) AS t",
+        )
+        write_orc(wide, str(tmp_path / "wide"), coalesce=1)
+        (wide_file,) = spark.read.orc(str(tmp_path / "wide")).inputFiles()
+        sources = wide.unionByName(
+            spark.createDataFrame([(1,), (2,), (3,)], "x bigint"), allowMissingColumns=True
+        )
         # Spark takes the schema of the first file it lists; with either
         # name on the small file, some listing order puts it first
-        n = 5000
-        wide = pa.table({"x": [i % 7 for i in range(n)], "y": [i % 3 for i in range(n)]})
         for small, large in [("a.orc", "b.orc"), ("b.orc", "a.orc")]:
             mixed = tmp_path / f"mixed_{small}"
             mixed.mkdir()
             porc.write_table(pa.table({"x": [1, 2, 3]}), str(mixed / small))
-            porc.write_table(wide, str(mixed / large))
+            shutil.copy(unquote(urlparse(wide_file).path), str(mixed / large))
             out = str(tmp_path / f"out_{small}")
             stats = compact_orc(spark, str(mixed), out)
             back = spark.read.orc(out)
+            assert back.columns == ["x", "y", "t"]
+            assert dict(back.dtypes)["t"] == "timestamp_ntz"
             assert set(stats["sort_keys"]) <= set(back.columns)
-            assert back.count() == n + 3
+            assert back.where("y IS NULL").count() == 3
+            _assert_same_rows(back, sources)
 
     def test_clustering_narrows_row_group_ranges(self, spark, sf_dir, tmp_path):
         """Fewer row groups (stride 10,000) admit the leading keys' values by
