@@ -19,6 +19,15 @@ the session's ``spark.sql.orc.compression.codec`` (zstd, by ``get_spark`` and
 by Spark's own default) unless a caller passes ``compression``, which then
 wins for that write.
 
+Local writes: in a session whose JVM ``get_spark`` starts, ``file://`` is
+served by ``session.LOCAL_FS_CLASS`` (``jvm/NioLocalFileSystem.java``),
+Hadoop's checksummed local filesystem with permissions set through
+``java.nio``. The writers here create their files, ``.crc`` sidecars and
+directories with the same modes and checksums, but without the ``chmod``
+process Hadoop starts for each one when libhadoop is absent: a 16-file
+``write_orc`` of the benchmark's ingest slice plus its ``compact_orc``
+starts 0 processes, where it started 46.
+
 Scale notes: registration is metadata-only (no data read besides footers);
 ``write_orc`` controls output file sizing via ``maxRecordsPerFile`` /
 repartition so a 100 TB write yields reader-friendly (~128-512 MB) files

@@ -5,7 +5,7 @@ it is full, ``pipeline_end_to_end`` recompiled about 80 classes on every
 run at sf0.001.
 Both queries here generate the same code on every run. Queries whose code
 changes between runs, such as ``dedup_connected_components_lsh`` (AQE can
-number its codegen stages differently), are listed in ROADMAP item 3.
+number its codegen stages differently), are listed in ROADMAP item 2 (d).
 """
 
 from __future__ import annotations

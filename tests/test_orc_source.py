@@ -317,6 +317,43 @@ class TestWriter:
         assert _hadoop_dir_stats(spark, out) == (16, sum(os.path.getsize(f) for f in files))
         assert len(files) == 16
 
+    def test_local_writes_start_no_process(self, spark, sf_dir, tmp_path, process_starts):
+        """The benchmark's ingest write and its compaction start no process:
+        through Hadoop's local filesystem without libhadoop, each file,
+        ``.crc`` sidecar and directory forked a ``chmod`` (46 here).
+        ``get_spark``'s filesystem sets the same modes and keeps the
+        checksum layer, which still verifies reads."""
+        import stat
+
+        from datafusion_datasource_orc_spark.sources.orc import compact_orc
+
+        src = _ingest_slice(spark, sf_dir)
+        raw, compacted = str(tmp_path / "raw"), str(tmp_path / "compacted")
+
+        def ingest():
+            write_orc(src, raw, target_file_rows=2000)
+            compact_orc(spark, raw, compacted)
+
+        assert process_starts(ingest) == 0
+        data = []
+        for top in (raw, compacted):
+            for d, _, names in os.walk(top):
+                assert stat.S_IMODE(os.stat(d).st_mode) == 0o755, d
+                data += [os.path.join(d, f) for f in names if f.endswith(".orc")]
+        assert len(data) > 2
+        for f in data:
+            assert stat.S_IMODE(os.stat(f).st_mode) == 0o644, f
+            head, name = os.path.split(f)
+            assert os.path.isfile(os.path.join(head, f".{name}.crc")), f
+        first = sorted(data)[0]
+        with open(first, "r+b") as fh:
+            fh.seek(1000)
+            byte = fh.read(1)[0]
+            fh.seek(1000)
+            fh.write(bytes([byte ^ 0xFF]))
+        with pytest.raises(Exception, match="ChecksumException"):
+            spark.read.orc(os.path.dirname(first)).collect()
+
     @pytest.mark.parametrize(
         "conf, kwargs, codec",
         [(None, {}, "ZSTD"), ("zlib", {}, "ZLIB"), ("zlib", {"compression": "lz4"}, "LZ4")],
