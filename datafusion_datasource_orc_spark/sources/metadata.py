@@ -18,6 +18,11 @@ read waits on the network; a local footer read does not, and a thread costs
 more than the read: over the 15 files of 2,000 lineitem rows that the
 benchmark's ingest op writes, a 32-thread pool took 1.8 ms and a serial loop
 0.6 ms (medians of 15, 4 vCPUs). Nothing here starts a thread.
+
+Listing. ``_admitted`` is the one rule for which files of a directory are
+ORC: ``_orc_files`` applies it to every directory it walks, and the
+``orcmeta`` data source (batch, stream and ``load``) to the directory it is
+given.
 """
 
 from __future__ import annotations
@@ -27,8 +32,6 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.orc as pa_orc
-
-from datafusion_datasource_orc_spark.sources.orcmeta import _admitted
 
 
 @dataclass(frozen=True)
@@ -46,9 +49,32 @@ class OrcFileStatistics:
     writer_version: str | None = None
 
 
+def _is_orc(full: str) -> bool:
+    try:
+        with open(full, "rb") as fh:
+            return fh.read(3) == b"ORC"
+    except OSError:
+        return False
+
+
+def _admitted(path: str) -> list[str]:
+    """Sorted names of the ORC files directly under ``path``: ``*.orc`` by
+    name, and an extensionless file only if it starts with the 3-byte ORC
+    magic. Hidden names (``_``, ``.``) and ``.crc`` sidecars are never
+    admitted, and a stray LICENSE or README.txt must not have its tail bytes
+    walked as footer protobuf. The ``orcmeta`` batch reader, its stream
+    reader and ``load`` list through here, as ``_orc_files`` does."""
+    return sorted(
+        f
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+        and (f.endswith(".orc") or ("." not in f and _is_orc(os.path.join(path, f))))
+    )
+
+
 def _orc_files(path: str) -> list[str]:
     """Sorted paths of the ORC files Spark reads under ``path``: each
-    directory admits files by ``orcmeta._admitted``'s name rule, and the
+    directory admits files by ``_admitted``'s name rule, and the
     walk descends into ``k=v`` partition directories but never into ``_``
     or ``.`` ones (``_temporary/``, ``.hidden/``), as Spark's listing does."""
     if os.path.isfile(path):

@@ -11,21 +11,32 @@ themselves. This module closes that gap from the PUBLIC ORC specification
 - PostScript (uncompressed protobuf): footerLength=1, compression=2
   (0 NONE / 1 ZLIB / 2 SNAPPY / 4 ZSTD / 5 LZ4).
 - Footer (compressed as an ORC chunk stream — repeated 3-byte little-endian
-  header ``len<<1 | isOriginal`` + chunk): types=4 (root struct's
-  fieldNames give column names), numberOfRows=6, statistics=7 (one
-  ColumnStatistics per flattened type; index 0 is the root struct, flat
-  schemas map column j -> statistics[j+1]).
+  header ``len<<1 | isOriginal`` + chunk): stripes=3, types=4,
+  numberOfRows=6, statistics=7 (one ColumnStatistics per flattened type,
+  the root struct at index 0).
 - ColumnStatistics: numberOfValues=1, intStatistics=2 (sint64 zigzag
   min/max/sum), doubleStatistics=3 (IEEE754 LE min/max/sum),
   stringStatistics=4 (utf8 min/max), decimalStatistics=6 (string min/max),
   dateStatistics=7 (sint32 days), timestampStatistics=9 (minimumUtc=3 /
   maximumUtc=4, zigzag epoch millis), hasNull=10.
 
+Five readers cover the metadata axes: file statistics, stripe statistics,
+row-group statistics, bloom filters and encodings. Every one of them maps
+top-level columns to flattened type ids through ``_column_ids`` (the root
+struct's subtypes), so a nested column shifts the ids after it correctly.
+
+I/O. The file and stripe statistics read the file tail only: one ranged
+read of ``min(file size, size_hint)`` bytes, and a second when the tail is
+longer. The row-group, bloom and encoding readers walk the stripes once with
+``_stripe_indexes``: the tail read, then each stripe's footer and index
+region. Beyond the tail prefetch no read touches a stripe's data region; a
+file shorter than ``size_hint`` (256 KiB by default) is read whole by that
+one prefetch.
+
 Only varint/fixed64/length-delimited wire types occur, so the protobuf
 walker below is ~30 lines, dependency-free, and runs inside the ``orcmeta``
 data source's reader, on the driver (``orcmeta.load``) or in its per-file
-tasks (``spark.read.format("orcmeta")``): at 100 TB the stats scan reads
-ONLY file tails (one ranged read per file), never row data.
+tasks (``spark.read.format("orcmeta")``).
 """
 
 from __future__ import annotations
@@ -78,6 +89,12 @@ def _fields(buf: bytes):
         else:  # groups (3/4) never occur in ORC protos
             raise ValueError(f"unsupported protobuf wire type {wt}")
         yield fno, wt, v
+
+
+def _scalar_fields(buf: bytes) -> dict[int, Any]:
+    """{field_no: value} of one message whose fields of interest occur
+    once; a repeated field keeps its last value."""
+    return {fno: v for fno, _wt, v in _fields(buf)}
 
 
 # ---------------------------------------------------------------------------
@@ -288,17 +305,9 @@ def _read_tail_sections(
         f.seek(size - tail_len)
         tail = f.read(tail_len)
         ps_len = tail[-1]
-        ps = tail[-1 - ps_len : -1]
-        footer_len = 0
-        metadata_len = 0
-        compression = _NONE
-        for fno, _wt, v in _fields(ps):
-            if fno == 1:
-                footer_len = v
-            elif fno == 2:
-                compression = v
-            elif fno == 5:
-                metadata_len = v
+        ps = _scalar_fields(tail[-1 - ps_len : -1])
+        footer_len, compression = ps.get(1, 0), ps.get(2, _NONE)
+        metadata_len = ps.get(5, 0)
         need = footer_len + ps_len + 1 + (metadata_len if with_metadata else 0)
         if need > tail_len:  # huge tail: one more ranged read
             f.seek(size - need)
@@ -314,27 +323,46 @@ def _read_tail_sections(
     return footer, metadata, compression
 
 
-def _footer_column_names(footer: bytes) -> list[str]:
-    """Root struct's fieldNames (types[0] of the footer) — the column-name
-    source for BOTH the file-level and stripe-level statistics surfaces."""
-    names: list[str] = []
+def _column_ids(footer: bytes) -> dict[str, int]:
+    """{top-level column name: flattened type id}, from the root struct (the
+    footer's first Type): names from its fieldNames (Type field 3), ids from
+    its subtypes (field 2, packed or not). Statistics, row-index and bloom
+    streams, and encodings are all indexed by type id. Types are numbered
+    depth-first from the root at 0, so a flat schema's column j has id j+1,
+    and a nested column shifts every later id by the size of its subtree:
+    after ``a struct<x, y>``, the next column is id 4."""
     for fno, _wt, v in _fields(footer):
-        if fno == 4:  # first Type message = root struct
-            for f2, _w2, v2 in _fields(v):
-                if f2 == 3:
-                    names.append(v2.decode("utf-8"))
-            break
-    return names
+        if fno != 4:
+            continue
+        names: list[str] = []
+        ids: list[int] = []
+        for f2, w2, v2 in _fields(v):
+            if f2 == 3:
+                names.append(v2.decode("utf-8"))
+            elif f2 == 2 and w2 == 0:
+                ids.append(v2)
+            elif f2 == 2:  # packed: one blob of varints
+                pos = 0
+                while pos < len(v2):
+                    tid, pos = _varint(v2, pos)
+                    ids.append(tid)
+        return dict(zip(names, ids))
+    return {}
+
+
+def _by_name(ids: dict[str, int], by_id: list) -> dict[str, Any]:
+    return {name: by_id[i] for name, i in ids.items() if i < len(by_id)}
 
 
 def read_column_statistics(
     path: str, size_hint: int = DEFAULT_TAIL_HINT
 ) -> dict[str, Any]:
     """Parse one ORC file's footer: column names, row count, and per-column
-    file-level statistics — from the file TAIL only (one ranged read)."""
+    file-level statistics, each top-level column's found through
+    ``_column_ids``. Reads the file tail only: one ranged read, two when
+    ``size_hint`` is shorter than the tail."""
     footer, _, _ = _read_tail_sections(path, size_hint=size_hint)
-
-    column_names = _footer_column_names(footer)
+    ids = _column_ids(footer)
     stats: list[dict[str, Any]] = []
     num_rows = None
     for fno, _wt, v in _fields(footer):
@@ -342,16 +370,7 @@ def read_column_statistics(
             num_rows = v
         elif fno == 7:
             stats.append(_parse_column_statistics(v))
-    # flat schemas: statistics[0] is the root struct, column j -> j+1. Nested
-    # schemas flatten depth-first; this surface targets flat warehouse tables
-    # (the reference's scope), so nested children beyond the top level are
-    # simply extra entries past len(column_names) and are dropped here.
-    by_column = {
-        name: stats[i + 1]
-        for i, name in enumerate(column_names)
-        if i + 1 < len(stats)
-    }
-    return {"num_rows": num_rows, "columns": column_names, "stats": by_column}
+    return {"num_rows": num_rows, "columns": list(ids), "stats": _by_name(ids, stats)}
 
 
 def read_stripe_statistics(
@@ -361,61 +380,74 @@ def read_stripe_statistics(
     ColumnStatistics set PER STRIPE (orc_proto: Metadata { repeated
     StripeStatistics = 1 }, StripeStatistics { repeated ColumnStatistics
     colStats = 1 }) — the granularity the engine's stripe pruning actually
-    consults, exposed as data. Column names come from the footer; the same
-    root-at-index-0 flattening as the file-level statistics applies."""
+    consults, exposed as data. Each set is indexed by type id, like the
+    footer's, and mapped to column names through ``_column_ids``. Reads the
+    file tail only, as ``read_column_statistics`` does."""
     footer, metadata, _ = _read_tail_sections(
         path, with_metadata=True, size_hint=size_hint
     )
-    column_names = _footer_column_names(footer)
-    stripes: list[dict[str, Any]] = []
-    if metadata:
-        for fno, _wt, v in _fields(metadata):
-            if fno != 1:  # StripeStatistics
+    ids = _column_ids(footer)
+    stripes = [
+        _by_name(
+            ids, [_parse_column_statistics(v2) for f2, _w2, v2 in _fields(v) if f2 == 1]
+        )
+        for fno, _wt, v in _fields(metadata or b"")
+        if fno == 1  # StripeStatistics
+    ]
+    return {"columns": list(ids), "stripes": stripes}
+
+
+# ---------------------------------------------------------------------------
+# stripes: one walk over stripe footers and index regions
+# ---------------------------------------------------------------------------
+
+
+def _stripe_indexes(path: str, size_hint: int):
+    """The stripe walk behind the row-group, bloom and encoding readers.
+
+    Each stripe is [index][data][stripe footer] (public ORC spec). The
+    footer's StripeInformation (field 3: offset=1, indexLength=2,
+    dataLength=3, footerLength=4) locates both ends; the stripe footer
+    (StripeFooter { repeated Stream streams=1 { kind=1, column=2, length=3 };
+    repeated ColumnEncoding columns=2 }) lists the streams IN FILE ORDER,
+    index streams first, so cumulative lengths locate each one inside the
+    index region, and the first stream that runs past it is a data stream.
+
+    Returns ``(ids, compression, stripes)``: the footer's ``_column_ids``,
+    its compression kind, and per stripe ``(stripe footer, streams)`` with
+    the footer decompressed and ``streams`` the ``(kind, type id,
+    compressed bytes)`` of each index-region stream. I/O: the tail read,
+    then two ranged reads per stripe (stripe footer, index region); past
+    the tail prefetch, no stripe's data region is read."""
+    footer, _, compression = _read_tail_sections(path, size_hint=size_hint)
+    stripes = []
+    with open(path, "rb") as f:
+        for fno, _wt, v in _fields(footer):
+            if fno != 3:  # StripeInformation
                 continue
-            stats = [
-                _parse_column_statistics(v2)
-                for f2, _w2, v2 in _fields(v)
-                if f2 == 1
-            ]
-            stripes.append(
-                {
-                    name: stats[i + 1]
-                    for i, name in enumerate(column_names)
-                    if i + 1 < len(stats)
-                }
-            )
-    return {"columns": column_names, "stripes": stripes}
+            info = _scalar_fields(v)
+            offset, index_len = info.get(1, 0), info.get(2, 0)
+            f.seek(offset + index_len + info.get(3, 0))
+            sfooter = _decompress_stream(f.read(info.get(4, 0)), compression)
+            f.seek(offset)
+            index_region = f.read(index_len)
+            streams = []
+            pos = 0
+            for f2, _w2, v2 in _fields(sfooter):
+                if f2 != 1:  # Stream
+                    continue
+                stream = _scalar_fields(v2)
+                ln = stream.get(3, 0)
+                if pos + ln > len(index_region):
+                    break  # past the index region: data streams from here on
+                kind, col = stream.get(1, 0), stream.get(2, 0)
+                streams.append((kind, col, index_region[pos : pos + ln]))
+                pos += ln
+            stripes.append((sfooter, streams))
+    return _column_ids(footer), compression, stripes
 
-
-# ---------------------------------------------------------------------------
-# row-group (row index) statistics — granularity below stripes
-# ---------------------------------------------------------------------------
 
 _ROW_INDEX_STREAM = 6  # orc_proto Stream.Kind.ROW_INDEX
-
-
-def _footer_stripe_infos(footer: bytes) -> list[dict[str, int]]:
-    """Footer field 3: repeated StripeInformation { offset=1, indexLength=2,
-    dataLength=3, footerLength=4, numberOfRows=5 } — the byte layout needed
-    to locate each stripe's index region and stripe footer."""
-    infos: list[dict[str, int]] = []
-    for fno, _wt, v in _fields(footer):
-        if fno != 3:
-            continue
-        info = {"offset": 0, "index_len": 0, "data_len": 0, "footer_len": 0, "rows": 0}
-        for f2, _w2, v2 in _fields(v):
-            if f2 == 1:
-                info["offset"] = v2
-            elif f2 == 2:
-                info["index_len"] = v2
-            elif f2 == 3:
-                info["data_len"] = v2
-            elif f2 == 4:
-                info["footer_len"] = v2
-            elif f2 == 5:
-                info["rows"] = v2
-        infos.append(info)
-    return infos
 
 
 def read_rowgroup_statistics(
@@ -427,74 +459,35 @@ def read_rowgroup_statistics(
     supported", src/opener.rs:64-66). Completes the statistics ladder
     file → stripe → row group.
 
-    Layout (public ORC spec): each stripe is [index][data][stripe footer].
-    The stripe footer (StripeFooter { repeated Stream streams=1 { kind=1,
-    column=2, length=3 } }) directories the streams IN FILE ORDER, index
-    streams first; a stream of kind ROW_INDEX holds RowIndex { repeated
-    RowIndexEntry entry=1 }, RowIndexEntry { repeated uint64 positions=1,
-    ColumnStatistics statistics=2 }.
-
-    I/O shape: one tail read (footer) + TWO ranged reads per stripe (the
-    stripe footer, then the whole index region of ``indexLength`` bytes) —
-    still metadata-only; row data is never touched. At 100 TB this runs
-    under ``orcmeta.load`` exactly like the file/stripe modes.
+    A stream of kind ROW_INDEX holds RowIndex { repeated RowIndexEntry
+    entry=1 }, RowIndexEntry { repeated uint64 positions=1, ColumnStatistics
+    statistics=2 }; its column is a type id, mapped to a name through
+    ``_column_ids``. I/O shape is ``_stripe_indexes``': one tail read plus
+    TWO ranged reads per stripe (the stripe footer, then the whole index
+    region of ``indexLength`` bytes) — metadata-only past the tail
+    prefetch. At 100 TB this runs under ``orcmeta.load`` exactly like the
+    file/stripe modes.
     """
-    footer, _, compression = _read_tail_sections(path, size_hint=size_hint)
-    column_names = _footer_column_names(footer)
-    ncols = len(column_names)
+    ids, compression, walked = _stripe_indexes(path, size_hint)
     stripes: list[list[dict[str, Any]]] = []  # [stripe][rowgroup] → by-column
-    with open(path, "rb") as f:
-        for info in _footer_stripe_infos(footer):
-            f.seek(info["offset"] + info["index_len"] + info["data_len"])
-            sfooter = _decompress_stream(f.read(info["footer_len"]), compression)
-            f.seek(info["offset"])
-            index_region = f.read(info["index_len"])
-            # walk the stream directory in file order; index streams come
-            # first, so cumulative lengths locate each within index_region
-            pos = 0
-            per_col_entries: dict[int, list[dict[str, Any]]] = {}
-            for fno, _wt, v in _fields(sfooter):
-                if fno != 1:  # Stream
-                    continue
-                kind, col, ln = 0, 0, 0
-                for f2, _w2, v2 in _fields(v):
-                    if f2 == 1:
-                        kind = v2
-                    elif f2 == 2:
-                        col = v2
-                    elif f2 == 3:
-                        ln = v2
-                if pos + ln > len(index_region):
-                    break  # past the index region: data streams from here on
-                if kind == _ROW_INDEX_STREAM:
-                    rix = _decompress_stream(index_region[pos : pos + ln], compression)
-                    entries = []
-                    for f3, _w3, v3 in _fields(rix):
-                        if f3 != 1:  # RowIndexEntry
-                            continue
-                        st = None
-                        for f4, _w4, v4 in _fields(v3):
-                            if f4 == 2:  # ColumnStatistics
-                                st = _parse_column_statistics(v4)
-                        if st is not None:
-                            entries.append(st)
-                    per_col_entries[col] = entries
-                pos += ln
-            # flat schemas: stream column ids are flattened type ids — root
-            # struct is 0, column j is j+1 (same mapping as the footer stats)
-            n_groups = max(
-                (len(e) for e in per_col_entries.values()), default=0
-            )
-            groups: list[dict[str, Any]] = []
-            for g in range(n_groups):
-                by_col = {}
-                for j in range(ncols):
-                    entries = per_col_entries.get(j + 1)
-                    if entries is not None and g < len(entries):
-                        by_col[column_names[j]] = entries[g]
-                groups.append(by_col)
-            stripes.append(groups)
-    return {"columns": column_names, "stripes": stripes}
+    for _sfooter, streams in walked:
+        entries: dict[int, list[dict[str, Any]]] = {}  # type id → per group
+        for kind, col, raw in streams:
+            if kind == _ROW_INDEX_STREAM:
+                rix = _decompress_stream(raw, compression)
+                entries[col] = [
+                    _parse_column_statistics(entry[2])
+                    for f3, _w3, v3 in _fields(rix)
+                    if f3 == 1 and 2 in (entry := _scalar_fields(v3))
+                ]
+        n_groups = max((len(e) for e in entries.values()), default=0)
+        stripes.append(
+            [
+                {n: entries[i][g] for n, i in ids.items() if g < len(entries.get(i, ()))}
+                for g in range(n_groups)
+            ]
+        )
+    return {"columns": list(ids), "stripes": stripes}
 
 
 # ---------------------------------------------------------------------------
@@ -611,76 +604,47 @@ def read_bloom_filters(
     for ASCII data. Together with read_rowgroup_statistics this is the
     complete row-group pruning input: min/max ranges AND membership — the
     reference's row-level TODO (src/opener.rs:64-66) exceeded at both axes.
-    Same I/O shape as the row-group stats (tail + two ranged reads per
-    stripe)."""
-    footer, _, compression = _read_tail_sections(path, size_hint=size_hint)
-    column_names = _footer_column_names(footer)
+    Stream columns are type ids, mapped to names through ``_column_ids``.
+    Same I/O shape as the row-group stats (``_stripe_indexes``: tail + two
+    ranged reads per stripe)."""
+    ids, compression, walked = _stripe_indexes(path, size_hint)
+    names = {i: name for name, i in ids.items()}
     stripes: list[dict[str, list[dict[str, Any]]]] = []
-    with open(path, "rb") as f:
-        for info in _footer_stripe_infos(footer):
-            f.seek(info["offset"] + info["index_len"] + info["data_len"])
-            sfooter = _decompress_stream(f.read(info["footer_len"]), compression)
-            f.seek(info["offset"])
-            index_region = f.read(info["index_len"])
-            pos = 0
-            by_col: dict[str, list[dict[str, Any]]] = {}
-            for fno, _wt, v in _fields(sfooter):
-                if fno != 1:  # Stream
-                    continue
-                kind, col, ln = 0, 0, 0
-                for f2, _w2, v2 in _fields(v):
-                    if f2 == 1:
-                        kind = v2
-                    elif f2 == 2:
-                        col = v2
-                    elif f2 == 3:
-                        ln = v2
-                if pos + ln > len(index_region):
-                    break  # past the index region: data streams from here on
-                if kind in (_BLOOM_STREAM, _BLOOM_UTF8_STREAM) and (
-                    1 <= col <= len(column_names)
-                ):
-                    bfi = _decompress_stream(
-                        index_region[pos : pos + ln], compression
-                    )
-                    filters = []
-                    for f3, _w3, v3 in _fields(bfi):
-                        if f3 != 1:  # BloomFilter
-                            continue
-                        k = 0
-                        words: list[int] = []
-                        for f4, w4, v4 in _fields(v3):
-                            if f4 == 1:
-                                k = v4
-                            elif f4 == 2:  # legacy bitset: repeated fixed64
-                                if w4 == 1:  # unpacked: one word per field
-                                    words.append(
-                                        int.from_bytes(v4, "little")
-                                    )
-                                else:  # packed: blob of 8-byte LE words
-                                    words.extend(
-                                        int.from_bytes(v4[i : i + 8], "little")
-                                        for i in range(0, len(v4), 8)
-                                    )
-                            elif f4 == 3:  # utf8bitset: the same longs, bytes
-                                words = [
-                                    int.from_bytes(v4[i : i + 8], "little")
-                                    for i in range(0, len(v4), 8)
-                                ]
-                        filters.append(
-                            {
-                                "num_hashes": k,
-                                "num_bits": len(words) * 64,
-                                "words": words,
-                            }
-                        )
-                    name = column_names[col - 1]
-                    # UTF8 (kind 8) wins when a writer emits both kinds
-                    if kind == _BLOOM_UTF8_STREAM or name not in by_col:
-                        by_col[name] = filters
-                pos += ln
-            stripes.append(by_col)
-    return {"columns": column_names, "stripes": stripes}
+    for _sfooter, streams in walked:
+        by_col: dict[str, list[dict[str, Any]]] = {}
+        for kind, col, raw in streams:
+            name = names.get(col)
+            if kind not in (_BLOOM_STREAM, _BLOOM_UTF8_STREAM) or name is None:
+                continue
+            bfi = _decompress_stream(raw, compression)
+            filters = [_bloom_filter(v3) for f3, _w3, v3 in _fields(bfi) if f3 == 1]
+            # UTF8 (kind 8) wins when a writer emits both kinds
+            if kind == _BLOOM_UTF8_STREAM or name not in by_col:
+                by_col[name] = filters
+        stripes.append(by_col)
+    return {"columns": list(ids), "stripes": stripes}
+
+
+def _bloom_filter(buf: bytes) -> dict[str, Any]:
+    """One BloomFilter message → {num_hashes, num_bits, words}."""
+    k = 0
+    words: list[int] = []
+    for f4, w4, v4 in _fields(buf):
+        if f4 == 1:
+            k = v4
+        elif f4 == 2:  # legacy bitset: repeated fixed64
+            if w4 == 1:  # unpacked: one word per field
+                words.append(int.from_bytes(v4, "little"))
+            else:  # packed: blob of 8-byte LE words
+                words.extend(
+                    int.from_bytes(v4[i : i + 8], "little")
+                    for i in range(0, len(v4), 8)
+                )
+        elif f4 == 3:  # utf8bitset: the same longs, bytes
+            words = [
+                int.from_bytes(v4[i : i + 8], "little") for i in range(0, len(v4), 8)
+            ]
+    return {"num_hashes": k, "num_bits": len(words) * 64, "words": words}
 
 
 _ENCODING_KINDS = {0: "DIRECT", 1: "DICTIONARY", 2: "DIRECT_V2", 3: "DICTIONARY_V2"}
@@ -695,34 +659,25 @@ def read_column_encodings(
     fourth axis of the metadata ladder after file/stripe/row-group stats
     and bloom membership: WHICH physical encoding each column got and, for
     dictionary encodings, the exact dictionary cardinality. The encoding
-    list is ordered by flattened type id (root struct = 0, column j = j+1,
-    the same numbering the bloom layout uses). Same I/O shape as the other
-    stripe readers: tail read + one ranged stripe-footer read per stripe."""
-    footer, _, compression = _read_tail_sections(path, size_hint=size_hint)
-    column_names = _footer_column_names(footer)
+    list is ordered by type id, mapped to names through ``_column_ids``.
+    It walks the stripes with ``_stripe_indexes``, like the row-group and
+    bloom readers, so it reads each stripe's index region too, though only
+    the stripe footer carries encodings: tail read + two ranged reads per
+    stripe, and past the tail prefetch never the data region."""
+    ids, _, walked = _stripe_indexes(path, size_hint)
+    names = {i: name for name, i in ids.items()}
     out: list[dict[str, Any]] = []
-    with open(path, "rb") as f:
-        for sidx, info in enumerate(_footer_stripe_infos(footer)):
-            f.seek(info["offset"] + info["index_len"] + info["data_len"])
-            sfooter = _decompress_stream(f.read(info["footer_len"]), compression)
-            cid = 0
-            for fno, _wt, v in _fields(sfooter):
-                if fno != 2:  # ColumnEncoding
-                    continue
-                kind, dsz = 0, 0
-                for f2, _w2, v2 in _fields(v):
-                    if f2 == 1:
-                        kind = v2
-                    elif f2 == 2:
-                        dsz = v2
-                if cid >= 1 and cid <= len(column_names):  # skip the root struct
-                    out.append(
-                        {
-                            "stripe": sidx,
-                            "column": column_names[cid - 1],
-                            "encoding": _ENCODING_KINDS.get(kind, f"UNKNOWN_{kind}"),
-                            "dictionary_size": dsz,
-                        }
-                    )
-                cid += 1
+    for sidx, (sfooter, _streams) in enumerate(walked):
+        encodings = [_scalar_fields(v) for fno, _wt, v in _fields(sfooter) if fno == 2]
+        for cid, enc in enumerate(encodings):
+            if cid in names:
+                kind = enc.get(1, 0)
+                out.append(
+                    {
+                        "stripe": sidx,
+                        "column": names[cid],
+                        "encoding": _ENCODING_KINDS.get(kind, f"UNKNOWN_{kind}"),
+                        "dictionary_size": enc.get(2, 0),
+                    }
+                )
     return out

@@ -34,6 +34,11 @@ The two also differ in time. ``load`` reads the directory when it is
 called and returns a fixed local table: a file added later is not in it,
 and a bad footer fails ``load`` itself. A ``spark.read.format("orcmeta")``
 DataFrame lists and parses again on every action.
+
+Sources. Every reader lists files with ``metadata._admitted``, the same
+rule ``sources.metadata`` walks directories with. The per-file row comes
+from ``metadata.read_orc_statistics``; the ``stats`` modes come from the
+footer parser in ``sources.orcfooter``.
 """
 
 from __future__ import annotations
@@ -49,28 +54,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-
-def _is_orc(full: str) -> bool:
-    try:
-        with open(full, "rb") as fh:
-            return fh.read(3) == b"ORC"
-    except OSError:
-        return False
-
-
-def _admitted(path: str) -> list[str]:
-    """Sorted names of the ORC files directly under ``path``: ``*.orc`` by
-    name, and an extensionless file only if it starts with the 3-byte ORC
-    magic. Hidden names (``_``, ``.``) and ``.crc`` sidecars are never
-    admitted, and a stray LICENSE or README.txt must not have its tail bytes
-    walked as footer protobuf. The batch reader, the stream reader and
-    ``load`` all list through here."""
-    return sorted(
-        f
-        for f in os.listdir(path)
-        if not f.startswith(("_", "."))
-        and (f.endswith(".orc") or ("." not in f and _is_orc(os.path.join(path, f))))
-    )
+from datafusion_datasource_orc_spark.sources import metadata
 
 
 class OrcFilePartition(InputPartition):
@@ -193,7 +177,7 @@ class OrcMetadataReader(DataSourceReader):
     def partitions(self) -> Sequence[OrcFilePartition]:
         return [
             OrcFilePartition(i, os.path.join(self.path, f))
-            for i, f in enumerate(_admitted(self.path))
+            for i, f in enumerate(metadata._admitted(self.path))
             if self._keep(f)
         ]
 
@@ -225,17 +209,21 @@ class OrcMetadataReader(DataSourceReader):
         if self.stats:
             yield from _stats_rows(partition.path, self.stats, self.size_hint)
             return
-        import pyarrow.orc as orc
+        yield _file_row(partition.index, partition.path)
 
-        f = orc.ORCFile(partition.path)
-        yield (
-            partition.index,
-            os.path.basename(partition.path),
-            int(f.nrows),
-            int(f.nstripes),
-            len(f.schema.names),
-            int(os.path.getsize(partition.path)),
-        )
+
+def _file_row(index: int, path: str) -> tuple:
+    """The per-file row (no ``stats``), from ``metadata.read_orc_statistics``,
+    for the batch reader and the stream reader alike."""
+    s = metadata.read_orc_statistics(path)
+    return (
+        index,
+        os.path.basename(path),
+        s.num_rows,
+        s.num_stripes,
+        len(s.schema.names),
+        s.total_byte_size,
+    )
 
 
 def _typed_slots(st: dict) -> tuple:
@@ -263,11 +251,13 @@ def _typed_slots(st: dict) -> tuple:
 
 
 def _stats_rows(path: str, mode: str, size_hint: int | None = None) -> Iterator[tuple]:
-    """stats="file": one row per column of one file — the reference's
-    unextracted file-level column statistics (src/metadata.rs:79-84 TODO),
-    parsed from the footer by sources/orcfooter.py. stats="stripes": one
-    row per (stripe, column) from the metadata section — the granularity
-    stripe pruning consults. Both read tail bytes only."""
+    """One row per column of each unit of one file, keyed by the unit's ids:
+    stats="file", one unit, the file's footer statistics (the reference's
+    unextracted src/metadata.rs:79-84 TODO); stats="stripes", one unit per
+    stripe (``stripe_id``) from the metadata section, the granularity
+    stripe pruning consults; stats="rowgroups", one unit per row group
+    (``stripe_id``, ``row_group_id``) from the row index. All parsed by
+    sources/orcfooter.py from the file tail and row indexes."""
     from datafusion_datasource_orc_spark.sources.orcfooter import (
         DEFAULT_TAIL_HINT,
         read_column_statistics,
@@ -279,51 +269,25 @@ def _stats_rows(path: str, mode: str, size_hint: int | None = None) -> Iterator[
     fname = os.path.basename(path)
     if mode == "rowgroups":
         meta = read_rowgroup_statistics(path, size_hint=hint)
-        for sid, groups in enumerate(meta["stripes"]):
-            for gid, by_col in enumerate(groups):
-                for cid, cname in enumerate(meta["columns"]):
-                    st = by_col.get(cname)
-                    if st is None:
-                        continue
-                    kind, *slots = _typed_slots(st)
-                    yield (
-                        fname,
-                        sid,
-                        gid,
-                        cid,
-                        cname,
-                        kind,
-                        st["num_values"],
-                        st["has_null"],
-                        *slots,
-                    )
-        return
-    if mode == "stripes":
+        units = [
+            ((sid, gid), by_col)
+            for sid, groups in enumerate(meta["stripes"])
+            for gid, by_col in enumerate(groups)
+        ]
+    elif mode == "stripes":
         meta = read_stripe_statistics(path, size_hint=hint)
-        for sid, by_col in enumerate(meta["stripes"]):
-            for cid, cname in enumerate(meta["columns"]):
-                st = by_col.get(cname)
-                if st is None:
-                    continue
+        units = [((sid,), by_col) for sid, by_col in enumerate(meta["stripes"])]
+    else:
+        meta = read_column_statistics(path, size_hint=hint)
+        units = [((), meta["stats"])]
+    for key, by_col in units:
+        for cid, cname in enumerate(meta["columns"]):
+            st = by_col.get(cname)
+            if st is not None:
                 kind, *slots = _typed_slots(st)
                 yield (
-                    fname,
-                    sid,
-                    cid,
-                    cname,
-                    kind,
-                    st["num_values"],
-                    st["has_null"],
-                    *slots,
+                    fname, *key, cid, cname, kind, st["num_values"], st["has_null"], *slots
                 )
-        return
-    meta = read_column_statistics(path, size_hint=hint)
-    for cid, cname in enumerate(meta["columns"]):
-        st = meta["stats"].get(cname)
-        if st is None:
-            continue
-        kind, *slots = _typed_slots(st)
-        yield (fname, cid, cname, kind, st["num_values"], st["has_null"], *slots)
 
 
 def _bloom_rows(
@@ -382,25 +346,14 @@ class OrcMetaStreamReader(SimpleDataSourceStreamReader):
             )
 
     def _list(self) -> list[str]:
-        return _admitted(self.path)
+        return metadata._admitted(self.path)
 
     def _rows(self, names: list[str]) -> Iterator[tuple]:
         # same 6-column row shape as the batch reader (DataSource.schema()
         # is shared); file_index is the ordinal within this (sorted, hence
         # replay-deterministic) batch of newly discovered files
-        import pyarrow.orc as orc
-
         for i, name in enumerate(names):
-            p = os.path.join(self.path, name)
-            f = orc.ORCFile(p)
-            yield (
-                i,
-                name,
-                int(f.nrows),
-                int(f.nstripes),
-                len(f.schema.names),
-                int(os.path.getsize(p)),
-            )
+            yield _file_row(i, os.path.join(self.path, name))
 
     # unit-separator joined: a legal-but-unusual comma in a file name must
     # not corrupt the offset (re-emitting the file forever); \x1f cannot

@@ -715,6 +715,21 @@ class TestTextToOrcPrep:
         assert dict(back.dtypes)["r_regionkey"] == "bigint"
 
 
+def _bloom_indexed_stripes(path) -> str:
+    """A multi-stripe pyarrow ORC file with a row index every 1,000 rows and
+    bloom filters on ``a`` (int64) and ``s`` (string)."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = pa.table({"a": pa.array(range(50_000), type=pa.int64()),
+                  "b": pa.array(np.arange(50_000) * 0.25, type=pa.float64()),
+                  "s": pa.array([f"s{i % 97}" for i in range(50_000)])})
+    porc.write_table(t, str(path), compression="snappy", stripe_size=64 * 1024,
+                     row_index_stride=1000, bloom_filter_columns=[1, 3])
+    assert porc.ORCFile(str(path)).nstripes > 1, "fixture must span multiple stripes"
+    return str(path)
+
+
 class TestOrcMetaDataSource:
     """The `orcmeta` Python Data Source — Spark 4's public format-plugin
     seam, the equivalent of the reference's OrcFormat/FileFormat
@@ -1364,13 +1379,13 @@ class TestOrcMetaDataSource:
         it, src/options.rs:51-54): an undersized hint pays one extra ranged
         read and must still parse identical statistics; orcmeta passes the
         option through and rejects non-positive values."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.orc as porc
         import pytest as _pytest
 
         from datafusion_datasource_orc_spark.sources.orcfooter import (
+            read_bloom_filters,
+            read_column_encodings,
             read_column_statistics,
+            read_rowgroup_statistics,
             read_stripe_statistics,
         )
         from datafusion_datasource_orc_spark.sources.orcmeta import (
@@ -1378,13 +1393,14 @@ class TestOrcMetaDataSource:
             _size_hint,
         )
 
-        t = pa.table({"a": pa.array(range(50_000), type=pa.int64()),
-                      "b": pa.array(np.arange(50_000) * 0.25, type=pa.float64())})
-        p = str(tmp_path / "hint.orc")
-        porc.write_table(t, p, compression="snappy", stripe_size=64 * 1024)
+        p = _bloom_indexed_stripes(tmp_path / "hint.orc")
         # 300 bytes covers only the postscript; footer forces a second read
         assert read_column_statistics(p, size_hint=300) == read_column_statistics(p)
         assert read_stripe_statistics(p, size_hint=300) == read_stripe_statistics(p)
+        # so the comparison below is not of empty results
+        assert read_bloom_filters(p)["stripes"][0].keys() == {"a", "s"}
+        for reader in (read_rowgroup_statistics, read_bloom_filters, read_column_encodings):
+            assert reader(p, size_hint=300) == reader(p)
 
         r = OrcMetadataReader(
             {"path": str(tmp_path), "stats": "file", "metadata_size_hint": "300"}
@@ -1395,6 +1411,171 @@ class TestOrcMetaDataSource:
         assert rows_small == list(r2.read(next(iter(r2.partitions()))))
         with _pytest.raises(ValueError, match="positive"):
             _size_hint({"metadata_size_hint": "0"})
+
+    def test_readers_never_read_row_data(self, tmp_path, monkeypatch):
+        """Every footer reader reads metadata only: each (offset, length) that
+        the five readers read, recorded by wrapping ``open`` in orcfooter's
+        namespace, misses every stripe's data region ``[offset + indexLength,
+        offset + indexLength + dataLength)``, except the one tail prefetch of
+        ``min(file size, size_hint)`` bytes: a file shorter than the hint, as
+        this one is at the default, is read whole by it."""
+        from datafusion_datasource_orc_spark.sources import orcfooter
+
+        p = _bloom_indexed_stripes(tmp_path / "layout.orc")
+        size = os.path.getsize(p)
+        reads: list[tuple[int, int]] = []
+
+        class Recorded:
+            def __init__(self, f):
+                self._f = f
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self._f.close()
+
+            def seek(self, *args):
+                return self._f.seek(*args)
+
+            def read(self, n=-1):
+                pos = self._f.tell()
+                data = self._f.read(n)
+                reads.append((pos, len(data)))
+                return data
+
+        readers = (
+            orcfooter.read_column_statistics,
+            orcfooter.read_stripe_statistics,
+            orcfooter.read_rowgroup_statistics,
+            orcfooter.read_bloom_filters,
+            orcfooter.read_column_encodings,
+        )
+        reads_by_hint = {}
+        with monkeypatch.context() as m:
+            m.setattr(
+                orcfooter, "open", lambda path, mode="r": Recorded(open(path, mode)),
+                raising=False,
+            )
+            for hint in (300, orcfooter.DEFAULT_TAIL_HINT):
+                reads.clear()
+                for reader in readers:
+                    reader(p, size_hint=hint)
+                reads_by_hint[hint] = list(reads)
+
+        # StripeInformation {offset=1, indexLength=2, dataLength=3,
+        # footerLength=4}; the stripes tile the file from the 3-byte header
+        # to its end (Footer headerLength=1, contentLength=2)
+        footer, _, _ = orcfooter._read_tail_sections(p)
+        top = orcfooter._scalar_fields(footer)
+        stripes = [
+            orcfooter._scalar_fields(v) for fno, _wt, v in orcfooter._fields(footer)
+            if fno == 3
+        ]
+        assert len(stripes) == porc.ORCFile(p).nstripes
+        end = top[1]
+        for s in stripes:
+            assert s[1] == end
+            end = s[1] + s[2] + s[3] + s[4]
+        assert end == top[1] + top[2]
+        assert size < orcfooter.DEFAULT_TAIL_HINT
+        for hint, got in reads_by_hint.items():
+            prefetch = (size - min(size, hint), min(size, hint))
+            assert got.count(prefetch) == len(readers)
+            for s in stripes:
+                lo, hi = s[1] + s[2], s[1] + s[2] + s[3]
+                assert hi > lo
+                assert (s[1], s[2]) in got  # the index region was read
+                overlapping = {(pos, n) for pos, n in got if pos < hi and pos + n > lo}
+                assert overlapping == (set() if hint == 300 else {prefetch})
+
+    def test_nested_schema_readers_key_by_type_id(self, tmp_path):
+        """A nested column shifts the flattened type ids of the columns after
+        it: with ``a struct<x int64, y string>`` first, ``b`` is type id 4,
+        not 2. Statistics at every level, bloom filters and encodings are
+        keyed by the root struct's subtypes, so ``b``, ``c`` and ``e`` read
+        their own values."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from datafusion_datasource_orc_spark.sources.orcfooter import (
+            bloom_might_contain,
+            orc_hash_long,
+            read_bloom_filters,
+            read_column_encodings,
+            read_column_statistics,
+            read_rowgroup_statistics,
+            read_stripe_statistics,
+        )
+
+        n, stride = 3000, 1000
+        t = pa.table({
+            "a": pa.array(
+                [{"x": i % 7, "y": f"y{i % 5}"} for i in range(n)],
+                pa.struct([("x", pa.int64()), ("y", pa.string())]),
+            ),
+            "b": pa.array([100 if i % 2 else 200 for i in range(n)], pa.int64()),
+            "c": pa.array([f"c{i % 13:02d}" for i in range(n)]),
+            "d": pa.array([[float(i), -1.5] for i in range(n)], pa.list_(pa.float32())),
+            "e": pa.array([None if i % 10 == 0 else i - 50 for i in range(n)], pa.int32()),
+        })
+        p = str(tmp_path / "nested.orc")
+        # type ids: root 0, a 1, a.x 2, a.y 3, b 4, c 5, d 6, d's element 7, e 8
+        porc.write_table(t, p, compression="zstd", row_index_stride=stride,
+                         bloom_filter_columns=[4], dictionary_key_size_threshold=1.0)
+        f = porc.ORCFile(p)
+        flat = ("b", "c", "e")
+
+        def check(st, values):
+            assert (st["min"], st["max"], st["num_values"]) == (
+                pc.min(values).as_py(), pc.max(values).as_py(), pc.count(values).as_py()
+            )
+
+        meta = read_column_statistics(p)
+        assert meta["columns"] == ["a", "b", "c", "d", "e"]
+        for col in flat:
+            check(meta["stats"][col], t[col])
+        stripe_stats = read_stripe_statistics(p)["stripes"]
+        groups = read_rowgroup_statistics(p)["stripes"]
+        blooms = read_bloom_filters(p)["stripes"]
+        assert len(stripe_stats) == len(groups) == len(blooms) == f.nstripes
+        for s in range(f.nstripes):
+            rows = f.read_stripe(s)
+            assert len(groups[s]) == -(-rows.num_rows // stride)
+            for col in flat:
+                check(stripe_stats[s][col], rows[col])
+                for g, by_col in enumerate(groups[s]):
+                    check(by_col[col], rows[col].slice(g * stride, stride))
+            assert list(blooms[s]) == ["b"]
+            for g, bf in enumerate(blooms[s]["b"]):
+                for v in set(rows["b"].slice(g * stride, stride).to_pylist()):
+                    assert bloom_might_contain(bf, orc_hash_long(v))
+        enc = {(e["stripe"], e["column"]): (e["encoding"], e["dictionary_size"])
+               for e in read_column_encodings(p)}
+        for s in range(f.nstripes):
+            assert enc[(s, "b")] == enc[(s, "e")] == ("DIRECT_V2", 0)
+            assert enc[(s, "c")] == ("DICTIONARY_V2", 13)
+
+    def test_load_file_stats_of_a_nested_table(self, spark, sf_dir):
+        """orcmeta.load(stats="file") on the Spark-written embeddings table
+        (vec_id bigint, embedding array<float>, label int): ``label`` is type
+        id 4, after the array's element, and reports the table's own int
+        range and row count, not the embedding elements' doubles."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from datafusion_datasource_orc_spark.sources import orcmeta
+
+        label = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))["label"]
+        rows = (
+            orcmeta.load(spark, orc_dir_for(spark, sf_dir, "embeddings"), stats="file")
+            .where("column_name = 'label'")
+            .collect()
+        )
+        assert {r.col_kind for r in rows if r.num_values} == {"int"}
+        assert sum(r.num_values for r in rows) == len(label)
+        assert min(r.min_l for r in rows if r.num_values) == pc.min(label).as_py()
+        assert max(r.max_l for r in rows if r.num_values) == pc.max(label).as_py()
 
     @pytest.mark.parametrize(
         "layout, options",

@@ -8,8 +8,9 @@ Usage: python tools/sweep_log_durations.py LOGFILE SF_KEY
   e.g.: python tools/sweep_log_durations.py /tmp/sweep01.log sf0.1
 
 Merges (never replaces) {query: {sf_key: secs}} into sweep_durations.json.
-check_oracles' --slowest-first currently reads SWEEP_r*.json; a future
-round can point it here for scale-specific ordering.
+check_oracles' --slowest-first and --shard read it (``_recorded_secs``): the
+SWEEP_r*.json artifacts give sf0.01 figures, the newest winning, and this
+ledger's entries for the scale being swept overlay them.
 """
 
 from __future__ import annotations
