@@ -34,7 +34,11 @@ from datafusion_datasource_orc_spark.operators.dedup import (
     bloom_flagged,
 )
 from datafusion_datasource_orc_spark.operators.registry import query
-from datafusion_datasource_orc_spark.sources.tables import load_table, materialized_dir
+from datafusion_datasource_orc_spark.sources.tables import (
+    _write_key_chunks,
+    load_table,
+    materialized_dir,
+)
 
 INGEST_CHUNKS = 4
 
@@ -43,32 +47,22 @@ def stage_ingest_dir(sf_dir: str) -> str:
     """Write the INCOMING batch (documents with doc_id % 10 == 0 — the same
     held-out split dedup_bloom_ingest probes) as INGEST_CHUNKS deterministic
     ORC files: chunk-<k>.orc holds the docs with (doc_id // 10) % 4 == k.
-    pyarrow-written so names and contents are layout-free facts the oracle
-    can reproduce. Built once per process (``materialized_dir``)."""
+    pyarrow-written by ``tables._write_key_chunks`` (with ``ORC_CODEC``) so
+    names and contents are layout-free facts the oracle can reproduce; its
+    power-of-two, NULL and negative-key guards hold here too. Built once
+    per process (``materialized_dir``)."""
     import pyarrow.compute as pc
-    import pyarrow.orc as porc
     import pyarrow.parquet as pq
 
     def build(path: str) -> None:
         docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
         doc_id = docs.column("doc_id")
         # doc_id % 10 == 0 via the divide-multiply identity (pyarrow integer
-        # divide truncates; doc_ids are non-negative)
-        tens = pc.multiply(pc.divide(doc_id, 10), 10)
-        incoming = docs.filter(pc.equal(tens, doc_id))
-        # the bitmask-as-modulo identity needs a power of two, and the oracle
-        # interpolates the same constant — assert so a constant change that
-        # breaks either contract fails here, not as an oracle hash mismatch
-        assert INGEST_CHUNKS & (INGEST_CHUNKS - 1) == 0, "INGEST_CHUNKS must be 2^k"
-        chunk = pc.bit_wise_and(
-            pc.divide(incoming.column("doc_id"), 10), INGEST_CHUNKS - 1
+        # divide truncates; a negative doc_id fails the chunk writer's guard)
+        incoming = docs.filter(pc.equal(pc.multiply(pc.divide(doc_id, 10), 10), doc_id))
+        _write_key_chunks(
+            incoming, pc.divide(incoming.column("doc_id"), 10), INGEST_CHUNKS, path
         )
-        for k in range(INGEST_CHUNKS):
-            porc.write_table(
-                incoming.filter(pc.equal(chunk, k)),
-                os.path.join(path, f"chunk-{k}.orc"),
-                compression="snappy",
-            )
 
     return materialized_dir(sf_dir, "ingest_staging", build)
 

@@ -102,7 +102,6 @@ def _write_segment(index_dir: str, seg: str, rows: DataFrame) -> None:
         rows.repartitionByRange(max(N_HB, par), "hb", "h")
         .sortWithinPartitions("hb", "h")
         .write.mode("overwrite")
-        .option("compression", "snappy")
         .partitionBy("hb")
         .orc(os.path.join(index_dir, "spans", f"seg={seg}"))
     )

@@ -130,7 +130,7 @@ def _write_segment(
     idempotence mechanism: replaying a segment rewrites its directories."""
 
     def _w(df: DataFrame, sub: str, partition_by: list[str] | None = None):
-        w = df.write.mode("overwrite").option("compression", "snappy")
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.orc(os.path.join(index_dir, sub, f"seg={seg}"))

@@ -18,17 +18,20 @@ Scale design notes (local[32] here, 1000-executor cluster in production):
   place.
 - Timezone pinned to UTC: ORC/Parquet timestamp semantics and the DuckDB
   oracle agree only under a fixed zone.
-- ORC writes use zstd: ``spark.sql.orc.compression.codec``. The engine's
-  writers (``sources.orc``, ``streaming.events.stream_to_orc``) take the
-  codec from this conf unless a caller names one, and every later scan
-  re-reads what they stored. On perfbench's ingest slice (sf0.01 lineitem,
-  16 files of 2,000 rows, then compacted in input order) zstd stores
-  523,777 raw and 475,980 compacted bytes where snappy stored 686,239 and
-  639,950, with the same rows and about equal write time. (``compact_orc``
-  sorts that slice by column cardinality and stores about 387,000
-  compacted bytes with zstd.) Spark 4.1's own default is
-  zstd, so a vanilla session not built here writes the same files; the
-  conf is set here so the choice is visible beside the other ORC settings.
+- ORC writes use ``ORC_CODEC`` (zstd), through
+  ``spark.sql.orc.compression.codec``. Every ORC writer in the engine
+  follows that conf and none takes a codec of its own: ``sources.orc``,
+  ``streaming.events.stream_to_orc``, the fixture tables of
+  ``sources.tables`` and the span and triage indexes. A caller who wants
+  another codec sets the conf. Every later scan re-reads what they stored.
+  On perfbench's ingest slice (sf0.01 lineitem, 16 files of 2,000 rows,
+  then compacted in input order) zstd stores 523,777 raw and 475,980
+  compacted bytes where snappy stored 686,239 and 639,950, with the same
+  rows and about equal write time. (``compact_orc`` sorts that slice by
+  column cardinality and stores about 387,000 compacted bytes with zstd.)
+  Spark 4.1's own default is zstd, so a vanilla session not built here
+  writes the same files; the conf is set here so the choice is visible
+  beside the other ORC settings.
 - Generated-code cache sized to the working set: ``CODEGEN_CACHE_ENTRIES``.
   Spark keeps Janino-compiled classes in a cache of 100 entries by default
   (``spark.sql.codegen.cache.maxEntries``). One sf0.01 pass over
@@ -85,6 +88,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_BATCH_SIZE = 8192  # reference default: src/source.rs:52 (DataFusion 8192)
 CODEGEN_CACHE_ENTRIES = 4096  # 2.3x the 1,776 classes of one HEADLINE pass
+# The codec of every ORC file the engine writes. Spark writers take it from
+# the session conf ``get_spark`` sets; the pyarrow layout writers have no
+# session and use the constant itself, since ``materialized_dir`` caches
+# their layouts per process, across sessions.
+ORC_CODEC = "zstd"
 # file:// filesystem that sets permissions without a chmod process
 LOCAL_FS_CLASS = "datafusion_datasource_orc_spark.jvm.NioLocalFileSystem"
 LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
@@ -138,7 +146,7 @@ def get_spark(
         .config("spark.sql.orc.enableVectorizedReader", "true")  # A12 columnar batches
         .config("spark.sql.orc.columnarReaderBatchSize", str(DEFAULT_BATCH_SIZE))
         .config("spark.sql.orc.mergeSchema", "false")  # A3 opt-in, like the reference
-        .config("spark.sql.orc.compression.codec", "zstd")  # the engine's ORC writers' codec
+        .config("spark.sql.orc.compression.codec", ORC_CODEC)
         .config("spark.sql.parquet.filterPushdown", "true")
         # --- generated code: keep the whole working set compiled ---
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

@@ -11,13 +11,13 @@ Re-expresses the reference's format layer on Spark's native ORC datasource:
   inference happens in Spark's reader, multi-file merge via mergeSchema like
   src/file_format.rs:137-162).
 - ``write_orc``         — the writer the reference stubs out
-  (src/writer.rs:18-23); Spark-native, with compression + partitioning,
+  (src/writer.rs:18-23); Spark-native, with file sizing + partitioning,
   so this exceeds the reference.
 
 Codec: every writer here (and ``streaming.events.stream_to_orc``) writes with
-the session's ``spark.sql.orc.compression.codec`` (zstd, by ``get_spark`` and
-by Spark's own default) unless a caller passes ``compression``, which then
-wins for that write.
+the session's ``spark.sql.orc.compression.codec`` (``session.ORC_CODEC``,
+zstd, by ``get_spark`` and by Spark's own default) and takes no codec
+argument; a caller who wants another codec sets that conf.
 
 Local writes: in a session whose JVM ``get_spark`` starts, ``file://`` is
 served by ``session.LOCAL_FS_CLASS`` (``jvm/NioLocalFileSystem.java``),
@@ -204,7 +204,6 @@ def write_orc_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 8,
     sort_cols: list[str] | None = None,
-    compression: str | None = None,
 ) -> None:
     """Bucketed + sorted ORC table — closes the reference's file-sort-order
     gap (with_file_sort_order, src/bin/tpcds_bench.rs:603-607, which SURVEY §4
@@ -213,8 +212,6 @@ def write_orc_bucketed(
     key shuffle-free. At 100 TB, bucketing both fact tables on the join key
     turns the nightly join from a full shuffle into a local zip per bucket."""
     writer = df.write.mode("overwrite").format("orc").bucketBy(num_buckets, *bucket_cols)
-    if compression:
-        writer = writer.option("compression", compression)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
@@ -225,7 +222,6 @@ def write_orc_clustered(
     path: str,
     cluster_cols: list[str],
     num_files: int = 8,
-    compression: str | None = None,
 ) -> None:
     """Range-clustered ORC layout: repartitionByRange + sortWithinPartitions
     on the cluster key, one file per range.
@@ -239,14 +235,12 @@ def write_orc_clustered(
     within partitions additionally narrows every stripe's min/max, so
     stripe-level pruning composes with file-level.
     """
-    writer = (
+    (
         df.repartitionByRange(num_files, *cluster_cols)
         .sortWithinPartitions(*cluster_cols)
         .write.mode("overwrite")
+        .orc(path)
     )
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.orc(path)
 
 
 def _hadoop_dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -357,7 +351,6 @@ def compact_orc(
     src_dir: str,
     dst_dir: str,
     target_file_bytes: int = 128 << 20,
-    compression: str | None = None,
     shuffle: bool = False,
 ) -> dict:
     """Small-file compaction: rewrite an ORC directory into
@@ -372,8 +365,7 @@ def compact_orc(
     ``shuffle=False`` (default) uses coalesce — a narrow, shuffle-free merge
     of co-located small files (file counts may be slightly uneven);
     ``shuffle=True`` uses repartition for exactly even output at the cost of
-    a full exchange. The output is written with the session's ORC codec
-    unless ``compression`` names one.
+    a full exchange. The output is written with the session's ORC codec.
 
     Row order: each output file is sorted within itself
     (``sortWithinPartitions``) by the keys ``_cluster_keys`` picks, or keeps
@@ -417,14 +409,11 @@ def compact_orc(
         reader = reader.option("mergeSchema", "true")
     df = reader.orc(src_dir)
     out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    codec = compression or spark.conf.get("spark.sql.orc.compression.codec")
+    codec = spark.conf.get("spark.sql.orc.compression.codec")
     keys = _cluster_keys(stats, codec) if stats else []
     if keys:
         out = out.sortWithinPartitions(*keys)
-    writer = out.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.orc(dst_dir)
+    out.write.mode("overwrite").orc(dst_dir)
     dst_files, dst_bytes, _ = _listing(spark, dst_dir)
     return {
         "src_files": src_files,
@@ -439,7 +428,6 @@ def compact_orc(
 def write_orc(
     df: DataFrame,
     path: str,
-    compression: str | None = None,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     target_file_rows: int | None = None,
@@ -455,8 +443,6 @@ def write_orc(
     if coalesce:
         df = df.coalesce(coalesce)
     writer = df.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
     if target_file_rows:
         writer = writer.option("maxRecordsPerFile", str(target_file_rows))
     if partition_by:

@@ -29,9 +29,9 @@ I/O. The file and stripe statistics read the file tail only: one ranged
 read of ``min(file size, size_hint)`` bytes, and a second when the tail is
 longer. The row-group, bloom and encoding readers walk the stripes once with
 ``_stripe_indexes``: the tail read, then each stripe's footer and index
-region. Beyond the tail prefetch no read touches a stripe's data region; a
-file shorter than ``size_hint`` (256 KiB by default) is read whole by that
-one prefetch.
+region. Beyond the tail prefetch no read touches a stripe's data region; the
+prefetch reads at most ``size_hint`` bytes (16 KiB by default,
+``DEFAULT_TAIL_HINT``), so a file longer than that is never read whole.
 
 Only varint/fixed64/length-delimited wire types occur, so the protobuf
 walker below is ~30 lines, dependency-free, and runs inside the ``orcmeta``
@@ -282,7 +282,11 @@ def _parse_column_statistics(buf: bytes) -> dict[str, Any]:
     return st
 
 
-DEFAULT_TAIL_HINT = 256 * 1024
+# Tail bytes prefetched before the postscript is parsed. Measured tails
+# (postscript + footer + metadata) of every layout the engine writes, at
+# sf0.01 and sf0.1, pyarrow- and Spark-written, are 277-1,171 bytes, so one
+# read covers them with 14x to spare; a longer tail costs one more read.
+DEFAULT_TAIL_HINT = 16 * 1024
 
 
 def _read_tail_sections(

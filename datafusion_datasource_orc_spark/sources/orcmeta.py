@@ -55,6 +55,7 @@ from pyspark.sql.datasource import (
 )
 
 from datafusion_datasource_orc_spark.sources import metadata
+from datafusion_datasource_orc_spark.sources.orcfooter import DEFAULT_TAIL_HINT
 
 
 class OrcFilePartition(InputPartition):
@@ -64,21 +65,16 @@ class OrcFilePartition(InputPartition):
 
 
 def _stats_mode(options: dict) -> str | None:
-    """None (per-file metadata), "file" (footer column stats), "stripes"
-    (metadata-section per-stripe column stats), or "rowgroups" (ROW_INDEX
-    per-row-group column stats — the full granularity ladder)."""
+    """None (per-file metadata, ``""``), "file" (footer column stats, also
+    spelled ``true``), "stripes" (metadata-section per-stripe column stats),
+    "rowgroups" (ROW_INDEX per-row-group column stats — the full granularity
+    ladder), "bloom" or "encodings"."""
     raw = str(options.get("stats", "")).lower()
-    if raw in ("true", "1", "yes", "file"):
+    if raw in ("file", "stripes", "rowgroups", "bloom", "encodings"):
+        return raw
+    if raw == "true":
         return "file"
-    if raw in ("stripes", "stripe"):
-        return "stripes"
-    if raw in ("rowgroups", "rowgroup", "row_index", "rowindex"):
-        return "rowgroups"
-    if raw == "bloom":
-        return "bloom"
-    if raw in ("encodings", "encoding"):
-        return "encodings"
-    if raw in ("", "false", "0", "no"):
+    if raw == "":
         return None
     raise ValueError(
         f"orcmeta: unknown stats mode {raw!r} "
@@ -139,7 +135,7 @@ class OrcMetadataReader(DataSourceReader):
         if not self.path:
             raise ValueError("orcmeta requires a path (load(<dir>) or option('path', ...))")
         self.stats = _stats_mode(options)
-        self.size_hint = _size_hint(options)
+        self.size_hint = _size_hint(options) or DEFAULT_TAIL_HINT
         self.bloom = _bloom_options(options) if self.stats == "bloom" else None
         self._name_filters: list = []
 
@@ -190,14 +186,11 @@ class OrcMetadataReader(DataSourceReader):
             return
         if self.stats == "encodings":
             from datafusion_datasource_orc_spark.sources.orcfooter import (
-                DEFAULT_TAIL_HINT,
                 read_column_encodings,
             )
 
             fname = os.path.basename(partition.path)
-            for e in read_column_encodings(
-                partition.path, size_hint=self.size_hint or DEFAULT_TAIL_HINT
-            ):
+            for e in read_column_encodings(partition.path, size_hint=self.size_hint):
                 yield (
                     fname,
                     e["stripe"],
@@ -250,7 +243,7 @@ def _typed_slots(st: dict) -> tuple:
     return (kind, min_l, max_l, sum_l, min_d, max_d, sum_d, min_s, max_s)
 
 
-def _stats_rows(path: str, mode: str, size_hint: int | None = None) -> Iterator[tuple]:
+def _stats_rows(path: str, mode: str, size_hint: int) -> Iterator[tuple]:
     """One row per column of each unit of one file, keyed by the unit's ids:
     stats="file", one unit, the file's footer statistics (the reference's
     unextracted src/metadata.rs:79-84 TODO); stats="stripes", one unit per
@@ -259,26 +252,24 @@ def _stats_rows(path: str, mode: str, size_hint: int | None = None) -> Iterator[
     (``stripe_id``, ``row_group_id``) from the row index. All parsed by
     sources/orcfooter.py from the file tail and row indexes."""
     from datafusion_datasource_orc_spark.sources.orcfooter import (
-        DEFAULT_TAIL_HINT,
         read_column_statistics,
         read_rowgroup_statistics,
         read_stripe_statistics,
     )
 
-    hint = size_hint or DEFAULT_TAIL_HINT
     fname = os.path.basename(path)
     if mode == "rowgroups":
-        meta = read_rowgroup_statistics(path, size_hint=hint)
+        meta = read_rowgroup_statistics(path, size_hint=size_hint)
         units = [
             ((sid, gid), by_col)
             for sid, groups in enumerate(meta["stripes"])
             for gid, by_col in enumerate(groups)
         ]
     elif mode == "stripes":
-        meta = read_stripe_statistics(path, size_hint=hint)
+        meta = read_stripe_statistics(path, size_hint=size_hint)
         units = [((sid,), by_col) for sid, by_col in enumerate(meta["stripes"])]
     else:
-        meta = read_column_statistics(path, size_hint=hint)
+        meta = read_column_statistics(path, size_hint=size_hint)
         units = [((), meta["stats"])]
     for key, by_col in units:
         for cid, cname in enumerate(meta["columns"]):
@@ -295,7 +286,7 @@ def _bloom_rows(
     column: str,
     probes: list,
     hash_kind: str,
-    size_hint: int | None = None,
+    size_hint: int,
 ) -> Iterator[tuple]:
     """stats="bloom": one row per (stripe, row group, probe key) of one
     file — bloom membership verdicts for the probed keys, from the
@@ -304,16 +295,14 @@ def _bloom_rows(
     exposed as data. ``probe`` is surfaced as STRING so the long and utf8
     hash modes share one schema."""
     from datafusion_datasource_orc_spark.sources.orcfooter import (
-        DEFAULT_TAIL_HINT,
         bloom_might_contain,
         orc_hash_bytes,
         orc_hash_long,
         read_bloom_filters,
     )
 
-    hint = size_hint or DEFAULT_TAIL_HINT
     fname = os.path.basename(path)
-    meta = read_bloom_filters(path, size_hint=hint)
+    meta = read_bloom_filters(path, size_hint=size_hint)
     if hash_kind == "long":
         hashes = [(str(p), orc_hash_long(p)) for p in probes]
     else:

@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_datasource_orc_spark.session import ORC_CODEC
+
 TABLES = (
     "region",
     "nation",
@@ -168,15 +170,12 @@ def materialized_dir(sf_dir: str, name: str, build: Callable[[str], object]) -> 
 
 
 def orc_dir_for(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """A testdata table as an ORC directory, written by Spark once per
-    process (``materialized_dir``)."""
+    """A testdata table as an ORC directory, written by Spark with the
+    session's codec once per process (``materialized_dir``)."""
     return materialized_dir(
         sf_dir,
         f"orc/{name}",
-        lambda path: load_table(spark, sf_dir, name)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .orc(path),
+        lambda path: load_table(spark, sf_dir, name).write.mode("overwrite").orc(path),
     )
 
 
@@ -186,23 +185,16 @@ def load_orc_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _write_key_chunks(
-    sf_dir: str,
-    name: str,
-    key: str,
-    nchunks: int,
-    path: str,
-    sort: bool = False,
-    **options,
+    table, key, nchunks: int, path: str, sort_by: str | None = None, **options
 ) -> list[str]:
     """Write ``nchunks`` files chunk-<k>.orc into ``path``, file k holding
-    exactly the rows of ``name`` where ``key % nchunks == k`` (sorted by
-    ``key`` when ``sort``), with pyarrow's writer and ``options``. Returns
-    the file paths in chunk order."""
+    exactly the rows of ``table`` whose ``key`` (an integer array aligned
+    with its rows) satisfies ``key % nchunks == k``, sorted by column
+    ``sort_by`` when given, with pyarrow's writer, ``ORC_CODEC`` and
+    ``options``. Returns the file paths in chunk order."""
     import pyarrow.compute as pc
     import pyarrow.orc as porc
-    import pyarrow.parquet as pq
 
-    table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
     # mask == modulo only holds for power-of-two nchunks AND non-negative
     # keys (two's-complement masking of a negative key disagrees with SQL
     # `%`) — assert both loudly rather than silently drift from the oracle
@@ -212,24 +204,23 @@ def _write_key_chunks(
     # chunk — so the layout would under-count vs the parquet source with no
     # error. Fail loudly instead (and note pc.min of an all-null column is
     # None, which the >= 0 assertion alone would wave through).
-    n_null = table.column(key).null_count
-    assert n_null == 0, (
-        f"chunk key {name}.{key} has {n_null} NULLs; NULL-keyed rows would "
-        f"be silently excluded from every chunk file"
+    assert key.null_count == 0, (
+        f"chunk key has {key.null_count} NULLs; NULL-keyed rows would be "
+        f"silently excluded from every chunk file"
     )
-    key_min = pc.min(table.column(key)).as_py()
+    key_min = pc.min(key).as_py()
     assert key_min is None or key_min >= 0, (
-        f"chunk key {name}.{key} has negative values (min={key_min}); the "
-        f"bit_wise_and layout would disagree with the oracle's % contract"
+        f"chunk key has negative values (min={key_min}); the bit_wise_and "
+        f"layout would disagree with the oracle's % contract"
     )
-    bucket = pc.cast(pc.bit_wise_and(table.column(key), nchunks - 1), "int64")
+    bucket = pc.bit_wise_and(key, nchunks - 1)
     outs = []
     for k in range(nchunks):
         chunk = table.filter(pc.equal(bucket, k))
-        if sort:
-            chunk = chunk.sort_by(key)
+        if sort_by:
+            chunk = chunk.sort_by(sort_by)
         out = os.path.join(path, f"chunk-{k}.orc")
-        porc.write_table(chunk, out, compression="snappy", **options)
+        porc.write_table(chunk, out, compression=ORC_CODEC, **options)
         outs.append(out)
     return outs
 
@@ -244,11 +235,13 @@ def orc_chunked_dir_for(
     (orcmeta's num_rows for one named file) oracle-checkable: the DuckDB
     twin recomputes a chunk's content from the SAME modulo rule instead of
     guessing writer parallelism."""
-    return materialized_dir(
-        sf_dir,
-        f"chunked/{name}/{key}/{nchunks}",
-        lambda path: _write_key_chunks(sf_dir, name, key, nchunks, path),
-    )
+    import pyarrow.parquet as pq
+
+    def build(path: str) -> None:
+        table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
+        _write_key_chunks(table, table.column(key), nchunks, path)
+
+    return materialized_dir(sf_dir, f"chunked/{name}/{key}/{nchunks}", build)
 
 
 BLOOM_STRIDE = 1000  # row_index_stride for the bloom-indexed layout
@@ -275,16 +268,15 @@ def orc_bloom_dir_for(
     import pyarrow.parquet as pq
 
     def build(path: str) -> None:
-        schema = pq.read_schema(os.path.join(sf_dir, f"{name}.parquet"))
+        table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet"))
         # flattened ORC type ids: root struct is 0, column j is j+1
-        bloom_ids = [schema.get_field_index(c) + 1 for c in (key, *extra_bloom)]
+        bloom_ids = [table.schema.get_field_index(c) + 1 for c in (key, *extra_bloom)]
         for out in _write_key_chunks(
-            sf_dir,
-            name,
-            key,
+            table,
+            table.column(key),
             nchunks,
             path,
-            sort=True,
+            sort_by=key,
             row_index_stride=stride,
             bloom_filter_columns=bloom_ids,
             bloom_filter_fpp=0.01,
@@ -327,7 +319,7 @@ def orc_encoding_dir_for(sf_dir: str, name: str = "lineitem") -> str:
             porc.write_table(
                 table,
                 out,
-                compression="snappy",
+                compression=ORC_CODEC,
                 dictionary_key_size_threshold=thr,
                 stripe_size=512 * 1024 * 1024,
             )

@@ -223,7 +223,6 @@ def stream_to_orc(
     path: str,
     checkpoint_dir: str,
     query_name: str = "orc_sink",
-    compression: str | None = None,
 ):
     """Streaming ORC sink: continuous ingest writing the ORC lake the batch
     engine reads — the streaming half of the connector surface (the
@@ -236,20 +235,18 @@ def stream_to_orc(
     produce many small files by design, and compaction restores
     scan-friendly sizes downstream.
 
-    Files are written with the session's ORC codec unless ``compression``
-    names one. Returns the started StreamingQuery (caller awaits / stops);
-    processes all currently-available input per trigger.
+    Files are written with the session's ORC codec. Returns the started
+    StreamingQuery (caller awaits / stops); processes all currently-available
+    input per trigger.
     """
-    writer = (
+    return (
         stream_df.writeStream.format("orc")
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
         .trigger(availableNow=True)
+        .start()
     )
-    if compression:
-        writer = writer.option("compression", compression)
-    return writer.start()
 
 
 def stream_session_windows(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -4,6 +4,7 @@ error paths + config behavior (tests/basic_reading.rs:450-606), writer."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections import Counter
 from urllib.parse import unquote, urlparse
@@ -11,6 +12,7 @@ from urllib.parse import unquote, urlparse
 import pyarrow.orc as porc
 import pytest
 
+from datafusion_datasource_orc_spark.session import ORC_CODEC
 from datafusion_datasource_orc_spark.sources import (
     OrcFormatOptions,
     OrcTableCatalog,
@@ -184,16 +186,32 @@ class TestCatalog:
         OrcFormatOptions().apply_to_session(spark)
 
 
+@contextlib.contextmanager
+def _session_codec(spark, codec):
+    """``spark.sql.orc.compression.codec`` set to ``codec`` for the block,
+    and restored after it."""
+    key = "spark.sql.orc.compression.codec"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, codec)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 # ---- writer (reference stub src/writer.rs — implemented) -----------------------
 class TestWriter:
     @pytest.mark.parametrize("compression", ["snappy", "zstd", "zlib", "lz4"])
     def test_roundtrip_compressions(self, spark, sf_dir, tmp_path, compression):
         df = load_table(spark, sf_dir, "nation")
         out = str(tmp_path / f"nation_{compression}")
-        write_orc(df, out, compression=compression, coalesce=1)
+        with _session_codec(spark, compression):
+            write_orc(df, out, coalesce=1)
         back = spark.read.orc(out)
         assert back.count() == df.count()
         assert set(back.columns) == set(df.columns)
+        files = [unquote(urlparse(f).path) for f in back.inputFiles()]
+        assert {porc.ORCFile(f).compression for f in files} == {compression.upper()}
 
     def test_partitioned_write(self, spark, sf_dir, tmp_path):
         df = load_table(spark, sf_dir, "nation")
@@ -355,31 +373,54 @@ class TestWriter:
             spark.read.orc(os.path.dirname(first)).collect()
 
     @pytest.mark.parametrize(
-        "conf, kwargs, codec",
-        [(None, {}, "ZSTD"), ("zlib", {}, "ZLIB"), ("zlib", {"compression": "lz4"}, "LZ4")],
-        ids=["session_default", "session_conf", "explicit_wins"],
+        "conf, codec",
+        [(None, ORC_CODEC.upper()), ("zlib", "ZLIB")],
+        ids=["session_default", "session_conf"],
     )
     @pytest.mark.parametrize(
         "writer",
         ["write_orc", "compact_orc", "write_orc_clustered", "write_orc_bucketed", "stream_to_orc"],
     )
-    def test_writers_follow_session_codec(
-        self, spark, sf_dir, tmp_path, writer, conf, kwargs, codec
-    ):
+    def test_writers_follow_session_codec(self, spark, sf_dir, tmp_path, writer, conf, codec):
         """Every ORC writer writes with ``spark.sql.orc.compression.codec``
-        (zstd from ``get_spark``) unless the caller names a codec."""
-        key = "spark.sql.orc.compression.codec"
-        prev = spark.conf.get(key)
-        if conf:
-            spark.conf.set(key, conf)
+        (``ORC_CODEC``, zstd, from ``get_spark``); none takes a codec of its
+        own."""
         try:
-            files = _WRITERS[writer](spark, load_table(spark, sf_dir, "nation"), tmp_path, kwargs)
-            codecs = {porc.ORCFile(unquote(urlparse(f).path)).compression for f in files}
+            with _session_codec(spark, conf) if conf else contextlib.nullcontext():
+                files = _WRITERS[writer](spark, load_table(spark, sf_dir, "nation"), tmp_path)
+                codecs = {porc.ORCFile(unquote(urlparse(f).path)).compression for f in files}
         finally:
-            spark.conf.set(key, prev)
             spark.sql("DROP TABLE IF EXISTS codec_bucketed")
         assert files
         assert codecs == {codec}
+
+    def test_materialized_layouts_store_the_engine_codec(self, spark, sf_dir):
+        """Every layout the engine materializes stores ``ORC_CODEC``, whether
+        Spark writes it with the session conf or pyarrow with the constant:
+        the fixture tables, the chunked, bloom and encoding layouts, the
+        ingest staging batch and the span and triage indexes."""
+        from datafusion_datasource_orc_spark.operators.ingest import stage_ingest_dir
+        from datafusion_datasource_orc_spark.operators.substring_index import (
+            span_index_dir_for,
+        )
+        from datafusion_datasource_orc_spark.operators.triage_index import index_dir_for
+        from datafusion_datasource_orc_spark.sources import tables
+        from datafusion_datasource_orc_spark.sources.metadata import _orc_files
+
+        layouts = {
+            "orc_dir_for": orc_dir_for(spark, sf_dir, "orders"),
+            "orc_chunked_dir_for": tables.orc_chunked_dir_for(sf_dir, "orders", "o_orderkey"),
+            "orc_bloom_dir_for": tables.orc_bloom_dir_for(sf_dir, "orders", "o_orderkey"),
+            "orc_encoding_dir_for": tables.orc_encoding_dir_for(sf_dir),
+            "stage_ingest_dir": stage_ingest_dir(sf_dir),
+            "span_index": span_index_dir_for(spark, sf_dir),
+            "triage_index": index_dir_for(spark, sf_dir),
+        }
+        codecs = {
+            name: {porc.ORCFile(f).compression for f in _orc_files(path)}
+            for name, path in layouts.items()
+        }
+        assert codecs == {name: {ORC_CODEC.upper()} for name in layouts}
 
 
 def _assert_same_rows(a, b):
@@ -559,30 +600,32 @@ class TestCompactionOrder:
             assert admitting("clustered", column, value) == 2
 
 
-def _compacted(spark, df, tmp_path, kwargs):
+def _compacted(spark, df, tmp_path):
     from datafusion_datasource_orc_spark.sources.orc import compact_orc
 
     src, out = str(tmp_path / "shards"), str(tmp_path / "out")
-    write_orc(df.repartition(4), src, compression="none")
-    compact_orc(spark, src, out, **kwargs)
+    # uncompressed shards: the output's codec cannot come from its input
+    with _session_codec(spark, "none"):
+        write_orc(df.repartition(4), src)
+    compact_orc(spark, src, out)
     return spark.read.orc(out).inputFiles()
 
 
-def _written(spark, df, tmp_path, kwargs):
+def _written(spark, df, tmp_path):
     out = str(tmp_path / "out")
-    write_orc(df, out, **kwargs)
+    write_orc(df, out)
     return spark.read.orc(out).inputFiles()
 
 
-def _clustered(spark, df, tmp_path, kwargs):
+def _clustered(spark, df, tmp_path):
     from datafusion_datasource_orc_spark.sources.orc import write_orc_clustered
 
     out = str(tmp_path / "out")
-    write_orc_clustered(df, out, ["n_nationkey"], num_files=2, **kwargs)
+    write_orc_clustered(df, out, ["n_nationkey"], num_files=2)
     return spark.read.orc(out).inputFiles()
 
 
-def _bucketed(spark, df, tmp_path, kwargs):
+def _bucketed(spark, df, tmp_path):
     import shutil
 
     from datafusion_datasource_orc_spark.sources.orc import write_orc_bucketed
@@ -590,17 +633,17 @@ def _bucketed(spark, df, tmp_path, kwargs):
     # stale-location guard, as in test_planning's bucketed join
     spark.sql("DROP TABLE IF EXISTS codec_bucketed")
     shutil.rmtree("spark-warehouse/codec_bucketed", ignore_errors=True)
-    write_orc_bucketed(df, "codec_bucketed", ["n_nationkey"], 2, **kwargs)
+    write_orc_bucketed(df, "codec_bucketed", ["n_nationkey"], 2)
     return spark.table("codec_bucketed").inputFiles()
 
 
-def _streamed(spark, df, tmp_path, kwargs):
+def _streamed(spark, df, tmp_path):
     from datafusion_datasource_orc_spark.streaming.events import stream_to_orc
 
     src, out = str(tmp_path / "in"), str(tmp_path / "out")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    stream_to_orc(stream, out, str(tmp_path / "ckpt"), "codec_sink", **kwargs).awaitTermination()
+    stream_to_orc(stream, out, str(tmp_path / "ckpt"), "codec_sink").awaitTermination()
     return spark.read.orc(out).inputFiles()
 
 
@@ -1366,13 +1409,51 @@ class TestOrcMetaDataSource:
             ).as_py() or 0
             assert len(keys) == want
 
+    def test_staging_chunks_hold_their_bucket(self, sf_dir):
+        """``stage_ingest_dir``'s chunk k holds exactly the documents with
+        ``doc_id % 10 == 0`` and ``(doc_id // 10) % INGEST_CHUNKS == k``, the
+        rule ``ingest_incremental_bloom``'s oracle recomputes, as a multiset
+        of full rows per chunk."""
+        import pyarrow.parquet as pq
+
+        from datafusion_datasource_orc_spark.operators.ingest import (
+            INGEST_CHUNKS,
+            stage_ingest_dir,
+        )
+
+        want = {k: Counter() for k in range(INGEST_CHUNKS)}
+        for row in pq.read_table(os.path.join(sf_dir, "documents.parquet")).to_pylist():
+            if row["doc_id"] % 10 == 0:
+                want[row["doc_id"] // 10 % INGEST_CHUNKS][tuple(row.items())] += 1
+        d = stage_ingest_dir(sf_dir)
+        assert sorted(os.listdir(d)) == [f"chunk-{k}.orc" for k in range(INGEST_CHUNKS)]
+        got = {
+            k: Counter(
+                tuple(r.items())
+                for r in porc.read_table(os.path.join(d, f"chunk-{k}.orc")).to_pylist()
+            )
+            for k in range(INGEST_CHUNKS)
+        }
+        assert sum(map(len, want.values())) > 0
+        assert got == want
+
     def test_stats_mode_rejects_unknown_value(self):
         import pytest as _pytest
 
-        from datafusion_datasource_orc_spark.sources.orcmeta import OrcMetadataReader
+        from datafusion_datasource_orc_spark.sources.orcmeta import (
+            OrcMetadataReader,
+            _stats_mode,
+        )
 
         with _pytest.raises(ValueError, match="stats mode"):
             OrcMetadataReader({"path": "/tmp", "stats": "bogus"})
+        spellings = {"": None, "true": "file", "TRUE": "file", "file": "file"}
+        spellings.update({m: m for m in ("stripes", "rowgroups", "bloom", "encodings")})
+        assert {raw: _stats_mode({"stats": raw}) for raw in spellings} == spellings
+        assert _stats_mode({}) is None
+        for raw in ("stripe", "row_index", "false", "yes"):
+            with _pytest.raises(ValueError, match="stats mode"):
+                _stats_mode({"stats": raw})
 
     def test_metadata_size_hint_small_hint_still_parses(self, tmp_path):
         """metadata_size_hint made REAL (the reference validates-but-ignores
@@ -1416,9 +1497,10 @@ class TestOrcMetaDataSource:
         """Every footer reader reads metadata only: each (offset, length) that
         the five readers read, recorded by wrapping ``open`` in orcfooter's
         namespace, misses every stripe's data region ``[offset + indexLength,
-        offset + indexLength + dataLength)``, except the one tail prefetch of
-        ``min(file size, size_hint)`` bytes: a file shorter than the hint, as
-        this one is at the default, is read whole by it."""
+        offset + indexLength + dataLength)``. The one exception is the tail
+        prefetch of ``min(file size, size_hint)`` bytes, which reads before
+        it knows where the tail starts: at the default hint it takes the
+        last 16 KiB of this 247 KB file, never the whole file."""
         from datafusion_datasource_orc_spark.sources import orcfooter
 
         p = _bloom_indexed_stripes(tmp_path / "layout.orc")
@@ -1478,16 +1560,20 @@ class TestOrcMetaDataSource:
             assert s[1] == end
             end = s[1] + s[2] + s[3] + s[4]
         assert end == top[1] + top[2]
-        assert size < orcfooter.DEFAULT_TAIL_HINT
+        assert 4 * orcfooter.DEFAULT_TAIL_HINT < size
         for hint, got in reads_by_hint.items():
-            prefetch = (size - min(size, hint), min(size, hint))
+            prefetch = (size - hint, hint)
             assert got.count(prefetch) == len(readers)
+            data_read = 0
             for s in stripes:
                 lo, hi = s[1] + s[2], s[1] + s[2] + s[3]
                 assert hi > lo
                 assert (s[1], s[2]) in got  # the index region was read
-                overlapping = {(pos, n) for pos, n in got if pos < hi and pos + n > lo}
-                assert overlapping == (set() if hint == 300 else {prefetch})
+                overlapping = [(pos, n) for pos, n in got if pos < hi and pos + n > lo]
+                assert set(overlapping) <= ({prefetch} if hint > 300 else set())
+                data_read += sum(min(hi, pos + n) - max(lo, pos) for pos, n in overlapping)
+            # row data read, over all five readers: under one hint each
+            assert data_read < len(readers) * hint
 
     def test_nested_schema_readers_key_by_type_id(self, tmp_path):
         """A nested column shifts the flattened type ids of the columns after
