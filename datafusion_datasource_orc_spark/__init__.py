@@ -25,7 +25,7 @@ already *is* the FileFormat/FileSource/FileOpener pipeline. Instead it provides:
                        shingling/minhash, text heuristics). Everything stays
                        JVM-side (pyspark.sql.functions) unless semantics force
                        a Pandas UDF.
-- ``plans``          — explain-plan introspection: assert that pushdown
+- ``plans``          — physical-plan introspection: assert that pushdown
                        actually reached the scan (PushedFilters / ReadSchema),
                        mirroring the reference's EXPLAIN surface
                        (src/source.rs:240-255).

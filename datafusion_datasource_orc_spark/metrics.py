@@ -131,20 +131,24 @@ def _plan_children(node) -> list:
     return out
 
 
-def _plan_leaves(plan) -> list:
-    """Leaf nodes under ``plan``, left to right, each once: a reused
-    exchange leads back to the subtree it reuses."""
-    leaves, seen, todo = [], set(), [plan]
+def _plan_nodes(plan) -> list:
+    """Every node under ``plan`` once, in pre-order, left to right, seen
+    through AQE (``_plan_children``): a reused exchange leads back to the
+    subtree it reuses, which is not listed twice."""
+    nodes, seen, todo = [], set(), [plan]
     while todo:
         node = todo.pop()
         if node.id() in seen:
             continue
         seen.add(node.id())
-        children = _plan_children(node)
-        if not children:
-            leaves.append(node)
-        todo.extend(reversed(children))
-    return leaves
+        nodes.append(node)
+        todo.extend(reversed(_plan_children(node)))
+    return nodes
+
+
+def _plan_leaves(plan) -> list:
+    """Leaf nodes under ``plan``, left to right, each once."""
+    return [n for n in _plan_nodes(plan) if not _plan_children(n)]
 
 
 def scan_sql_metrics(df: DataFrame) -> list[dict]:

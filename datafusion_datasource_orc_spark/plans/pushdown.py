@@ -1,24 +1,30 @@
-"""Explain-plan introspection: prove pushdown reached the scan.
+"""Physical-plan introspection: prove pushdown reached the scan.
 
 The reference renders ``predicate=`` into its plan display
 (src/source.rs:240-255) and negotiates per-filter pushdown
-(src/source.rs:257-289). Spark's equivalent signals live in
-``df.explain("formatted")`` output for a FileScan:
+(src/source.rs:257-289). Spark's equivalent signals sit on the scan nodes
+of the physical plan, the facts ``df.explain("formatted")`` prints:
 
 - ``PushedFilters: [IsNotNull(x), EqualTo(x,1)]``  — predicate pushdown (A8)
 - ``ReadSchema: struct<a:int,b:string>``           — projection pushdown (A7)
 - ``(N) Scan orc`` / ``Location``                  — which source, which files
 
-These helpers parse that output so tests can assert, per predicate shape,
-that the filter was actually pushed (the reference's test strategy,
-tests/predicate_pushdown.rs) — and that plans stay inside WholeStageCodegen.
+These helpers read them off the plan's nodes through ``metrics._plan_nodes``
+(the one walker, which sees through AQE), so tests can assert, per
+predicate shape, that the filter was actually pushed (the reference's test
+strategy, tests/predicate_pushdown.rs) — and that plans stay inside
+WholeStageCodegen. The plan read is the one ``df`` holds: before an action
+it is the plan AQE starts from.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
+
+from datafusion_datasource_orc_spark.metrics import _plan_nodes
+
+# nodes formatted explain does not list as operators
+_WRAPPERS = ("WholeStageCodegenExec", "InputAdapter", "SubqueryExec", "SubqueryAdaptiveBroadcastExec")
 
 
 def explain_formatted(df: DataFrame) -> str:
@@ -47,82 +53,66 @@ def _split_top_level(body: str, opens: str = "([<", closes: str = ")]>") -> list
     return [p for p in parts if p]
 
 
-def _balanced_span(text: str, start: int, open_ch: str, close_ch: str) -> str:
-    """Contents of the bracket pair opening at ``start`` (which must index
-    ``open_ch``), respecting nesting — a regex stopping at the first closer
-    truncates In(attr, [v1,v2]) lists and nested struct<...> types."""
-    depth = 0
-    for i in range(start, len(text)):
-        if text[i] == open_ch:
-            depth += 1
-        elif text[i] == close_ch:
-            depth -= 1
-            if depth == 0:
-                return text[start + 1 : i]
-    return text[start + 1 :]  # unbalanced (truncated explain) → rest
+def _nodes(df: DataFrame) -> list:
+    return _plan_nodes(df._jdf.queryExecution().executedPlan())
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _scans(df: DataFrame) -> list:
+    return [n for n in _nodes(df) if _name(n) in ("FileSourceScanExec", "BatchScanExec")]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across the plan's file scans, flattened.
+    """All PushedFilters entries across the plan's scans, flattened: the
+    entry a file scan holds in ``metadata()``, or a DSv2 scan (the Python
+    data source) in ``scan().getMetaData()``. Not ``pushedDownFilters()``,
+    which evaluates scalar subqueries and raises on a plan that has not run.
 
     NOTE: Spark renders PushedFilters in the plan even when
     spark.sql.orc.filterPushdown=false — the display shows *candidate*
     filters; the conf gates whether the reader builds SearchArguments. (The
     reference's display is equivalent: predicate= always rendered,
     src/source.rs:240-255.)"""
-    text = explain_formatted(df)
     out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[", text):
-        out.extend(_split_top_level(_balanced_span(text, m.end() - 1, "[", "]")))
+    for scan in _scans(df):
+        meta = scan.metadata() if _name(scan) == "FileSourceScanExec" else scan.scan().getMetaData()
+        entry = meta.get("PushedFilters")
+        if entry.isDefined():
+            out.extend(_split_top_level(entry.get()[1:-1]))
     return out
 
 
 def read_schema_columns(df: DataFrame) -> list[list[str]]:
-    """Column lists of each scan's ReadSchema — the projection that reached
-    the reader (column pruning proof). Balance-aware so nested struct/map
-    and decimal(p,s) types neither split at inner commas nor truncate at
-    the first '>'."""
-    text = explain_formatted(df)
-    schemas = []
-    for m in re.finditer(r"ReadSchema: struct<", text):
-        body = _balanced_span(text, m.end() - 1, "<", ">").strip()
-        cols = [c.split(":")[0].strip() for c in _split_top_level(body)]
-        schemas.append(cols)
-    return schemas
+    """Column lists of each scan's read schema — the projection that
+    reached the reader (column pruning proof)."""
+    return [
+        list(
+            (s.requiredSchema() if _name(s) == "FileSourceScanExec" else s.scan().readSchema())
+            .fieldNames()
+        )
+        for s in _scans(df)
+    ]
 
 
 def uses_whole_stage_codegen(df: DataFrame, execute: bool = True) -> bool:
-    """True if the physical plan contains WholeStageCodegen stages (the
-    '*(n)' markers). Under AQE the final plan only materializes on execution,
-    so by default the plan is run first (intended for tests / plan iteration
-    on small data, not production hot paths)."""
+    """True if the physical plan contains WholeStageCodegen stages. Under
+    AQE the final plan only materializes on execution, so by default the
+    plan is run first (intended for tests / plan iteration on small data,
+    not production hot paths)."""
     if execute:
         # collect(), not count(): count() builds a *different* QueryExecution;
         # only executing this exact plan finalizes its AQE plan in place.
         df.collect()
-    text = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "simple"
-    )
-    return "*(" in text
-
-
-def plan_node_lines(text: str) -> list[str]:
-    """Node names from a formatted-explain TEXT's detail headers
-    ('(7) SortMergeJoin') — the single parser both the tests (via
-    plan_nodes) and tools/plan_report.py consume, so a Spark explain-format
-    change is fixed in exactly one place."""
-    return [
-        m.group(1).strip()
-        for m in re.finditer(
-            r"^\(\d+\) ([^\n]+?)(?:\s*\[codegen id : \d+\])?$", text, re.M
-        )
-    ]
+    return any(_name(n) == "WholeStageCodegenExec" for n in _nodes(df))
 
 
 def plan_nodes(df: DataFrame) -> list[str]:
-    """Physical-plan node names from the formatted explain's detail headers
-    — each node exactly once (the tree rendering would double-count)."""
-    return plan_node_lines(explain_formatted(df))
+    """Physical-plan node names, each node once (``metrics._plan_nodes``),
+    without the wrappers formatted explain does not list as operators."""
+    return [n.nodeName().strip() for n in _nodes(df) if _name(n) not in _WRAPPERS]
 
 
 def scan_summary(df: DataFrame, execute_for_codegen: bool = False) -> dict:

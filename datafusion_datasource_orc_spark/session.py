@@ -101,7 +101,6 @@ LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "
 def get_spark(
     app_name: str = "datafusion-datasource-orc-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -126,8 +125,7 @@ def get_spark(
     )
     if master is None and not external_master:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

@@ -42,11 +42,9 @@ class OrcFileStatistics:
     num_rows: int  # exact, like Precision::Exact(content_length) rows
     total_byte_size: int  # exact file length
     num_stripes: int
-    compression: str
     # with the field metadata Spark's writer tags types with, which a
     # pa.Schema cannot hash
     schema: pa.Schema = field(hash=False)
-    writer_version: str | None = None
 
 
 def _is_orc(full: str) -> bool:
@@ -99,12 +97,7 @@ def read_orc_statistics(path: str) -> OrcFileStatistics:
         num_rows=f.nrows,
         total_byte_size=os.path.getsize(path),
         num_stripes=f.nstripes,
-        compression=str(f.compression),
         schema=f.schema,
-        writer_version=(
-            str(wv) if (wv := getattr(f, "writer_version", None)) is not None
-            else None
-        ),
     )
 
 

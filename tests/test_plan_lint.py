@@ -10,10 +10,13 @@ for below.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from datafusion_datasource_orc_spark.operators import QUERIES
-from datafusion_datasource_orc_spark.plans.pushdown import explain_formatted
+from datafusion_datasource_orc_spark.plans.pushdown import _name, _nodes
 
 # name -> (allowed node, why it is bounded at scale)
 _INVENTORY_BUILD = (
@@ -138,29 +141,53 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
 }
 
 
+def plan_facts(df) -> tuple[set[str], bool]:
+    """What the rules read off ``df``'s physical plan: its node class names,
+    and whether a window sorts its whole input in one partition (a
+    ``WindowExec`` with an order but no partition spec)."""
+    nodes = _nodes(df)
+    classes = {_name(n) for n in nodes}
+    global_window = any(
+        _name(n) == "WindowExec"
+        and n.partitionSpec().isEmpty()
+        and n.orderSpec().nonEmpty()
+        for n in nodes
+    )
+    return classes, global_window
+
+
+def cartesian(facts) -> bool:
+    return "CartesianProductExec" in facts[0]
+
+
+def nested_loop(facts) -> bool:
+    return "BroadcastNestedLoopJoinExec" in facts[0]
+
+
+def row_python(facts) -> bool:
+    return any(c.startswith("BatchEvalPython") for c in facts[0])
+
+
+def global_window(facts) -> bool:
+    return facts[1]
+
+
+def _offenders(plans, rule, allowed) -> list[str]:
+    return [name for name, facts in plans.items() if rule(facts) and name not in allowed]
+
+
 @pytest.fixture(scope="module")
 def plans(spark, sf_dir):
-    out = {}
-    for name, fn in sorted(QUERIES.items()):
-        out[name] = explain_formatted(fn(spark, sf_dir))
-    return out
+    return {name: plan_facts(fn(spark, sf_dir)) for name, fn in sorted(QUERIES.items())}
 
 
 def test_no_cartesian_products(plans):
-    offenders = [
-        n
-        for n, p in plans.items()
-        if "CartesianProduct" in p and n not in ALLOWED_CARTESIAN
-    ]
+    offenders = _offenders(plans, cartesian, ALLOWED_CARTESIAN)
     assert offenders == [], f"CartesianProduct (all-pairs shuffle join) in: {offenders}"
 
 
 def test_nested_loop_joins_are_allowlisted(plans):
-    offenders = [
-        n
-        for n, p in plans.items()
-        if "BroadcastNestedLoopJoin" in p and n not in ALLOWED_NESTED_LOOP
-    ]
+    offenders = _offenders(plans, nested_loop, ALLOWED_NESTED_LOOP)
     assert offenders == [], (
         f"unreviewed BroadcastNestedLoopJoin in: {offenders} — broadcast a keyed "
         "side or add an equi-condition; if the loop side is provably tiny, "
@@ -169,59 +196,15 @@ def test_nested_loop_joins_are_allowlisted(plans):
 
 
 def test_row_at_a_time_python_is_allowlisted(plans):
-    offenders = [
-        n
-        for n, p in plans.items()
-        if "BatchEvalPython" in p and n not in ALLOWED_ROW_PYTHON
-    ]
+    offenders = _offenders(plans, row_python, ALLOWED_ROW_PYTHON)
     assert offenders == [], (
         f"row-at-a-time Python UDF in: {offenders} — use built-in functions or "
         "an Arrow-batched pandas UDF (ArrowEvalPython)"
     )
 
 
-def _has_global_window(plan: str) -> bool:
-    """True if any windowspecdefinition in the plan has sort specs but NO
-    partition expressions — i.e. every argument before the frame spec is a
-    sort spec (`... ASC/DESC NULLS ...`). Partitioned windows lead with
-    plain partition expressions; WindowGroupLimit nodes carry no
-    windowspecdefinition at all."""
-    marker = "windowspecdefinition("
-    i = 0
-    while True:
-        i = plan.find(marker, i)
-        if i < 0:
-            return False
-        # balanced-paren scan of the argument list
-        depth, j = 1, i + len(marker)
-        args, cur = [], []
-        while j < len(plan) and depth:
-            ch = plan[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            if ch == "," and depth == 1:
-                args.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-            j += 1
-        args.append("".join(cur).strip())
-        pre_frame = [a for a in args if not a.startswith("specifiedwindowframe")]
-        if pre_frame and all(" ASC " in a or " DESC " in a for a in pre_frame):
-            return True
-        i = j
-
-
 def test_global_windows_are_allowlisted(plans):
-    offenders = [
-        n
-        for n, p in plans.items()
-        if _has_global_window(p) and n not in ALLOWED_GLOBAL_WINDOW
-    ]
+    offenders = _offenders(plans, global_window, ALLOWED_GLOBAL_WINDOW)
     assert offenders == [], (
         f"partition-less Window (single-task total order) in: {offenders} — "
         "partition the window, or use the two-pass range-partitioned rank "
@@ -232,6 +215,63 @@ def test_global_windows_are_allowlisted(plans):
 
 def test_allowlists_reference_live_queries():
     dead = (
-        set(ALLOWED_NESTED_LOOP) | set(ALLOWED_ROW_PYTHON) | set(ALLOWED_GLOBAL_WINDOW)
+        set(ALLOWED_CARTESIAN)
+        | set(ALLOWED_NESTED_LOOP)
+        | set(ALLOWED_ROW_PYTHON)
+        | set(ALLOWED_GLOBAL_WINDOW)
     ) - set(QUERIES)
     assert dead == set(), f"allowlist entries for unregistered queries: {dead}"
+
+
+def _rule_shapes(spark) -> dict:
+    """rule name -> (a frame the rule must flag, its partitioned twin)."""
+    a = spark.range(8).withColumn("g", F.col("id") % 2)
+    b = spark.range(8).withColumnRenamed("id", "k")
+
+    @F.pandas_udf("long")
+    def arrow_plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    row_plus_one = F.udf(lambda x: x + 1, "long")
+    rank = F.row_number()
+    return {
+        "cartesian": (a.crossJoin(b), a.join(b, a.id == b.k)),
+        "nested_loop": (
+            a.join(F.broadcast(b), a.id < b.k),
+            a.join(F.broadcast(b), a.id == b.k),
+        ),
+        "row_python": (a.select(row_plus_one("id")), a.select(arrow_plus_one("id"))),
+        "global_window": (
+            a.select(rank.over(Window.orderBy("id"))),
+            a.select(rank.over(Window.partitionBy("g").orderBy("id"))),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "rule", [cartesian, nested_loop, row_python, global_window], ids=lambda r: r.__name__
+)
+def test_rule_flags_its_shape_and_not_the_partitioned_twin(spark, rule):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # a cross join plans as a CartesianProduct
+    try:
+        flagged, twin = _rule_shapes(spark)[rule.__name__]
+        assert rule(plan_facts(flagged))
+        assert not rule(plan_facts(twin))
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_row_python_rule_flags_a_python_udtf(spark, sf_dir):
+    # udtf_sentences plans a BatchEvalPythonUDTFExec and no BatchEvalPythonExec
+    facts = plan_facts(QUERIES["udtf_sentences"](spark, sf_dir))
+    assert "BatchEvalPythonExec" not in facts[0]
+    assert row_python(facts)
+
+
+def test_global_window_rule_reads_the_order(spark):
+    # an unordered window over the whole input (`count() over ()`) sorts
+    # nothing; the rule screens only the partition-less total order
+    df = spark.range(8).select(F.count("id").over(Window.partitionBy()))
+    assert not global_window(plan_facts(df))

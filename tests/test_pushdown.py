@@ -14,6 +14,7 @@ from datafusion_datasource_orc_spark.plans import (
     scan_summary,
     uses_whole_stage_codegen,
 )
+from datafusion_datasource_orc_spark.plans.pushdown import plan_nodes
 from datafusion_datasource_orc_spark.sources.tables import load_orc_table
 
 
@@ -101,3 +102,66 @@ def test_pushdown_disabled_by_option(spark, sf_dir, li, ddb):
     finally:
         spark.conf.set("spark.sql.orc.filterPushdown", "true")
     assert li.filter(F.col("l_quantity") > 10).count() == expected
+
+
+def test_python_data_source_scan_reports_its_pushed_filter(spark, sf_dir):
+    # a DSv2 scan keeps PushedFilters in scan().getMetaData(), and its read
+    # schema in scan().readSchema()
+    from datafusion_datasource_orc_spark.operators.scan import orc_file_metadata_pruned
+
+    df = orc_file_metadata_pruned(spark, sf_dir)
+    assert pushed_filters(df) == ["EqualTo(file_name,chunk-2.orc)"]
+    assert read_schema_columns(df) == [
+        ["file_index", "file_name", "num_rows", "num_stripes", "num_columns", "file_bytes"]
+    ]
+
+
+def test_a_scan_without_pushed_filters_reports_none(spark, tmp_path):
+    # a DSv2 text scan's metadata has no PushedFilters entry
+    path = str(tmp_path / "text")
+    spark.range(5).selectExpr("cast(id as string) v").write.text(path)
+    key = "spark.sql.sources.useV1SourceList"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "")
+    try:
+        df = spark.read.text(path).filter(F.col("value") == "1")
+        assert pushed_filters(df) == []
+        assert read_schema_columns(df) == [["value"]]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pushed_filters_of_an_unrun_scalar_subquery(spark, sf_dir):
+    # the scan's metadata entry, not pushedDownFilters(), which evaluates the
+    # subquery and raises on a plan that has not run
+    from datafusion_datasource_orc_spark.operators.relational import scalar_subquery
+
+    assert pushed_filters(scalar_subquery(spark, sf_dir)) == ["IsNotNull(o_totalprice)"]
+
+
+def test_plan_nodes_lists_operators_not_codegen_wrappers(li):
+    # WholeStageCodegen and InputAdapter wrap a codegen stage; formatted
+    # explain numbers neither as an operator
+    df = li.filter(F.col("l_quantity") > 10).select("l_orderkey")
+    assert plan_nodes(df) == ["Project", "Filter", "ColumnarToRow", "Scan orc"]
+
+
+def test_plan_nodes_leave_out_subquery_wrappers(spark, sf_dir, tmp_path):
+    from datafusion_datasource_orc_spark.operators.relational import scalar_subquery
+
+    # the scalar subquery's plan hangs under a SubqueryExec
+    assert plan_nodes(scalar_subquery(spark, sf_dir)) == [
+        "AdaptiveSparkPlan", "Filter", "Scan parquet",
+        "AdaptiveSparkPlan", "HashAggregate", "Exchange", "HashAggregate", "Scan parquet",
+    ]
+    # dynamic partition pruning's subquery hangs under a
+    # SubqueryAdaptiveBroadcastExec
+    path = str(tmp_path / "fact")
+    spark.range(64).withColumn("p", F.col("id") % 4).write.partitionBy("p").parquet(path)
+    dim = spark.range(4).withColumnRenamed("id", "p").withColumn("x", F.col("p") * 10)
+    pruned = spark.read.parquet(path).join(dim.filter(F.col("x") == 10), "p")
+    assert plan_nodes(pruned) == [
+        "AdaptiveSparkPlan", "Project", "BroadcastHashJoin", "Scan parquet",
+        "AdaptiveSparkPlan", "Project", "Filter", "Range",
+        "BroadcastExchange", "Project", "Filter", "Range",
+    ]

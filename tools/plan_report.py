@@ -1,8 +1,10 @@
 """Plan-health report over the bench headline queries.
 
-Dumps a markdown table of physical-plan signals per query — exchanges,
-broadcast vs sort-merge joins, nested loops, whole-stage-codegen spans,
-pushed filters — the things a 100 TB review checks first. Run after plan
+Runs each headline query with ``collect()`` and dumps a markdown table of
+signals from the plan Spark executed, AQE's rewrites included — exchanges,
+broadcast vs sort-merge joins, nested loops, whole-stage-codegen stages,
+scans — the things a 100 TB review checks first. Nodes are counted through
+``metrics._plan_nodes``, so a reused exchange counts once. Run after plan
 changes and commit the output (PLAN_AUDIT.md) so plan regressions show up
 in diffs, not just in wall-clock.
 
@@ -12,24 +14,10 @@ Usage: python tools/plan_report.py [sf_dir] [-o PLAN_AUDIT.md]
 from __future__ import annotations
 
 import os
-import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def node_counts(plan: str) -> dict[str, int]:
-    """Count node-name heads from the plan's detail headers — built on the
-    SAME parser the tests assert with (plans.pushdown.plan_node_lines), so
-    an explain-format change cannot desynchronize PLAN_AUDIT from the test
-    suite. Only the first word is counted ('Scan orc ...' -> 'Scan')."""
-    from datafusion_datasource_orc_spark.plans.pushdown import plan_node_lines
-
-    out: dict[str, int] = {}
-    for line in plan_node_lines(plan):
-        n = line.split()[0]
-        out[n] = out.get(n, 0) + 1
-    return out
 
 
 def main() -> int:
@@ -43,29 +31,31 @@ def main() -> int:
 
     from bench import HEADLINE
     from datafusion_datasource_orc_spark.operators import QUERIES
-    from datafusion_datasource_orc_spark.plans.pushdown import explain_formatted
+    from datafusion_datasource_orc_spark.plans.pushdown import _name, _nodes
     from datafusion_datasource_orc_spark.session import get_spark
 
     spark = get_spark(app_name="plan_report")
     lines = [
         "# PLAN_AUDIT — physical-plan signals per headline query",
         "",
-        f"Generated by tools/plan_report.py at {sf_dir} (pre-AQE plans; AQE",
-        "adds ReusedExchange/coalescing at runtime — see",
-        "tests/test_planning.py::TestCteRuntimeReuse for the runtime check).",
+        f"Generated by tools/plan_report.py at {os.path.basename(sf_dir.rstrip('/'))}.",
+        "Counts come from the executed plans: each query runs once with",
+        "collect(), and its final AQE plan is walked with every node counted",
+        "once (a reused exchange or scan counts once).",
         "",
-        "| query | exchanges | bcast joins | SMJ | nested loop | codegen spans | scans |",
+        "| query | exchanges | bcast joins | SMJ | nested loop | codegen stages | scans |",
         "|---|---|---|---|---|---|---|",
     ]
     for name in HEADLINE:
-        plan = explain_formatted(QUERIES[name](spark, sf_dir))
-        c = node_counts(plan)
-        ex = c.get("Exchange", 0)
-        bj = c.get("BroadcastHashJoin", 0)
-        smj = c.get("SortMergeJoin", 0)
-        bnl = c.get("BroadcastNestedLoopJoin", 0) + c.get("CartesianProduct", 0)
-        wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
-        scans = len(re.findall(r"^\(\d+\) (?:Scan|BatchScan)", plan, flags=re.MULTILINE))
+        df = QUERIES[name](spark, sf_dir)
+        df.collect()
+        c = Counter(_name(n) for n in _nodes(df))
+        ex = c["ShuffleExchangeExec"]
+        bj = c["BroadcastHashJoinExec"]
+        smj = c["SortMergeJoinExec"]
+        bnl = c["BroadcastNestedLoopJoinExec"] + c["CartesianProductExec"]
+        wsc = c["WholeStageCodegenExec"]
+        scans = c["FileSourceScanExec"] + c["BatchScanExec"] + c["RDDScanExec"]
         lines.append(f"| {name} | {ex} | {bj} | {smj} | {bnl} | {wsc} | {scans} |")
         print(lines[-1])
     text = "\n".join(lines) + "\n"
